@@ -96,9 +96,10 @@ def write_partitioned(
 ) -> None:
     """Partitioned-layout write with dynamic partition overwrite.
 
-    ``dynamic=True`` flips ``spark.sql.sources.partitionOverwriteMode``
-    for THIS write only (restored after): overwrite replaces exactly
-    the partitions present in ``df`` — the idempotent backfill
+    ``dynamic=True`` sets the writer's ``partitionOverwriteMode``
+    option for THIS write only (the session conf is never touched, so
+    concurrent writers cannot clobber each other): overwrite replaces
+    exactly the partitions present in ``df`` — the idempotent backfill
     primitive. ``dynamic=False`` is the classic truncate-and-load.
 
     Partition columns become directory keys (``col=value/``), so scans
@@ -108,14 +109,13 @@ def write_partitioned(
     explodes small files (the 100 TB killer is listing 10M dirs, not
     reading them).
     """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    try:
-        spark.conf.set(key, "dynamic" if dynamic else "static")
-        df.write.partitionBy(*partition_cols).format(fmt).mode("overwrite").save(path)
-    finally:
-        spark.conf.set(key, prev)
+    (
+        df.write.partitionBy(*partition_cols)
+        .format(fmt)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .save(path)
+    )
 
 
 def read_partitioned(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:

@@ -19,6 +19,16 @@ pipeline's state sink (streaming/pipeline.py::upsert_star_batch):
 
 Idempotency is unchanged: per-key ``arrival_seq`` travels in state, so
 a replayed batch converges to the same winners (SURVEY.md §2.9 T3).
+
+Thread safety: merges into DISJOINT state dirs may run concurrently
+from several threads of one session (the pipeline merges its seven
+star tables at once). Nothing here touches session-global conf: the
+dynamic overwrite is the per-write ``partitionOverwriteMode`` option,
+so one thread can never restore ``static`` under another's write (a
+static overwrite with ``partitionBy`` deletes every clean bucket).
+State is read with the schema pinned in its metadata — no
+schema-inference job per merge.
+
 Scaling N: buckets play the role of Delta's file-level pruning; pick
 N ~ state_size / target_file_size. A real lakehouse MERGE only
 improves constants (file-level instead of bucket-level pruning).
@@ -81,7 +91,10 @@ def merge_lww_bucketed(
 ) -> None:
     """Upsert ``incoming`` into the bucketed LWW state at ``path``.
 
-    Only the buckets containing incoming keys are read and rewritten.
+    ``incoming`` may hold several rows per key: one LWW pass over
+    existing ∪ incoming picks the same winners as deduplicating the
+    batch first. Only the buckets containing incoming keys are read
+    and rewritten.
     State existence is probed through the Hadoop FileSystem API (a
     driver-local os.path check is always false on HDFS/S3 → would
     silently drop prior state). The bucket count is pinned in
@@ -101,7 +114,7 @@ def merge_lww_bucketed(
                 "Rebuild the state to rebucket."
             )
         dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
-        existing = _state_df(spark, path).filter(F.col(BUCKET_COL).isin(dirty))
+        existing = _state_df(spark, path, meta).filter(F.col(BUCKET_COL).isin(dirty))
         merged = existing.unionByName(inc)
     else:
         merged = inc
@@ -109,12 +122,12 @@ def merge_lww_bucketed(
     # cut lineage to the files being overwritten (read-then-overwrite
     # of the same path is otherwise undefined)
     winners = winners.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        winners.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        winners.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(BUCKET_COL)
+        .parquet(path)
+    )
     _write_meta(
         spark,
         path,
@@ -122,30 +135,27 @@ def merge_lww_bucketed(
             "num_buckets": num_buckets,
             "key": key,
             "seq_col": seq_col,
-            # recorded so an all-empty state (a dim no record has fed
-            # yet: zero partition dirs on disk) still reads back with
-            # its schema instead of UNABLE_TO_INFER_SCHEMA
+            # pins the read schema: no inference job per read, and an
+            # all-empty state (a dim no record has fed yet: zero
+            # partition dirs on disk) still reads back with its schema
             "schema": winners.schema.json(),
         },
     )
 
 
-def _state_df(spark: SparkSession, path: str) -> DataFrame:
-    """State as a DataFrame; empty-with-schema when no data files exist
-    yet (schema comes from the pinned metadata)."""
-    from pyspark.errors import AnalysisException
+def _state_df(spark: SparkSession, path: str, meta: dict | None) -> DataFrame:
+    """State as a DataFrame. With the schema pinned in ``meta`` the read
+    is explicit: no schema-inference job, and a state with no data
+    files yet reads back empty with its schema. State without metadata
+    falls back to an inferred read."""
     from pyspark.sql.types import StructType
 
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        meta = _read_meta(spark, path)
-        if meta is not None and "schema" in meta:
-            schema = StructType.fromJson(json.loads(meta["schema"]))
-            return spark.createDataFrame([], schema)
-        raise
+    if meta is not None and "schema" in meta:
+        schema = StructType.fromJson(json.loads(meta["schema"]))
+        return spark.read.schema(schema).parquet(path)
+    return spark.read.parquet(path)
 
 
 def read_state(spark: SparkSession, path: str) -> DataFrame:
     """Current state without the bucketing column."""
-    return _state_df(spark, path).drop(BUCKET_COL)
+    return _state_df(spark, path, _read_meta(spark, path)).drop(BUCKET_COL)

@@ -10,11 +10,22 @@ upsert` (stream_to_star.py:315-320). The Spark-native shape:
 ``upsert_star_batch`` is a SET-BASED idempotent MERGE per micro-batch
 instead of 7 SQL round-trips per record:
 
-1. intra-batch last-write-wins by ``arrival_seq`` (the Kafka offset /
-   producer sequence travels with the message),
-2. union with existing state, LWW again (cross-batch upsert — exactly
-   `ON CONFLICT DO UPDATE` with arrival order as the version),
-3. rewrite dims + fact with deterministic surrogate keys.
+1. project each star table's (key, attrs, ``arrival_seq``) rows out of
+   the cleansed batch (the Kafka offset / producer sequence travels
+   with the message),
+2. union with existing state and keep the last write per key by
+   ``arrival_seq`` (exactly `ON CONFLICT DO UPDATE` with arrival order
+   as the version),
+3. publish dims + fact with deterministic surrogate keys
+   (``finalize_star``).
+
+The seven per-table merges (6 dims + fact) of step 2 run CONCURRENTLY,
+one thread each: they touch disjoint state dirs and only read the
+cached batch, so while one merge waits on a driver round trip another
+runs tasks. foreachBatch is an ordinary batch context (Structured
+Streaming, SIGMOD 2018), and each worker inherits the trigger's local
+properties (query id, batch id, job group), so its jobs still belong
+to the trigger and stopping the query still cancels them.
 
 State lives in a bucketed parquet directory per table
 (``streaming/merge.py``): partitioned on ``pmod(hash(key), N)``, a
@@ -37,12 +48,13 @@ reference's ``"error: …"`` status stream (stream_to_star.py:284-298)
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.util import inheritable_thread_target
 
-from bigdataflink_spark.operators.dedup import lww_dedup
 from bigdataflink_spark.plans.star import DIM_SPECS, build_fact, cleanse_sales
 
 # The 50 reference CSV columns (FIXTURES.md §1) + arrival_seq. All
@@ -166,26 +178,39 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
     Keeps per-key ``arrival_seq`` in the state tables so replayed or
     out-of-order batches can never regress a newer value (idempotent
     upsert — the T3 exactly-once argument).
+
+    The seven table merges run concurrently, one worker thread per
+    state table. The call returns only after every worker finished; if
+    any merge failed, the first failure (in table order) is re-raised,
+    so the trigger fails and its replay re-merges all seven tables.
     """
+    from bigdataflink_spark.streaming import merge
+
     spark = batch.sparkSession
     cleansed = cleanse_sales(batch).cache()
+    tables = [
+        (f"state_{name}", key, ["arrival_seq", key, *attrs])
+        for name, (key, attrs) in DIM_PROJECTION.items()
+    ]
+    tables.append(("state_fact", "source_sale_id", FACT_COLS))
+
+    def merge_table(table: str, key: str, cols: list[str]) -> None:
+        inc = cleansed.select(*cols).filter(F.col(key).isNotNull())
+        path = os.path.join(state_dir, table)
+        merge.merge_lww_bucketed(spark, inc, path, key, num_buckets=STATE_BUCKETS)
+
     try:
-        from bigdataflink_spark.streaming.merge import merge_lww_bucketed
-
-        # --- dims: merge cleansed batch columns into LWW state ------
-        for name, (key, attrs) in DIM_PROJECTION.items():
-            inc = cleansed.select("arrival_seq", key, *attrs).filter(F.col(key).isNotNull())
-            inc = lww_dedup(inc, [key], "arrival_seq")
-            path = os.path.join(state_dir, f"state_{name}")
-            merge_lww_bucketed(spark, inc, path, key, num_buckets=STATE_BUCKETS)
-
-        # --- fact rows ----------------------------------------------
-        inc = cleansed.select(*FACT_COLS).filter(F.col("source_sale_id").isNotNull())
-        inc = lww_dedup(inc, ["source_sale_id"], "arrival_seq")
-        path = os.path.join(state_dir, "state_fact")
-        merge_lww_bucketed(
-            spark, inc, path, "source_sale_id", num_buckets=STATE_BUCKETS
-        )
+        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+            # wrap per worker: each call clones this thread's local
+            # properties, so no two workers share (and race on) one
+            # mutable Properties object
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(merge_table), *t)
+                for t in tables
+            ]
+        # leaving the pool waited for every worker
+        for f in futures:
+            f.result()
     finally:
         cleansed.unpersist()
 

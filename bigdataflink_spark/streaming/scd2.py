@@ -91,7 +91,7 @@ def merge_scd2_batch(
                 f"{num_buckets} would corrupt it."
             )
         dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
-        existing = _state_df(spark, path).filter(F.col(BUCKET_COL).isin(dirty))
+        existing = _state_df(spark, path, meta).filter(F.col(BUCKET_COL).isin(dirty))
         # drop-late gate vs the OBSERVED frontier (every state row of a
         # key carries the same (_obs_us, _obs_seq)); legacy state
         # without the columns falls back to the change-log max
@@ -164,12 +164,12 @@ def merge_scd2_batch(
         F.col("_bmax._f_seq").alias("_obs_seq"),
     )
     changes = changes.localCheckpoint(eager=True)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        changes.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        changes.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(BUCKET_COL)
+        .parquet(path)
+    )
     _write_meta(
         spark,
         path,
@@ -189,7 +189,7 @@ def read_scd2_history(
     """The queryable history: change-log state + one lead() window →
     (key, attr, valid_from_us, valid_to_us, version), the exact
     output schema of operators/scd.scd2_history."""
-    state = _state_df(spark, path)
+    state = _state_df(spark, path, _read_meta(spark, path))
     w = Window.partitionBy(key_col).orderBy(F.asc("_ts_us"), F.asc("_seq"))
     return state.select(
         F.col(key_col),

@@ -343,14 +343,18 @@ def test_late_data_dropped_past_watermark(spark, workdir):
     assert not any(sum_v >= 99 for _, sum_v in rows.values()), rows
 
 
-def test_bucketed_merge_matches_full_rewrite(spark, workdir):
+def test_bucketed_merge_matches_full_rewrite(spark, workdir, monkeypatch):
     """MERGE-on-key via dynamic partition overwrite: applying
     overlapping batches through the bucketed store must equal a
     one-shot LWW over the concatenation, AND leave clean buckets'
     files byte-identical (O(dirty) write amplification, not
-    O(state))."""
+    O(state)). The dynamic mode must come from the write itself: the
+    session conf stays ``static`` and is never written (concurrent
+    merges share the session)."""
     import hashlib
     import os
+
+    from pyspark.sql.conf import RuntimeConfig
 
     from bigdataflink_spark.operators.dedup import lww_dedup
     from bigdataflink_spark.streaming.merge import (
@@ -379,12 +383,24 @@ def test_bucketed_merge_matches_full_rewrite(spark, workdir):
                     ).hexdigest()
         return out
 
-    for i, rows in enumerate(batches):
-        if i == 2:
-            before = snapshot()
-        merge_lww_bucketed(
-            spark, spark.createDataFrame(rows, schema), path, "k", num_buckets=8
-        )
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    prev_mode = spark.conf.get(mode_key)
+    spark.conf.set(mode_key, "static")
+
+    def no_session_conf_writes(self, key, value):
+        raise AssertionError(f"merge wrote session conf {key}={value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", no_session_conf_writes)
+    try:
+        for i, rows in enumerate(batches):
+            if i == 2:
+                before = snapshot()
+            merge_lww_bucketed(
+                spark, spark.createDataFrame(rows, schema), path, "k", num_buckets=8
+            )
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(mode_key, prev_mode)
 
     got = sorted(tuple(r) for r in read_state(spark, path).collect())
     everything = spark.createDataFrame([r for rows in batches for r in rows], schema)
