@@ -1,9 +1,8 @@
-"""Deduplication operators (extension suite — exact, LWW, MinHash+LSH,
+"""Deduplication operators (extension suite — LWW, MinHash+LSH,
 SimHash, n-gram Jaccard) over the ``documents`` table.
 
 Scale design notes (the point of each variant):
 
-* exact        — one shuffle on the hash; the cheapest pass, run first.
 * LWW          — keyed upsert semantics (the reference's ON CONFLICT
                  DO UPDATE, stream_to_star.py:116-121) as a ranking
                  window; shuffles once on the key.
@@ -31,12 +30,6 @@ from pyspark.sql.window import Window
 
 from bigdataflink_spark.operators.hashing import md5_int
 from bigdataflink_spark.operators.text import tokens
-
-
-def exact_dedup(df: DataFrame, cols: list[str], order_col: str) -> DataFrame:
-    """Keep one row per distinct value-tuple: lowest order_col wins."""
-    w = Window.partitionBy(*cols).orderBy(order_col)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def lww_dedup(df: DataFrame, key_cols: list[str], order_cols: str | list[str]) -> DataFrame:

@@ -26,9 +26,3 @@ def md5_int(c: Column, bits: int = 60) -> Column:
     """Deterministic non-negative int hash of a string column."""
     hex_digits = bits // 4
     return F.conv(F.substring(F.md5(c), 1, hex_digits), 16, 10).cast("long")
-
-
-def md5_int_sql(expr: str, bits: int = 60) -> str:
-    """The DuckDB-side rendering of the same hash."""
-    hex_digits = bits // 4
-    return f"CAST('0x' || substr(md5({expr}), 1, {hex_digits}) AS BIGINT)"

@@ -4423,19 +4423,6 @@ def _flac_zigzag(res: "np.ndarray") -> "np.ndarray":
     return (res << 1) ^ (res >> 63)
 
 
-def _flac_best_rice_k(u: "np.ndarray") -> tuple[int, int]:
-    """Exact-cost search over 4-bit Rice parameters: cost(k) =
-    sum(u >> k) + n*(k+1). Kept as the scalar reference for the
-    vectorized planner below (property-tested equal)."""
-    n = u.size
-    best_k, best_c = 0, int(u.sum()) + n
-    for k in range(1, 15):
-        c = int((u >> k).sum()) + n * (k + 1)
-        if c < best_c:
-            best_k, best_c = k, c
-    return best_k, best_c
-
-
 def _flac_partition_plan(
     res: "np.ndarray", bs: int, order: int
 ) -> tuple[int, list[tuple[int, int]], int]:
@@ -4450,7 +4437,7 @@ def _flac_partition_plan(
     boundaries nest), so the whole 5-order x 15-k search costs a
     handful of full-array ops instead of ~375 tiny .sum() calls
     (the pre-vectorization profile's 90% bucket). Tie-breaking is
-    bit-identical to the scalar form: ascending p with strict <,
+    that of a scalar per-k search: ascending p with strict <,
     argmin's first-smallest k."""
     u = _flac_zigzag(res.astype(np.int64))
     pmax = 0

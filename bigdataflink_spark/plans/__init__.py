@@ -1,3 +1,3 @@
-from bigdataflink_spark.plans.star import build_dims, build_fact, build_star, cleanse_sales
+from bigdataflink_spark.plans.star import build_star, cleanse_sales
 
-__all__ = ["build_dims", "build_fact", "build_star", "cleanse_sales"]
+__all__ = ["build_star", "cleanse_sales"]

@@ -6,8 +6,20 @@ plan. Where the reference does 7 per-row SQL round-trips per message
 (/root/reference/flink/stream_to_star.py:287-295), we do one
 declarative pass:
 
-    raw strings → cleanse projection → per-dim last-write-wins dedup
-    → deterministic surrogate keys → fact left-joins dims
+    raw strings → cleanse projection (cleanse_sales)
+    → per-table state rows (project_star)
+    → last-write-wins winner per natural key
+    → renames, deterministic surrogate keys, fact left-joins dims
+      (publish_star)
+
+This module is the only place that knows the star layout: ``STAR``
+holds each table's natural key, surrogate key and (state column,
+published column) pairs, and every other piece is derived from it.
+The batch build and the streaming pipeline differ only in where the
+LWW winners come from — ``build_star`` dedups the projected rows in
+one pass, ``streaming/pipeline.py`` merges each micro-batch's
+``project_star`` rows into state and publishes that state — so a
+stream publishes the batch star of its input prefix by construction.
 
 Semantics ported:
 
@@ -36,31 +48,67 @@ instead of OOMing the executors on a forced build side.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdataflink_spark.functions import cleanse as C
+from bigdataflink_spark.operators.dedup import lww_dedup
 
-# dim name -> (natural key col, [attribute cols])
-DIM_SPECS: dict[str, tuple[str, list[str]]] = {
-    "dim_customer": ("source_customer_id", ["customer_name", "country", "age", "email"]),
-    "dim_seller": ("source_seller_id", ["seller_name", "country", "email"]),
-    "dim_product": ("source_product_id", ["product_name", "category", "price", "rating", "reviews"]),
-    "dim_store": ("store_name", ["city", "country", "email"]),
-    "dim_supplier": ("supplier_name", ["country", "email"]),
-    "dim_date": ("sale_date", ["year", "month", "day"]),
-}
 
-# fact FK column name per dim
-DIM_KEYS = {
-    "dim_customer": "customer_key",
-    "dim_seller": "seller_key",
-    "dim_product": "product_key",
-    "dim_store": "store_key",
-    "dim_supplier": "supplier_key",
-    "dim_date": "date_key",
+class StarTable(NamedTuple):
+    key: str  # natural key: the LWW key, and the fact's join column
+    surrogate: str  # published dense surrogate key
+    attrs: tuple[tuple[str, str], ...]  # (state column, published column)
+
+
+# The star layout, written down once. A table's state rows — the
+# streaming projection, the merged state and the DBAPI tables — are
+# (arrival_seq, key, *state columns); see ``state_columns``. That
+# order is the schema pinned in existing streaming state: never reorder.
+STAR: dict[str, StarTable] = {
+    "dim_customer": StarTable("source_customer_id", "customer_key", (
+        ("customer_name", "customer_name"), ("customer_country", "country"),
+        ("customer_age", "age"), ("customer_email", "email"),
+    )),
+    "dim_seller": StarTable("source_seller_id", "seller_key", (
+        ("seller_name", "seller_name"), ("seller_country", "country"),
+        ("seller_email", "email"),
+    )),
+    "dim_product": StarTable("source_product_id", "product_key", (
+        ("product_name", "product_name"), ("product_category", "category"),
+        ("product_price", "price"), ("product_rating", "rating"),
+        ("product_reviews", "reviews"),
+    )),
+    "dim_store": StarTable("store_name", "store_key", (
+        ("store_city", "city"), ("store_country", "country"), ("store_email", "email"),
+    )),
+    "dim_supplier": StarTable("supplier_name", "supplier_key", (
+        ("supplier_country", "country"), ("supplier_email", "email"),
+    )),
+    # year/month/day derive from the key at publish (DATE_PARTS)
+    "dim_date": StarTable("sale_date", "date_key", ()),
+    # the fact also carries every dim's natural key, which publishing
+    # resolves to that dim's surrogate key
+    "fact_sales": StarTable("source_sale_id", "fact_key", (
+        ("sale_quantity", "sale_quantity"), ("sale_total_price", "sale_total_price"),
+    )),
 }
+FACT = "fact_sales"
+DIMS = [t for t in STAR if t != FACT]
+DATE_PARTS = {"year": F.year, "month": F.month, "day": F.dayofmonth}
+
+
+def state_columns(table: str) -> list[str]:
+    """``table``'s state row: arrival_seq, natural key, attribute state
+    columns — for the fact, then each dim's natural key."""
+    t = STAR[table]
+    cols = ["arrival_seq", t.key, *(s for s, _ in t.attrs)]
+    if table == FACT:
+        cols += [STAR[d].key for d in DIMS]
+    return cols
 
 
 def cleanse_sales(raw: DataFrame) -> DataFrame:
@@ -124,81 +172,26 @@ def cleanse_sales(raw: DataFrame) -> DataFrame:
     )
 
 
-def _lww(df: DataFrame, key: str) -> DataFrame:
-    """Last-write-wins dedup: latest arrival_seq per natural key."""
-    w = Window.partitionBy(key).orderBy(F.desc("arrival_seq"))
-    return (
-        df.filter(F.col(key).isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "arrival_seq")
-    )
-
-
-def _surrogate(df: DataFrame, key_name: str, natural_key: str) -> DataFrame:
-    """Dense deterministic surrogate key: row_number over key order."""
-    w = Window.orderBy(natural_key)
-    return df.withColumn(key_name, F.row_number().over(w).cast("long"))
-
-
-def build_dims(cleansed: DataFrame) -> dict[str, DataFrame]:
-    """Six dims with LWW dedup + deterministic surrogate keys."""
-    c = cleansed
-    projections = {
-        "dim_customer": c.select(
-            "arrival_seq",
-            "source_customer_id",
-            "customer_name",
-            F.col("customer_country").alias("country"),
-            F.col("customer_age").alias("age"),
-            F.col("customer_email").alias("email"),
-        ),
-        "dim_seller": c.select(
-            "arrival_seq",
-            "source_seller_id",
-            "seller_name",
-            F.col("seller_country").alias("country"),
-            F.col("seller_email").alias("email"),
-        ),
-        "dim_product": c.select(
-            "arrival_seq",
-            "source_product_id",
-            "product_name",
-            F.col("product_category").alias("category"),
-            F.col("product_price").alias("price"),
-            F.col("product_rating").alias("rating"),
-            F.col("product_reviews").alias("reviews"),
-        ),
-        "dim_store": c.select(
-            "arrival_seq",
-            "store_name",
-            F.col("store_city").alias("city"),
-            F.col("store_country").alias("country"),
-            F.col("store_email").alias("email"),
-        ),
-        "dim_supplier": c.select(
-            "arrival_seq",
-            "supplier_name",
-            F.col("supplier_country").alias("country"),
-            F.col("supplier_email").alias("email"),
-        ),
-        "dim_date": c.select(
-            "arrival_seq",
-            "sale_date",
-            F.year("sale_date").alias("year"),
-            F.month("sale_date").alias("month"),
-            F.dayofmonth("sale_date").alias("day"),
-        ),
+def project_star(cleansed: DataFrame) -> dict[str, DataFrame]:
+    """Each star table's state rows out of a cleansed batch, null keys
+    dropped (the reference skips a dim whose natural key is NULL:
+    stream_to_star.py:101-102 etc.). Several rows per key may remain;
+    the caller picks the last write."""
+    return {
+        t: cleansed.select(*state_columns(t)).filter(F.col(STAR[t].key).isNotNull())
+        for t in STAR
     }
-    dims = {}
-    for name, proj in projections.items():
-        natural_key, _ = DIM_SPECS[name]
-        dims[name] = _surrogate(_lww(proj, natural_key), DIM_KEYS[name], natural_key)
-    return dims
 
 
-def build_fact(cleansed: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
-    """fact_sales: LWW on source_sale_id, then join in the dim keys.
+def _numbered(df: DataFrame, t: StarTable) -> DataFrame:
+    """Dense deterministic surrogate key: row_number over key order."""
+    return df.withColumn(t.surrogate, F.row_number().over(Window.orderBy(t.key)).cast("long"))
+
+
+def publish_star(latest: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """State rows holding one LWW winner per key → the published star:
+    attributes renamed, dim_date's parts derived, surrogate keys
+    numbered, fact FKs resolved.
 
     The dims derive from the same sales feed, so they scale with the
     data — no forced broadcast: AQE broadcasts them while they fit
@@ -210,56 +203,31 @@ def build_fact(cleansed: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     (the reference leaves the fact column NULL too when the dim id is
     NULL: stream_to_star.py:287-294 pass None keys through).
     """
-    fact = _lww(
-        cleansed.select(
-            "arrival_seq",
-            "source_sale_id",
-            "sale_quantity",
-            "sale_total_price",
-            "source_customer_id",
-            "source_seller_id",
-            "source_product_id",
-            "store_name",
-            "supplier_name",
-            "sale_date",
-        ),
-        "source_sale_id",
-    )
-    join_on = {
-        "dim_customer": "source_customer_id",
-        "dim_seller": "source_seller_id",
-        "dim_product": "source_product_id",
-        "dim_store": "store_name",
-        "dim_supplier": "supplier_name",
-        "dim_date": "sale_date",
-    }
-    for dim_name, nk in join_on.items():
-        key_col = DIM_KEYS[dim_name]
-        dim_side = dims[dim_name].select(nk, key_col)
-        fact = fact.join(dim_side, on=nk, how="left")
+    star: dict[str, DataFrame] = {}
+    for name in DIMS:
+        t = STAR[name]
+        cols = [F.col(t.key), *(F.col(s).alias(p) for s, p in t.attrs)]
+        if name == "dim_date":
+            cols += [part(t.key).alias(p) for p, part in DATE_PARTS.items()]
+        star[name] = _numbered(latest[name].select(*cols), t)
 
-    w = Window.orderBy("source_sale_id")
-    return fact.withColumn("fact_key", F.row_number().over(w).cast("long")).select(
-        "fact_key",
-        "source_sale_id",
-        "customer_key",
-        "seller_key",
-        "product_key",
-        "store_key",
-        "supplier_key",
-        "date_key",
-        "sale_quantity",
-        "sale_total_price",
+    fact = latest[FACT]
+    for name in DIMS:
+        t = STAR[name]
+        fact = fact.join(star[name].select(t.key, t.surrogate), on=t.key, how="left")
+    f = STAR[FACT]
+    star[FACT] = _numbered(fact, f).select(
+        f.surrogate, f.key, *(STAR[d].surrogate for d in DIMS), *(p for _, p in f.attrs)
     )
+    return star
 
 
 def build_star(raw: DataFrame) -> dict[str, DataFrame]:
     """Full pipeline: raw strings → {6 dims + fact_sales}."""
-    cleansed = cleanse_sales(raw)
-    dims = build_dims(cleansed)
-    tables: dict[str, DataFrame] = dict(dims)
-    tables["fact_sales"] = build_fact(cleansed, dims)
-    return tables
+    projected = project_star(cleanse_sales(raw))
+    return publish_star(
+        {t: lww_dedup(rows, [STAR[t].key], "arrival_seq") for t, rows in projected.items()}
+    )
 
 
 def persist_star(star: dict[str, DataFrame], out_dir: str) -> None:
@@ -290,5 +258,4 @@ def persist_star(star: dict[str, DataFrame], out_dir: str) -> None:
 
 def load_star(spark, out_dir: str) -> dict[str, DataFrame]:
     """Read a persisted warehouse back (partition columns included)."""
-    names = list(DIM_SPECS) + ["fact_sales"]
-    return {n: spark.read.parquet(f"{out_dir}/{n}") for n in names}
+    return {n: spark.read.parquet(f"{out_dir}/{n}") for n in STAR}

@@ -1,4 +1,4 @@
-"""Kafka source/sink builders (SURVEY.md §2.1 S2/S3).
+"""Kafka wire projection and sink builder (SURVEY.md §2.1 S2/S3).
 
 No broker (or kafka connector jar) ships in this container, so the
 ``format("kafka")`` reader itself can't run here — but everything
@@ -6,17 +6,16 @@ AFTER ``.load()`` can: ``project_kafka_records`` is the production
 offset→``arrival_seq`` projection, exercised by
 ``tests/test_kafka_contract.py`` over a recorded wire-format stream
 (same schema Kafka's source emits), including redelivery replay.
-Payloads and options mirror the reference:
+Payloads mirror the reference:
 
-* source: topic ``sales``, earliest offsets, value-only string
+* source records: value-only string in offset order
   (stream_to_star.py:305-315)
 * sink: UTF-8 JSON of the whole row (csv_to_kafka.py:17-22)
-* producer throttle (SLEEP_MS) ≈ maxOffsetsPerTrigger on the reader.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # The schema the Kafka source emits after .load() — documented at
@@ -41,25 +40,6 @@ def project_kafka_records(df: DataFrame) -> DataFrame:
         F.col("value").cast("string").alias("value"),
         F.col("offset").cast("long").alias("arrival_seq"),
     )
-
-
-def kafka_json_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str = "sales",
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming DataFrame of (value string, offset long) from Kafka."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    return project_kafka_records(reader.load())
 
 
 def kafka_json_sink(df: DataFrame, bootstrap_servers: str, topic: str = "sales"):

@@ -43,7 +43,8 @@ from pyspark.sql import DataFrame
 # Reference star DDL (sqlite dialect) for upsert_star_batch_dbapi —
 # the sink's table contract in executable form (the reference
 # bootstraps the same layout via 00_ddl_dw.sql; natural key PRIMARY
-# KEY + attrs + arrival_seq, matching DIM_PROJECTION/FACT_COLS).
+# KEY + attrs + arrival_seq: the state columns of plans/star.py's
+# layout, ``state_columns``).
 STAR_DDL_SQLITE = """
 CREATE TABLE dim_customer (source_customer_id INTEGER PRIMARY KEY,
   customer_name TEXT, customer_country TEXT, customer_age INTEGER,
@@ -169,34 +170,23 @@ def upsert_star_batch_dbapi(
     natural keys (stream_to_star.py:287-295), but set-based: one
     intra-batch LWW dedup, then batched seq-guarded upserts.
 
-    Table layout matches DIM_PROJECTION/FACT_COLS: ``dim_*`` tables
-    carry (natural key PRIMARY KEY, attrs…, arrival_seq);
-    ``fact_sales_raw`` carries FACT_COLS with source_sale_id as the
-    PRIMARY KEY. DDL is the caller's job (the reference bootstraps
-    its schema the same way: 00_ddl_dw.sql).
+    Table layout is ``plans/star.state_columns``: each ``dim_*`` table
+    carries (natural key PRIMARY KEY, attrs…, arrival_seq);
+    ``fact_sales_raw`` carries the fact's state columns with
+    source_sale_id as the PRIMARY KEY. DDL is the caller's job (the
+    reference bootstraps its schema the same way: 00_ddl_dw.sql).
     """
-    from pyspark.sql import functions as F
-
     from bigdataflink_spark.operators.dedup import lww_dedup
-    from bigdataflink_spark.plans.star import cleanse_sales
-    from bigdataflink_spark.streaming.pipeline import DIM_PROJECTION, FACT_COLS
+    from bigdataflink_spark.plans.star import FACT, STAR, cleanse_sales, project_star
 
     cleansed = cleanse_sales(batch).cache()
     try:
-        for name, (key, attrs) in DIM_PROJECTION.items():
-            inc = cleansed.select("arrival_seq", key, *attrs).filter(
-                F.col(key).isNotNull()
-            )
-            inc = lww_dedup(inc, [key], "arrival_seq")
+        for name, rows in project_star(cleansed).items():
+            key = STAR[name].key
             dbapi_upsert(
-                inc, connection_factory, name, [key],
+                lww_dedup(rows, [key], "arrival_seq"), connection_factory,
+                "fact_sales_raw" if name == FACT else name, [key],
                 placeholder=placeholder, num_partitions=num_partitions,
             )
-        inc = cleansed.select(*FACT_COLS).filter(F.col("source_sale_id").isNotNull())
-        inc = lww_dedup(inc, ["source_sale_id"], "arrival_seq")
-        dbapi_upsert(
-            inc, connection_factory, "fact_sales_raw", ["source_sale_id"],
-            placeholder=placeholder, num_partitions=num_partitions,
-        )
     finally:
         cleansed.unpersist()

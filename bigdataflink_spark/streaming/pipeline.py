@@ -10,14 +10,20 @@ upsert` (stream_to_star.py:315-320). The Spark-native shape:
 ``upsert_star_batch`` is a SET-BASED idempotent MERGE per micro-batch
 instead of 7 SQL round-trips per record:
 
-1. project each star table's (key, attrs, ``arrival_seq``) rows out of
-   the cleansed batch (the Kafka offset / producer sequence travels
-   with the message),
+1. project each star table's (``arrival_seq``, key, attrs) rows out of
+   the cleansed batch (``plans/star.project_star``; the Kafka offset /
+   producer sequence travels with the message),
 2. union with existing state and keep the last write per key by
    ``arrival_seq`` (exactly `ON CONFLICT DO UPDATE` with arrival order
    as the version),
 3. publish dims + fact with deterministic surrogate keys
    (``finalize_star``).
+
+Steps 1 and 3 are the batch build's own functions (``project_star``,
+``publish_star``); only the LWW step differs — the batch build dedups
+all rows at once, the stream merges them into state one trigger at a
+time. The star layout lives in ``plans/star.py`` alone, so the stream
+publishes the batch star of its input prefix by construction.
 
 The seven per-table merges (6 dims + fact) of step 2 run CONCURRENTLY,
 one thread each: they touch disjoint state dirs and only read the
@@ -55,7 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
-from bigdataflink_spark.plans.star import DIM_SPECS, build_fact, cleanse_sales
+from bigdataflink_spark.plans.star import FACT, STAR, cleanse_sales, project_star, publish_star
 
 # The 50 reference CSV columns (FIXTURES.md §1) + arrival_seq. All
 # strings on the wire — typing is the cleanse layer's job.
@@ -144,32 +150,8 @@ def read_sales_stream(spark: SparkSession, jsonl_dir: str, max_files_per_trigger
 # raise toward state_size / target_file_size (see streaming/merge.py).
 STATE_BUCKETS = 16
 
-# Per-dim (natural key, attribute columns) over the cleansed batch —
-# shared by every terminal sink (bucketed-parquet MERGE, DBAPI upsert).
-DIM_PROJECTION = {
-    "dim_customer": (
-        "source_customer_id",
-        ["customer_name", "customer_country", "customer_age", "customer_email"],
-    ),
-    "dim_seller": (
-        "source_seller_id",
-        ["seller_name", "seller_country", "seller_email"],
-    ),
-    "dim_product": (
-        "source_product_id",
-        ["product_name", "product_category", "product_price",
-         "product_rating", "product_reviews"],
-    ),
-    "dim_store": ("store_name", ["store_city", "store_country", "store_email"]),
-    "dim_supplier": ("supplier_name", ["supplier_country", "supplier_email"]),
-    "dim_date": ("sale_date", []),
-}
-
-FACT_COLS = [
-    "arrival_seq", "source_sale_id", "sale_quantity", "sale_total_price",
-    "source_customer_id", "source_seller_id", "source_product_id",
-    "store_name", "supplier_name", "sale_date",
-]
+def _state_path(state_dir: str, table: str) -> str:
+    return os.path.join(state_dir, "state_fact" if table == FACT else f"state_{table}")
 
 
 def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
@@ -188,16 +170,13 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
 
     spark = batch.sparkSession
     cleansed = cleanse_sales(batch).cache()
-    tables = [
-        (f"state_{name}", key, ["arrival_seq", key, *attrs])
-        for name, (key, attrs) in DIM_PROJECTION.items()
-    ]
-    tables.append(("state_fact", "source_sale_id", FACT_COLS))
+    tables = project_star(cleansed)
 
-    def merge_table(table: str, key: str, cols: list[str]) -> None:
-        inc = cleansed.select(*cols).filter(F.col(key).isNotNull())
-        path = os.path.join(state_dir, table)
-        merge.merge_lww_bucketed(spark, inc, path, key, num_buckets=STATE_BUCKETS)
+    def merge_table(table: str) -> None:
+        merge.merge_lww_bucketed(
+            spark, tables[table], _state_path(state_dir, table), STAR[table].key,
+            num_buckets=STATE_BUCKETS,
+        )
 
     try:
         with ThreadPoolExecutor(max_workers=len(tables)) as pool:
@@ -205,7 +184,7 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
             # properties, so no two workers share (and race on) one
             # mutable Properties object
             futures = [
-                pool.submit(inheritable_thread_target(spark)(merge_table), *t)
+                pool.submit(inheritable_thread_target(spark)(merge_table), t)
                 for t in tables
             ]
         # leaving the pool waited for every worker
@@ -216,47 +195,12 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
 
 
 def finalize_star(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
-    """Publish the star schema from streaming state: assign surrogate
-    keys and resolve fact FKs (broadcast joins) — same builders as the
-    batch path, so stream ≡ batch by construction."""
-    from pyspark.sql.window import Window
-    from bigdataflink_spark.plans.star import DIM_KEYS
-
-    rename = {
-        "dim_customer": {
-            "customer_country": "country", "customer_age": "age", "customer_email": "email",
-        },
-        "dim_seller": {"seller_country": "country", "seller_email": "email"},
-        "dim_product": {
-            "product_category": "category", "product_price": "price",
-            "product_rating": "rating", "product_reviews": "reviews",
-        },
-        "dim_store": {"store_city": "city", "store_country": "country", "store_email": "email"},
-        "dim_supplier": {"supplier_country": "country", "supplier_email": "email"},
-        "dim_date": {},
-    }
+    """Publish the star schema from streaming state. Merged state holds
+    one LWW winner per key, so it goes straight to the batch build's
+    ``publish_star``."""
     from bigdataflink_spark.streaming.merge import read_state
 
-    dims: dict[str, DataFrame] = {}
-    for name, (key, _) in DIM_SPECS.items():
-        df = read_state(spark, os.path.join(state_dir, f"state_{name}")).drop("arrival_seq")
-        for old, new in rename[name].items():
-            df = df.withColumnRenamed(old, new)
-        if name == "dim_date":
-            df = df.select(
-                "sale_date",
-                F.year("sale_date").alias("year"),
-                F.month("sale_date").alias("month"),
-                F.dayofmonth("sale_date").alias("day"),
-            )
-        natural_key = DIM_SPECS[name][0]
-        w = Window.orderBy(natural_key)
-        dims[name] = df.withColumn(DIM_KEYS[name], F.row_number().over(w).cast("long"))
-
-    fact_state = read_state(spark, os.path.join(state_dir, "state_fact"))
-    tables = dict(dims)
-    tables["fact_sales"] = build_fact(fact_state, dims)
-    return tables
+    return publish_star({t: read_state(spark, _state_path(state_dir, t)) for t in STAR})
 
 
 def run_stream_to_star(
@@ -266,7 +210,6 @@ def run_stream_to_star(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     dead_letter_dir: str | None = None,
-    echo_status: bool = False,
 ) -> dict[str, DataFrame]:
     """End-to-end: stream the landing dir to completion (availableNow),
     then publish the star schema. Returns the final tables.
@@ -275,9 +218,7 @@ def run_stream_to_star(
     reference's per-record status stream (stream_to_star.py:296-320):
     malformed payloads land in ``dead_letter_dir`` as parquet
     (status + raw payload) under their own checkpoint, while the main
-    pipeline keeps running. ``echo_status=True`` additionally prints
-    the error records to the console (the reference's
-    ``result.print()``). Defaults ``dead_letter_dir`` to
+    pipeline keeps running. Defaults ``dead_letter_dir`` to
     ``<state_dir>/_dead_letter``.
     """
     records, errors = read_sales_stream(spark, jsonl_dir, max_files_per_trigger)
@@ -296,14 +237,6 @@ def run_stream_to_star(
         .trigger(availableNow=True)
         .start(),
     ]
-    if echo_status:
-        queries.append(
-            errors.writeStream.format("console")
-            .option("truncate", "false")
-            .option("checkpointLocation", dead_letter_dir + "_console_checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
     for q in queries:
         q.awaitTermination()
     return finalize_star(spark, state_dir)

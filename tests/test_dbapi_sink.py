@@ -3,9 +3,10 @@
 re-expressed as a foreachPartition batched writer, tested against
 sqlite (same ON CONFLICT dialect family, stdlib — no server needed).
 
-The end-to-end test streams the full reference corpus through BOTH
-terminal sinks — bucketed-parquet MERGE state and the DBAPI star —
-and asserts they hold identical winners."""
+The end-to-end tests stream a corpus (the full reference corpus, and
+a generated one that needs no reference CSVs) through BOTH terminal
+sinks — bucketed-parquet MERGE state and the DBAPI star — and assert
+they hold identical winners."""
 
 from __future__ import annotations
 
@@ -77,31 +78,49 @@ def test_make_upsert_sql_shapes():
 from bigdataflink_spark.streaming.dbapi_sink import STAR_DDL_SQLITE as _DDL
 
 
-def test_stream_to_dbapi_matches_parquet_state(spark, workdir):
-    """Stream the full corpus through the DBAPI star sink; every table
-    must hold exactly the winners the bucketed-parquet MERGE state
-    holds (same LWW semantics, different terminal store)."""
-    from bigdataflink_spark.sources.producer import produce_jsonl
+def _sqlite_tables() -> dict[str, tuple[str, list[str]]]:
+    """sqlite table -> (state dir, state columns), from the one star
+    layout in plans/star.py."""
+    from bigdataflink_spark.plans.star import FACT, STAR, state_columns
+
+    return {
+        ("fact_sales_raw" if t == FACT else t):
+        ("state_fact" if t == FACT else f"state_{t}", state_columns(t))
+        for t in STAR
+    }
+
+
+def test_star_ddl_matches_star_layout():
+    """The sink's DDL declares exactly the state columns of every star
+    table, natural key as PRIMARY KEY."""
+    from bigdataflink_spark.plans.star import FACT, STAR
+
+    con = sqlite3.connect(":memory:")
+    con.executescript(_DDL)
+    for table, (_, cols) in _sqlite_tables().items():
+        info = con.execute(f"PRAGMA table_info({table})").fetchall()
+        assert sorted(r[1] for r in info) == sorted(cols), table
+        key = STAR[FACT if table == "fact_sales_raw" else table].key
+        assert [r[1] for r in info if r[5]] == [key], table
+    con.close()
+
+
+def _stream_both_sinks_and_compare(spark, workdir: str, landing: str, tag: str) -> None:
+    """Stream the landing dir through the bucketed-parquet MERGE state
+    and the DBAPI star at once; every table must hold exactly the
+    winners the state holds (same LWW semantics, different terminal
+    store)."""
     from bigdataflink_spark.streaming.merge import read_state
-    from bigdataflink_spark.streaming.pipeline import (
-        DIM_PROJECTION,
-        FACT_COLS,
-        read_sales_stream,
-        upsert_star_batch,
-    )
+    from bigdataflink_spark.streaming.pipeline import read_sales_stream, upsert_star_batch
 
-    landing = f"{workdir}/landing"
-    n = produce_jsonl(spark, landing)
-    assert n == 10000
-
-    db = f"{workdir}/star.db"
+    db = f"{workdir}/{tag}_star.db"
     con = sqlite3.connect(db)
     con.executescript(_DDL)
     con.commit()
     con.close()
     fac = _factory(db)
 
-    state_dir = f"{workdir}/state"
+    state_dir = f"{workdir}/{tag}_state"
     records, _ = read_sales_stream(spark, landing, max_files_per_trigger=5)
 
     def both_sinks(b, bid):
@@ -110,7 +129,7 @@ def test_stream_to_dbapi_matches_parquet_state(spark, workdir):
 
     q = (
         records.writeStream.foreachBatch(both_sinks)
-        .option("checkpointLocation", f"{workdir}/ckpt")
+        .option("checkpointLocation", f"{workdir}/{tag}_ckpt")
         .trigger(availableNow=True)
         .start()
     )
@@ -126,12 +145,7 @@ def test_stream_to_dbapi_matches_parquet_state(spark, workdir):
         return str(v)
 
     con = sqlite3.connect(db)
-    tables = {
-        name: ("state_" + name, [key] + attrs + ["arrival_seq"])
-        for name, (key, attrs) in DIM_PROJECTION.items()
-    }
-    tables["fact_sales_raw"] = ("state_fact", FACT_COLS)
-    for table, (state_name, cols) in tables.items():
+    for table, (state_name, cols) in _sqlite_tables().items():
         want = sorted(
             tuple(canon(v) for v in r)
             for r in read_state(spark, os.path.join(state_dir, state_name))
@@ -142,6 +156,31 @@ def test_stream_to_dbapi_matches_parquet_state(spark, workdir):
             tuple(canon(v) for v in r)
             for r in con.execute(f"SELECT {', '.join(cols)} FROM {table}").fetchall()
         )
+        assert want, f"{table}: no state rows"
         assert len(got) == len(want), f"{table}: {len(got)} vs {len(want)} rows"
         assert got == want, f"{table}: winners differ"
     con.close()
+
+
+def test_stream_to_dbapi_matches_parquet_state(spark, workdir):
+    """The full reference corpus through both terminal sinks."""
+    from bigdataflink_spark.sources.producer import produce_jsonl
+
+    landing = f"{workdir}/landing"
+    assert produce_jsonl(spark, landing) == 10000
+    _stream_both_sinks_and_compare(spark, workdir, landing, "ref")
+
+
+def test_stream_to_dbapi_matches_parquet_state_on_generated_corpus(spark, workdir):
+    """A generated reference-quirk corpus (ids restarting per file,
+    entity ids shared across files, several writes per key within a
+    trigger) through both terminal sinks — runs without the reference
+    CSVs."""
+    from bigdataflink_spark.sources.producer import produce_jsonl
+    from starbench.corpus import write_csv_corpus
+
+    csv_dir = f"{workdir}/gen_csv"
+    write_csv_corpus(csv_dir, seed=5, n_files=6, rows_per_file=100, n_entities=60)
+    landing = f"{workdir}/gen_landing"
+    assert produce_jsonl(spark, landing, os.path.join(csv_dir, "*.csv")) == 600
+    _stream_both_sinks_and_compare(spark, workdir, landing, "gen")

@@ -273,10 +273,7 @@ def test_full_reference_topology_stream(spark, workdir):
         upsert_star_batch_dbapi,
     )
     from bigdataflink_spark.streaming.merge import read_state
-    from bigdataflink_spark.streaming.pipeline import (
-        DIM_PROJECTION,
-        FACT_COLS,
-    )
+    from bigdataflink_spark.plans.star import FACT, STAR, state_columns
 
     raw = read_sales_csv(spark)
     n_total = raw.count()
@@ -374,10 +371,10 @@ def test_full_reference_topology_stream(spark, workdir):
 
     con = sqlite3.connect(db)
     layout = {
-        name: (f"state_{name}", [key] + attrs + ["arrival_seq"])
-        for name, (key, attrs) in DIM_PROJECTION.items()
+        ("fact_sales_raw" if t == FACT else t):
+        ("state_fact" if t == FACT else f"state_{t}", state_columns(t))
+        for t in STAR
     }
-    layout["fact_sales_raw"] = ("state_fact", FACT_COLS)
     for table, (state_name, cols) in layout.items():
         want = sorted(
             tuple(canon(v) for v in r)

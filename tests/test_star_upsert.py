@@ -66,9 +66,12 @@ def test_stream_batch_parity_on_generated_corpus(spark, corpus_glob, tmp_path):
     )
     batch_star = build_star(read_sales_csv(spark, corpus_glob))
 
+    def types(df):  # nullability left out: parquet state reads back nullable
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
     assert stream_star.keys() == batch_star.keys()
     for name in batch_star:
-        assert sorted(stream_star[name].columns) == sorted(batch_star[name].columns), name
+        assert types(stream_star[name]) == types(batch_star[name]), name
     got, want = star_rows(stream_star), star_rows(batch_star)
     for name in want:
         assert got[name] == want[name], f"{name}: stream/batch rows differ"
@@ -113,6 +116,37 @@ def test_failed_table_merge_waits_for_others_and_replays(
     for bid in range(1, N_FILES):
         upsert_star_batch(file_batches[bid], bid, state)
     assert star_rows(finalize_star(spark, state)) == star_rows(finalize_star(spark, clean))
+
+
+def plan_windows(df) -> list[tuple[list[str], list[str]]]:
+    """(partition spec, order spec) of every Window in the optimized
+    plan."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    found, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window":
+            found.append(([e.sql() for e in seq(node.partitionSpec())],
+                          [e.sql() for e in seq(node.orderSpec())]))
+        stack.extend(seq(node.children()))
+    return found
+
+
+def test_publishing_state_runs_no_lww_window(spark, file_batches, tmp_path):
+    """Merged state already holds one row per key, so publishing the
+    fact must not re-run a last-write-wins window over it: the plan's
+    only windows are the unpartitioned surrogate-key numberings, one
+    per dim joined in and the fact's own ``fact_key``."""
+    state = str(tmp_path / "state")
+    for bid, batch in enumerate(file_batches):
+        upsert_star_batch(batch, bid, state)
+
+    windows = plan_windows(finalize_star(spark, state)["fact_sales"])
+    assert not [w for w in windows if any("source_sale_id" in p for p in w[0])], windows
+    assert all(not partition for partition, _ in windows), windows
+    assert sum(any("source_sale_id" in o for o in order) for _, order in windows) == 1
 
 
 def clear_job_group(sc) -> None:
