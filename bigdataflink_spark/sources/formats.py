@@ -26,6 +26,8 @@ engine-wide conventions so every entry point round-trips losslessly:
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
@@ -34,6 +36,27 @@ _TEXT_OPTS = {
     "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
     "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
 }
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path, jvm)`` for ``path`` through the Hadoop
+    FileSystem API — the resolver ``spark.read`` uses, so local paths,
+    ``file:`` URIs, ``hdfs://`` and ``s3a://`` behave alike (a
+    driver-local ``os.path`` check is always false on HDFS/S3)."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def read_json(fs, jvm, path) -> dict:
+    """Parse the small JSON record at Hadoop ``path`` (a commit or
+    metadata file)."""
+    stream = fs.open(path)
+    try:
+        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(raw)
 
 
 def read_any(
@@ -179,9 +202,7 @@ def recover_compact_crash(spark: SparkSession, path: str) -> "str | None":
     path as "first batch". Returns a short tag of the repair applied
     (``"restored"`` / ``"dropped_old"`` / ``"dropped_tmp"``) or
     ``None`` when nothing needed repair."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath, jvm = hadoop_fs(spark, path)
     old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact_old")
     tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact_tmp")
     if fs.exists(old):
@@ -230,9 +251,7 @@ def compact_dir(
     unchanged on file://, hdfs://, and s3a:// paths — the same
     contract as streaming/merge.py's state probes.
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath, jvm = hadoop_fs(spark, path)
     recover_compact_crash(spark, path)
 
     def _count(p) -> int:

@@ -82,14 +82,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdataflink_spark.sources.formats import hadoop_fs as _fs
+from bigdataflink_spark.sources.formats import read_json as _read_json
+
 LOG_DIR = "_log"
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf), hpath, jvm
 
 
 # write_snapshot folds the tail into a fresh checkpoint once it grows
@@ -98,15 +94,6 @@ def _fs(spark: SparkSession, path: str):
 # O(committed-versions) per-record open walk a long-lived table would
 # otherwise pay on every read_snapshot/list_versions/vacuum call.
 AUTO_CHECKPOINT_TAIL = 16
-
-
-def _read_json(fs, jvm, path) -> dict:
-    stream = fs.open(path)
-    try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(raw)
 
 
 def _log_state(spark: SparkSession, table: str) -> dict:

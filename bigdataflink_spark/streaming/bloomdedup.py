@@ -64,7 +64,7 @@ def accept_batch(
     """One streaming step: returns the batch's DISTINCT keys with
     ``seen_before`` (Bloom membership against the PRIOR state), then
     appends the batch's new positions. Usable directly for
-    backfills; ``run_bloom_stream`` wraps it in foreachBatch."""
+    backfills and slice-by-slice replays (q215 drives it per slice)."""
     pos_dir = os.path.join(state_dir, "positions")
     batch = batch.localCheckpoint(eager=True)
     # path-missing (first batch) is the ONLY silent case; a read error
@@ -99,34 +99,3 @@ def accept_batch(
     new_pos.write.mode("append").parquet(pos_dir)
     return verdict
 
-
-def run_bloom_stream(
-    spark: SparkSession,
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    key_col: str = "key",
-    m: int = 16_384,
-    k: int = 4,
-    salt: str = "bloom-v1",
-) -> None:
-    """Drain ``stream`` (availableNow) through the online seen-set;
-    per-key verdict rows (probe_key, seen_before, batch_id) land in
-    ``out_dir`` as parquet."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        verdict = accept_batch(
-            spark, batch_df, state_dir, key_col, m, k, salt
-        )
-        verdict.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

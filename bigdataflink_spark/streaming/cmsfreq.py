@@ -31,19 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators.sketches import cms_build
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+from bigdataflink_spark.sources.formats import hadoop_fs
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 
 def complete_generations(spark: SparkSession, state_dir: str) -> list[int]:
     """Indices of complete (``_SUCCESS``-marked) generations,
     ascending. Incomplete directories (crash mid-write) are invisible
     until their batch replays and overwrites them."""
-    jvm, hpath, fs = _fs(spark, state_dir)
+    fs, hpath, jvm = hadoop_fs(spark, state_dir)
     if not fs.exists(hpath):
         return []
     gens = []
@@ -106,7 +102,7 @@ def vacuum_generations(
     indices. Keeps live state bounded at keep·d·w rows."""
     gens = complete_generations(spark, state_dir)
     drop = gens[:-keep] if keep > 0 else gens
-    jvm, _, fs = _fs(spark, state_dir)
+    fs, _, jvm = hadoop_fs(spark, state_dir)
     for g in drop:
         fs.delete(jvm.org.apache.hadoop.fs.Path(_gen_path(state_dir, g)), True)
     return drop
@@ -141,11 +137,4 @@ def run_cms_stream(
             "append"
         ).parquet(out_dir)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

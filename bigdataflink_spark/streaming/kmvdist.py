@@ -39,7 +39,7 @@ from bigdataflink_spark.operators.sketches import (
     KMV_DOMAIN,
     kmv_hashes,
 )
-from bigdataflink_spark.streaming.statestore import read_state
+from bigdataflink_spark.streaming.statestore import read_state, start_foreach_batch
 
 
 def accept_batch(
@@ -116,11 +116,4 @@ def run_kmv_stream(
             "append"
         ).parquet(out_dir)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

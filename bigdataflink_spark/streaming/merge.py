@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators.dedup import lww_dedup
+from bigdataflink_spark.sources.formats import hadoop_fs, read_json
 
 BUCKET_COL = "_bucket"
 # Underscore prefix → ignored by Spark's parquet FileIndex, so the
@@ -49,31 +50,17 @@ BUCKET_COL = "_bucket"
 _META_FILE = "_bdf_state_meta.json"
 
 
-def _fs_and_path(spark: SparkSession, path: str):
-    """Hadoop FileSystem + Path for ``path`` — works on any supported
-    scheme (file://, hdfs://, s3a://…), unlike driver-local os.path."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
 def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    fs, _ = _fs_and_path(spark, path)
-    mpath = spark._jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
+    fs, _, jvm = hadoop_fs(spark, path)
+    mpath = jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
     if not fs.exists(mpath):
         return None
-    stream = fs.open(mpath)
-    try:
-        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(raw)
+    return read_json(fs, jvm, mpath)
 
 
 def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    fs, _ = _fs_and_path(spark, path)
-    mpath = spark._jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
+    fs, _, jvm = hadoop_fs(spark, path)
+    mpath = jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
     stream = fs.create(mpath, True)
     try:
         stream.write(bytearray(json.dumps(meta).encode("utf-8")))
@@ -103,7 +90,7 @@ def merge_lww_bucketed(
     buckets, so a mismatch fails fast instead of corrupting state.
     """
     inc = incoming.withColumn(BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(num_buckets)))
-    fs, hpath = _fs_and_path(spark, path)
+    fs, hpath, _ = hadoop_fs(spark, path)
     if fs.exists(hpath):
         meta = _read_meta(spark, path)
         if meta is not None and meta.get("num_buckets") != num_buckets:

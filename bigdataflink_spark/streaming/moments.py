@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators.timeseries import _exact_moments
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 
 def moments_batch(
@@ -108,13 +109,9 @@ def run_moments_stream(
 ) -> DataFrame:
     """Drive the stream to completion (availableNow) and return the
     merged moment state."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: moments_batch(b, bid, parts_dir, group_col, value_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda b, bid: moments_batch(b, bid, parts_dir, group_col, value_col),
+    ).awaitTermination()
     return read_moments(spark, parts_dir, group_col)

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators import dedup
-from bigdataflink_spark.streaming.statestore import read_state
+from bigdataflink_spark.streaming.statestore import read_state, start_foreach_batch
 
 
 def _band_rows(
@@ -168,10 +168,4 @@ def run_neardup_stream(
         )
         accepted.write.mode("append").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

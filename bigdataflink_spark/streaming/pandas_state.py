@@ -2,12 +2,12 @@
 (SURVEY.md §2.9 T3 / §2.10) — the Arrow-batched arbitrary-state API
 that runs on the plain Python worker.
 
-This is the RUNNABLE twin of streaming/tws_dedup.py: the newer
-``transformWithStateInPandas`` API needs the protobuf state-server
-protocol + RocksDB provider (absent in this container, so that test
-skips), while ``applyInPandasWithState`` speaks the classic Arrow
-worker protocol and runs live here — the dedup semantics and tests
-below execute for real.
+This is the package's first-seen TTL dedup. It deliberately uses
+``applyInPandasWithState``, which speaks the classic Arrow worker
+protocol, rather than the newer ``transformWithStateInPandas``, which
+needs the protobuf state-server protocol and the RocksDB state store
+provider — so the dedup semantics and tests below run on a plain
+PySpark install.
 
 Semantics mirror the reference's idempotent-upsert effect
 (flink/stream_to_star.py:116-121 makes at-least-once delivery

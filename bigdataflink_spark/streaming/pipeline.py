@@ -40,10 +40,13 @@ micro-batch reads and rewrites ONLY the buckets its keys hash into
 the plain-parquet analog of a Delta/Iceberg ``MERGE INTO``. On a real
 lakehouse the same per-batch logic (steps 1-2) drives file-level
 instead of bucket-level pruning.
-Because the upsert is idempotent by (key, arrival_seq), checkpointed
-replays after failure converge to the same state — the same
-at-least-once → effectively-exactly-once argument the reference gets
-from Postgres unique indexes (SURVEY.md §2.9 T3).
+The upsert query starts through the package's one foreachBatch driver
+(``streaming/statestore.start_foreach_batch``): on restart it
+re-delivers a failed trigger under the same batch id. Because the
+upsert is idempotent by (key, arrival_seq), checkpointed replays after
+failure converge to the same state — the same at-least-once →
+effectively-exactly-once argument the reference gets from Postgres
+unique indexes (SURVEY.md §2.9 T3).
 
 Per-record error capture (P10): rows whose JSON fails to parse land
 in an errors side-channel with the raw payload, mirroring the
@@ -62,6 +65,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from bigdataflink_spark.plans.star import FACT, STAR, cleanse_sales, project_star, publish_star
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 # The 50 reference CSV columns (FIXTURES.md §1) + arrival_seq. All
 # strings on the wire — typing is the cleanse layer's job.
@@ -220,17 +224,19 @@ def run_stream_to_star(
     (status + raw payload) under their own checkpoint, while the main
     pipeline keeps running. Defaults ``dead_letter_dir`` to
     ``<state_dir>/_dead_letter``.
+
+    The upsert query goes through the package's one foreachBatch
+    driver (``statestore.start_foreach_batch``); the dead-letter query
+    stays a parquet file sink, whose ``_spark_metadata`` log keeps the
+    dead letters exactly-once under replay.
     """
     records, errors = read_sales_stream(spark, jsonl_dir, max_files_per_trigger)
     if dead_letter_dir is None:
         dead_letter_dir = os.path.join(state_dir, "_dead_letter")
     queries = [
-        records.writeStream.foreachBatch(
-            lambda b, bid: upsert_star_batch(b, bid, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start(),
+        start_foreach_batch(
+            records, checkpoint_dir, lambda b, bid: upsert_star_batch(b, bid, state_dir)
+        ),
         errors.writeStream.format("parquet")
         .option("path", dead_letter_dir)
         .option("checkpointLocation", dead_letter_dir + "_checkpoint")

@@ -55,6 +55,7 @@ from bigdataflink_spark.operators.similarity import (
 from bigdataflink_spark.streaming.statestore import (
     list_state_files,
     read_state,
+    start_foreach_batch,
 )
 
 
@@ -550,12 +551,10 @@ def maintain_code_state(
     SAFETY: same as the gram state — compaction deletes the old
     files, so run only after the trigger's output is durably written
     (no lazy plan still pinning a pre-compaction file list)."""
-    from bigdataflink_spark.sources.formats import compact_dir
+    from bigdataflink_spark.sources.formats import compact_dir, hadoop_fs
 
     codes_dir = os.path.join(state_dir, "codes")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(codes_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath, _ = hadoop_fs(spark, codes_dir)
     if not fs.exists(hpath):
         return {}
     done: "dict[int, tuple[int, int]]" = {}
@@ -636,11 +635,4 @@ def run_pq_index_stream(
         if compact_after_files is not None:
             maintain_code_state(spark, state_dir, compact_after_files)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

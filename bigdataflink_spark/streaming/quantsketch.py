@@ -38,6 +38,7 @@ from bigdataflink_spark.streaming.cmsfreq import (
     complete_generations,
     vacuum_generations,  # noqa: F401  (re-exported: same semantics)
 )
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 FULL_LEVEL = KMV_BITS  # m* of an empty prefix: everything is kept
 
@@ -184,11 +185,4 @@ def run_quantile_stream(
             "append"
         ).parquet(out_dir)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

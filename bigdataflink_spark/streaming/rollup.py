@@ -70,14 +70,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdataflink_spark.sources.formats import hadoop_fs, read_json
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
+
 COMMIT_DIR = "_compactions"
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf), hpath, jvm
 
 
 def rollup_batch(
@@ -117,7 +113,7 @@ def _live_state(spark: SparkSession, parts_dir: str):
     as local); only _SUCCESS-complete batch dirs count, so a trigger
     writing concurrently is never half-read.
     """
-    fs, root, jvm = _fs(spark, parts_dir)
+    fs, root, jvm = hadoop_fs(spark, parts_dir)
     gen, max_batch = -1, -1
     commit_root = jvm.org.apache.hadoop.fs.Path(f"{parts_dir}/{COMMIT_DIR}")
     if fs.exists(commit_root):
@@ -125,12 +121,7 @@ def _live_state(spark: SparkSession, parts_dir: str):
             name = st.getPath().getName()
             if not (name.startswith("gen-") and name.endswith(".json")):
                 continue
-            stream = fs.open(st.getPath())
-            try:
-                raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            finally:
-                stream.close()
-            rec = json.loads(raw)
+            rec = read_json(fs, jvm, st.getPath())
             if rec["gen"] > gen:
                 gen, max_batch = rec["gen"], rec["superseded_max_batch"]
     gen_path = f"{parts_dir}/compacted/gen={gen}" if gen >= 0 else None
@@ -205,7 +196,7 @@ def _commit_gen(
     via create-temp + rename (rename to a fresh name is atomic on
     local FS and HDFS; on S3A it is a metadata copy of a ~60-byte
     object — still effectively a point switch)."""
-    fs, _, jvm = _fs(spark, parts_dir)
+    fs, _, jvm = hadoop_fs(spark, parts_dir)
     commit_root = jvm.org.apache.hadoop.fs.Path(f"{parts_dir}/{COMMIT_DIR}")
     fs.mkdirs(commit_root)
     tmp = jvm.org.apache.hadoop.fs.Path(
@@ -245,7 +236,7 @@ def _cleanup_superseded(spark: SparkSession, parts_dir: str) -> None:
     straddle an entire later compaction to observe a deletion — the
     documented retention contract. With fewer than two committed
     generations nothing is old enough to delete."""
-    fs, root, jvm = _fs(spark, parts_dir)
+    fs, root, jvm = hadoop_fs(spark, parts_dir)
     commit_root = jvm.org.apache.hadoop.fs.Path(f"{parts_dir}/{COMMIT_DIR}")
     gens: dict[int, int] = {}  # gen -> superseded_max_batch
     if fs.exists(commit_root):
@@ -253,12 +244,7 @@ def _cleanup_superseded(spark: SparkSession, parts_dir: str) -> None:
             name = st.getPath().getName()
             if not (name.startswith("gen-") and name.endswith(".json")):
                 continue
-            stream = fs.open(st.getPath())
-            try:
-                raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            finally:
-                stream.close()
-            rec = json.loads(raw)
+            rec = read_json(fs, jvm, st.getPath())
             gens[rec["gen"]] = rec["superseded_max_batch"]
     if len(gens) < 2:
         return  # grace: the newest generation's inputs are kept one cycle
@@ -334,13 +320,9 @@ def run_continuous_rollup(
 ) -> DataFrame:
     """Drive the stream to completion (availableNow) and return the
     merged rollup."""
-    q = (
-        events_stream.writeStream.foreachBatch(
-            lambda b, bid: rollup_batch(b, bid, parts_dir, duration)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_foreach_batch(
+        events_stream,
+        checkpoint_dir,
+        lambda b, bid: rollup_batch(b, bid, parts_dir, duration),
+    ).awaitTermination()
     return read_rollup(spark, parts_dir)

@@ -44,13 +44,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdataflink_spark.sources.formats import hadoop_fs
 from bigdataflink_spark.streaming.merge import (
     BUCKET_COL,
-    _fs_and_path,
     _read_meta,
     _state_df,
     _write_meta,
 )
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 
 def merge_scd2_batch(
@@ -79,7 +80,7 @@ def merge_scd2_batch(
         F.col(tiebreak_col).cast("long").alias("_seq"),
     ).withColumn(BUCKET_COL, F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets)))
 
-    fs, hpath = _fs_and_path(spark, path)
+    fs, hpath, _ = hadoop_fs(spark, path)
     n_late = 0
     old_frontier = None
     if fs.exists(hpath):
@@ -221,10 +222,4 @@ def run_scd2_stream(
             tiebreak_col, num_buckets,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_foreach_batch(stream, checkpoint, _apply).awaitTermination()

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators.similarity import dot, norm
-from bigdataflink_spark.streaming.statestore import read_state
+from bigdataflink_spark.streaming.statestore import read_state, start_foreach_batch
 
 
 def _sided(df: DataFrame, id_col: str, vec_col: str, cell_col: str) -> DataFrame:
@@ -250,10 +250,4 @@ def run_semdedup_stream(
         )
         verdict.write.mode("append").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

@@ -1,11 +1,23 @@
-"""Shared parquet-state reader for the streaming dedup/sketch twins.
+"""Shared plumbing of the streaming twins: the one foreachBatch driver
+and the parquet-state reader.
 
-Round-9 verdict "What's wrong #2": the twins wrapped their state read
-in ``except Exception``, so ANY read failure — a transiently
-unreadable filesystem, a corrupted footer — was treated as "first
-batch, empty state" and silently reset the filter. For the Bloom twin
-that silently breaks the documented "no false negatives ever"
-contract; for near-dup/semantic-dedup it silently re-admits
+:func:`start_foreach_batch` starts every foreachBatch query in the
+package (the star upsert and each ``run_*`` wrapper): a checkpointed,
+``availableNow`` drain of a replayable source through a per-batch
+body. The contract lives here once: the checkpoint records a batch's
+offsets before the body runs and commits them only after it returns,
+so a body that raises fails the query and a restart on the same
+checkpoint re-delivers that batch under the same batch id — bodies
+are written to be idempotent per batch id (Structured Streaming's
+exactly-once recipe, SIGMOD 2018), or say where they are not
+(``run_neardup_stream``, ``run_semdedup_stream``).
+
+State reads. Round-9 verdict "What's wrong #2": the twins wrapped
+their state read in ``except Exception``, so ANY read failure — a
+transiently unreadable filesystem, a corrupted footer — was treated
+as "first batch, empty state" and silently reset the filter. For the
+Bloom twin that silently breaks the documented "no false negatives
+ever" contract; for near-dup/semantic-dedup it silently re-admits
 duplicates. Only one condition legitimately means "no state yet":
 the path does not exist. Everything else must fail LOUDLY so the
 orchestrator retries the batch instead of publishing wrong verdicts.
@@ -20,7 +32,30 @@ raises HERE, inside the caller's batch, not lazily at verdict time.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+from bigdataflink_spark.sources.formats import hadoop_fs, recover_compact_crash
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    body: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start draining ``stream`` through ``body(batch_df, batch_id)``
+    under the checkpoint at ``checkpoint_dir``: one ``availableNow``
+    pass over everything the source holds at start, append output
+    mode. Returns the started query; callers await it."""
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(body)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def read_state(spark: SparkSession, path: str) -> "DataFrame | None":
@@ -58,9 +93,7 @@ def list_state_files(spark: SparkSession, path: str) -> "list[str] | None":
     instead of a per-dir listing + schema inference). ``None`` iff
     the path does not exist; same compaction-crash recovery and loud
     subdirectory guard as read_state."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath, _ = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         # A missing dir is only "first batch" if no compaction crash
         # left the state parked at '<path>.compact_old' (ADVICE r12:
@@ -69,10 +102,6 @@ def list_state_files(spark: SparkSession, path: str) -> "list[str] | None":
         # restores it via one atomic rename — or raises, because
         # silently returning None here would re-admit every
         # previously-seen key as a first sight.
-        from bigdataflink_spark.sources.formats import (
-            recover_compact_crash,
-        )
-
         if recover_compact_crash(spark, path) != "restored":
             return None
     statuses = fs.listStatus(hpath)

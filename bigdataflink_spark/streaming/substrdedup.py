@@ -55,8 +55,8 @@ from bigdataflink_spark.operators.text import (
     merge_duplicated_spans,
     substring_windows,
 )
-from bigdataflink_spark.sources.formats import compact_dir
-from bigdataflink_spark.streaming.statestore import read_state
+from bigdataflink_spark.sources.formats import compact_dir, hadoop_fs
+from bigdataflink_spark.streaming.statestore import read_state, start_foreach_batch
 
 SALT = "ssd-v1"
 
@@ -92,9 +92,7 @@ def maintain_gram_state(
     Replay idempotence is untouched — state content is identical
     before and after, only the file layout changes."""
     gh_dir = os.path.join(state_dir, "grams")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(gh_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath, _ = hadoop_fs(spark, gh_dir)
     if not fs.exists(hpath):
         return None
     n = sum(
@@ -238,11 +236,4 @@ def run_substr_stream(
         if compact_after_files is not None:
             maintain_gram_state(spark, state_dir, compact_after_files)
 
-    (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_foreach_batch(stream, checkpoint_dir, _process).awaitTermination()

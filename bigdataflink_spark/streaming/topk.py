@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators.text import tokens
+from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 
 def topk_batch(
@@ -55,13 +56,9 @@ def run_topk_stream(
 ) -> DataFrame:
     """Drive the stream to completion (availableNow) and return the
     exact top-k view over the merged counts."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: topk_batch(b, bid, parts_dir, text_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda b, bid: topk_batch(b, bid, parts_dir, text_col),
+    ).awaitTermination()
     return read_topk(spark, parts_dir, k)

@@ -153,44 +153,6 @@ def test_streaming_dedup_within_watermark(spark, workdir):
     assert out.select("event_id").distinct().count() == 200
 
 
-def test_tws_ttl_dedup(spark, workdir):
-    """transformWithState TTL dedup: duplicated events collapse to one
-    row per event_id (first occurrence wins) with TTL-expiring state."""
-    from bigdataflink_spark.streaming.tws_dedup import ttl_dedup
-
-    # the TWS Python worker speaks a protobuf state-server protocol;
-    # skip when protobuf isn't installed (this container lacks it)
-    pytest.importorskip("google.protobuf")
-    # transformWithState needs the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").limit(150)
-    flat = ev.select("event_id", "user_id", F.col("value"))
-    flat.unionByName(flat).write.mode("overwrite").parquet(f"{workdir}/tws_in")
-
-    stream = spark.readStream.schema(flat.schema).parquet(f"{workdir}/tws_in")
-    deduped = ttl_dedup(
-        stream,
-        "event_id",
-        "event_id BIGINT, user_id BIGINT, value DOUBLE",
-        ttl_ms=3_600_000,
-    )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("tws_sink")
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/tws_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = spark.table("tws_sink")
-    assert out.count() == 150
-    assert out.select("event_id").distinct().count() == 150
-
-
 def test_stream_static_enrichment_join(spark, workdir):
     """Stream-static join (SURVEY J1, streaming flavor): a streaming
     events feed enriched against a static dimension; the static side
@@ -845,8 +807,8 @@ def test_streaming_scd2_drops_late_rows(spark, tmp_path):
 
 
 def test_apply_in_pandas_with_state_dedup(spark, tmp_path):
-    """Arbitrary-state dedup (applyInPandasWithState — runs LIVE here,
-    unlike the protobuf-gated transformWithState twin): duplicated
+    """Arbitrary-state dedup (applyInPandasWithState — runs on a plain
+    PySpark install, no protobuf or RocksDB needed): duplicated
     events across micro-batches collapse to exactly one row per key,
     first occurrence (min event_id) winning."""
     from bigdataflink_spark.streaming.pandas_state import first_seen_dedup
@@ -1357,3 +1319,57 @@ def test_state_read_rejects_nested_data_dirs(spark, tmp_path):
     flat = str(tmp_path / "flat")
     df.write.parquet(flat)
     assert read_state(spark, flat).count() == 2
+
+
+def test_foreach_batch_driver_replays_failed_batch(spark, tmp_path):
+    """The one foreachBatch driver (statestore.start_foreach_batch): a
+    body that raises on batch 1 fails the caller and keeps batch 0's
+    output; a rerun on the same checkpoint re-delivers batch 1 under
+    the same id with the same rows, then delivers batch 2, and never
+    delivers the committed batch 0 again."""
+    import glob
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from bigdataflink_spark.streaming.statestore import start_foreach_batch
+
+    src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    for i in range(3):
+        spark.range(10 * i, 10 * i + 10).coalesce(1).write.parquet(f"{tmp_path}/f{i}")
+        (part,) = glob.glob(f"{tmp_path}/f{i}/part-*.parquet")
+        dst = f"{src}/file-{i}.parquet"
+        shutil.copyfile(part, dst)
+        # the file source takes its backlog oldest first
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+    rows = [list(range(10 * i, 10 * i + 10)) for i in range(3)]
+    stream = (
+        spark.readStream.schema("id BIGINT").option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    delivered = []
+
+    def body(fail_on):
+        def _body(batch_df, batch_id):
+            delivered.append((batch_id, sorted(r.id for r in batch_df.collect())))
+            if batch_id == fail_on:
+                raise RuntimeError("injected body failure")
+            batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(out)
+
+        return _body
+
+    def written():
+        return sorted((r.batch_id, r.id) for r in spark.read.parquet(out).collect())
+
+    q = start_foreach_batch(stream, ckpt, body(fail_on=1))
+    with pytest.raises(StreamingQueryException, match="injected body failure"):
+        q.awaitTermination()
+    assert delivered == [(0, rows[0]), (1, rows[1])]
+    assert written() == [(0, v) for v in rows[0]]
+
+    delivered.clear()
+    start_foreach_batch(stream, ckpt, body(fail_on=None)).awaitTermination()
+    assert delivered == [(1, rows[1]), (2, rows[2])]
+    assert written() == [(b, v) for b in range(3) for v in rows[b]]
