@@ -16,6 +16,7 @@ JVM/codegen startup so numbers reflect steady-state throughput.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
@@ -328,22 +329,32 @@ def main() -> None:
     # number is $SPARK_GRAFT_ROUND if set, else inferred as
     # 1 + the highest committed BENCH_r<N>.json (the driver benches
     # round N before writing BENCH_r<N>.json, so the inference is
-    # stable for the run that matters). Additions-only: stdout, the
-    # final compact line, and BENCH_DETAIL.json are unchanged.
+    # stable for the run that matters). An inferred round never
+    # overwrites an existing BENCH_DETAIL_r<N>.json (a second run of
+    # the same round): it goes to the first free
+    # BENCH_DETAIL_r<N>_<k>.json. Additions-only: stdout, the final
+    # compact line, and BENCH_DETAIL.json are unchanged.
     try:
         import re as _re
 
         rnd = os.environ.get("SPARK_GRAFT_ROUND")
-        if not rnd:
+        inferred = not rnd
+        if inferred:
             prev = [
                 int(m.group(1))
                 for f in os.listdir(repo_dir)
                 if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", f))
             ]
             rnd = str(max(prev) + 1) if prev else "0"
-        with open(
-            os.path.join(repo_dir, f"BENCH_DETAIL_r{int(rnd)}.json"), "w"
-        ) as fh:
+        stem = os.path.join(repo_dir, f"BENCH_DETAIL_r{int(rnd)}")
+        for k in itertools.count():
+            try:
+                fh = open(f"{stem}_{k}.json" if k else f"{stem}.json",
+                          "x" if inferred else "w")
+                break
+            except FileExistsError:
+                pass
+        with fh:
             json.dump(detail, fh, indent=1, sort_keys=True)
     except (OSError, ValueError):
         pass  # read-only checkout / unparseable round: detail above

@@ -220,14 +220,17 @@ def passage_dedup_stats(
     O(total passages) at any corpus size. Round 13: both shuffles key
     on a hash of the passage instead of the passage text (~3× fewer
     shuffle bytes — the oracle still counts passage strings). Round
-    14: the key is 128 bits — TWO independently-seeded xxhash64
-    columns (the second prepends a literal, which reseeds the chained
-    hash) — because a 64-bit key is only safe at bench scale: at the
-    100 TB design point the distinct-passage population is ~10¹¹ and
-    the 64-bit birthday bound (~5·10⁹) is crossed, making silent
-    merges of distinct passages EXPECTED (thousands of them), each
-    inflating a doc's n_shared. At 128 bits the expectation is
-    ~n²/2¹²⁹ ≈ 10⁻¹⁷ for n=10¹¹ — negligible at any feasible corpus.
+    14: the key is 128 bits — TWO seeded xxhash64 columns (the second
+    prepends a literal, which reseeds the chained hash), heuristically
+    independent for non-adversarial input — because a 64-bit key is
+    only safe at bench scale: at the 100 TB design point the
+    distinct-passage population is ~10¹¹ and the 64-bit birthday bound
+    (~5·10⁹) is crossed, making silent merges of distinct passages
+    EXPECTED (thousands of them), each inflating a doc's n_shared. If
+    the two columns behave as independent 64-bit hashes, the
+    expectation at 128 bits is ~n²/2¹²⁹ ≈ 10⁻¹⁷ for n=10¹¹. That is an
+    estimate, not a guarantee: xxhash64 is neither keyed nor
+    cryptographic, and crafted input can collide both columns.
     16 B of key vs ~20 B of passage text keeps most of the byte win;
     the 3-SF sweeps additionally pin exact equality on the tested
     corpora."""
@@ -427,11 +430,11 @@ def _dup_window_starts(
     text. The hash is pure codegen (xxhash64), no Python.
 
     Round 14 (VERDICT r13 "What's wrong #1"): the key is 128 bits —
-    TWO independently-seeded xxhash64 columns. ``xxhash64(lit(1),
-    gram)`` folds the literal into the running hash first, which
-    reseeds the gram hash, so the pair is two independent 64-bit
-    functions of the gram (a SUFFIX literal would instead make the
-    second column a function of the first — zero added entropy).
+    TWO seeded xxhash64 columns. ``xxhash64(lit(1), gram)`` folds the
+    literal into the running hash first, which reseeds the gram hash,
+    so the pair is heuristically independent for non-adversarial input
+    (a SUFFIX literal would instead make the second column a function
+    of the first — zero added entropy).
     A single 64-bit key was verified collision-free at the tested SFs
     but is NOT safe at the declared 100 TB target: with ~10¹¹–10¹²
     distinct windows the 64-bit birthday bound (~5·10⁹) is crossed
@@ -440,8 +443,9 @@ def _dup_window_starts(
     in the keep-first path a collision can delete every copy of a
     unique passage (the colliding gram's election has one winner, so
     the losing gram loses even its first occurrence). At 128 bits the
-    collision expectation is ~n²/2¹²⁹ ≈ 10⁻¹⁵ for n=10¹² — negligible
-    at any feasible corpus size. Shuffle width is 16 B of key, still
+    collision expectation is ~n²/2¹²⁹ ≈ 10⁻¹⁵ for n=10¹² under that
+    independence heuristic — an estimate, not a guarantee (xxhash64
+    is neither keyed nor cryptographic). Shuffle width is 16 B of key, still
     ~4× narrower than the window strings. The DuckDB oracles keep
     grouping by the window TEXT: the 3-SF sweeps additionally pin
     exact equality on the tested corpora. The streaming twin

@@ -197,14 +197,16 @@ def recover_compact_crash(spark: SparkSession, path: str) -> "str | None":
     * ``.compact_tmp`` exists, ``path`` intact → crash during the
       staged rewrite: the tmp dir is garbage, delete it.
 
-    Called at the top of every :func:`compact_dir` run and by
+    Called at the top of every :func:`compact_dir` run, by
     ``streaming.statestore.read_state`` before it treats a missing
-    path as "first batch". Returns a short tag of the repair applied
-    (``"restored"`` / ``"dropped_old"`` / ``"dropped_tmp"``) or
-    ``None`` when nothing needed repair."""
+    path as "first batch", and by every state probe of
+    ``streaming/merge.py``, whose rebucket uses the same swap
+    (:func:`swap_in_staged`). Returns a short tag of the repair
+    applied (``"restored"`` / ``"dropped_old"`` / ``"dropped_tmp"``)
+    or ``None`` when nothing needed repair."""
     fs, hpath, jvm = hadoop_fs(spark, path)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact_old")
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact_tmp")
+    old = jvm.org.apache.hadoop.fs.Path(_parked_dir(path))
+    tmp = jvm.org.apache.hadoop.fs.Path(staged_dir(path))
     if fs.exists(old):
         if fs.exists(hpath):
             fs.delete(old, True)
@@ -251,7 +253,7 @@ def compact_dir(
     unchanged on file://, hdfs://, and s3a:// paths — the same
     contract as streaming/merge.py's state probes.
     """
-    fs, hpath, jvm = hadoop_fs(spark, path)
+    fs, hpath, _ = hadoop_fs(spark, path)
     recover_compact_crash(spark, path)
 
     def _count(p) -> int:
@@ -263,16 +265,37 @@ def compact_dir(
 
     before = _count(hpath)
     df = spark.read.format(fmt).load(path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact_tmp")
-    write_sharded(df, tmp.toString(), sort_cols, target_rows_per_file, fmt=fmt)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".compact_old")
+    write_sharded(df, staged_dir(path), sort_cols, target_rows_per_file, fmt=fmt)
+    swap_in_staged(spark, path)
+    return before, _count(hpath)
+
+
+def staged_dir(path: str) -> str:
+    """The sibling a full rewrite of ``path`` is staged in before
+    :func:`swap_in_staged` moves it into place."""
+    return path.rstrip("/") + ".compact_tmp"
+
+
+def _parked_dir(path: str) -> str:
+    return path.rstrip("/") + ".compact_old"
+
+
+def swap_in_staged(spark: SparkSession, path: str) -> None:
+    """Replace ``path`` with its fully written :func:`staged_dir` by two
+    renames: ``path`` → ``.compact_old``, staged → ``path``, then drop
+    ``.compact_old``. A failed second rename rolls back; a crash
+    between the renames parks the old state at ``.compact_old``, which
+    :func:`recover_compact_crash` restores. Shared by
+    :func:`compact_dir` and ``streaming/merge.py``'s rebucket."""
+    fs, hpath, jvm = hadoop_fs(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(staged_dir(path))
+    old = jvm.org.apache.hadoop.fs.Path(_parked_dir(path))
     if not fs.rename(hpath, old):
-        raise IOError(f"compact_dir: could not stage {path} aside")
+        raise IOError(f"could not stage {path} aside")
     if not fs.rename(tmp, hpath):
         fs.rename(old, hpath)  # roll back
-        raise IOError(f"compact_dir: could not swap in compacted {path}")
+        raise IOError(f"could not swap the staged rewrite into {path}")
     fs.delete(old, True)
-    return before, _count(hpath)
 
 
 def read_binary_dir(

@@ -29,9 +29,20 @@ static overwrite with ``partitionBy`` deletes every clean bucket).
 State is read with the schema pinned in its metadata — no
 schema-inference job per merge.
 
-Scaling N: buckets play the role of Delta's file-level pruning; pick
-N ~ state_size / target_file_size. A real lakehouse MERGE only
-improves constants (file-level instead of bucket-level pruning).
+Scaling N: buckets play the role of Delta's file-level pruning, and
+each state derives its own N from its bytes (:func:`fit_state_buckets`).
+A new state starts with one bucket; once its bytes exceed N × the
+session's scan split size (``spark.sql.files.maxPartitionBytes``,
+128 MB by default) it is rebucketed to the smallest power of two that
+fits. Below one split, extra buckets prune nothing worth having: the
+whole state is one scan split, and each bucket only adds a file, a
+partition commit and scan overhead to every merge. The rebucket is a
+full LWW rewrite into a staged sibling that carries its own metadata,
+swapped in by ``sources/formats.swap_in_staged``, the two-rename swap
+``compact_dir`` also uses; every state probe here runs
+``recover_compact_crash`` first, so a crash at any point leaves either
+the old or the new state. A real lakehouse MERGE only improves constants
+(file-level instead of bucket-level pruning).
 """
 
 from __future__ import annotations
@@ -42,7 +53,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.operators.dedup import lww_dedup
-from bigdataflink_spark.sources.formats import hadoop_fs, read_json
+from bigdataflink_spark.sources.formats import (
+    hadoop_fs,
+    read_json,
+    recover_compact_crash,
+    staged_dir,
+    swap_in_staged,
+)
 
 BUCKET_COL = "_bucket"
 # Underscore prefix → ignored by Spark's parquet FileIndex, so the
@@ -68,6 +85,37 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
         stream.close()
 
 
+def fit_state_buckets(spark: SparkSession, path: str) -> int:
+    """Bucket count for the next merge into the state at ``path``.
+
+    1 for a new state, and for a state without metadata (its first
+    merge died before the metadata write, so it holds one bucket). An
+    existing state keeps its pinned N while its bytes fit in N scan
+    splits; past that it is rebucketed here, before the merge, to the
+    smallest power of two that fits, and the new N is returned. N never
+    shrinks.
+    """
+    recover_compact_crash(spark, path)
+    meta = _read_meta(spark, path)
+    if meta is None:
+        return 1
+    fs, hpath, _ = hadoop_fs(spark, path)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    size = fs.getContentSummary(hpath).getLength()
+    need = 1
+    while need * split < size:
+        need *= 2
+    if need <= meta["num_buckets"]:
+        return meta["num_buckets"]
+    # full LWW rewrite into the staged sibling, then the two-rename swap
+    key, seq_col = meta["key"], meta["seq_col"]
+    state = _state_df(spark, path, meta).drop(BUCKET_COL)
+    winners = _bucketed(lww_dedup(state, [key], seq_col), key, need)
+    _write_state(spark, winners, staged_dir(path), key, seq_col, need)
+    swap_in_staged(spark, path)
+    return need
+
+
 def merge_lww_bucketed(
     spark: SparkSession,
     incoming: DataFrame,
@@ -81,15 +129,18 @@ def merge_lww_bucketed(
     ``incoming`` may hold several rows per key: one LWW pass over
     existing ∪ incoming picks the same winners as deduplicating the
     batch first. Only the buckets containing incoming keys are read
-    and rewritten.
+    and rewritten; a one-bucket state's only bucket is the dirty one,
+    so it runs no dirty-bucket job.
     State existence is probed through the Hadoop FileSystem API (a
     driver-local os.path check is always false on HDFS/S3 → would
     silently drop prior state). The bucket count is pinned in
     ``_bdf_state_meta.json`` inside the state dir: merging with a
     different ``num_buckets`` would leave stale winners in old
-    buckets, so a mismatch fails fast instead of corrupting state.
+    buckets, so a mismatch fails fast instead of corrupting state
+    (:func:`fit_state_buckets` changes N by a full rebucket).
     """
-    inc = incoming.withColumn(BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(num_buckets)))
+    recover_compact_crash(spark, path)
+    inc = _bucketed(incoming, key, num_buckets)
     fs, hpath, _ = hadoop_fs(spark, path)
     if fs.exists(hpath):
         meta = _read_meta(spark, path)
@@ -98,10 +149,12 @@ def merge_lww_bucketed(
                 f"state at {path} was bucketed with num_buckets="
                 f"{meta.get('num_buckets')}; merging with {num_buckets} "
                 "would corrupt it (same key lands in a different bucket). "
-                "Rebuild the state to rebucket."
+                "fit_state_buckets changes N by rebucketing the whole state."
             )
-        dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
-        existing = _state_df(spark, path, meta).filter(F.col(BUCKET_COL).isin(dirty))
+        existing = _state_df(spark, path, meta)
+        if num_buckets > 1:
+            dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
+            existing = existing.filter(F.col(BUCKET_COL).isin(dirty))
         merged = existing.unionByName(inc)
     else:
         merged = inc
@@ -109,6 +162,19 @@ def merge_lww_bucketed(
     # cut lineage to the files being overwritten (read-then-overwrite
     # of the same path is otherwise undefined)
     winners = winners.localCheckpoint(eager=True)
+    _write_state(spark, winners, path, key, seq_col, num_buckets)
+
+
+def _bucketed(df: DataFrame, key: str, num_buckets: int) -> DataFrame:
+    return df.withColumn(BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(num_buckets)))
+
+
+def _write_state(
+    spark: SparkSession, winners: DataFrame, path: str, key: str, seq_col: str,
+    num_buckets: int,
+) -> None:
+    """Overwrite the buckets present in ``winners`` (dynamic partition
+    overwrite, set per write), then pin the layout in the metadata."""
     (
         winners.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -145,4 +211,5 @@ def _state_df(spark: SparkSession, path: str, meta: dict | None) -> DataFrame:
 
 def read_state(spark: SparkSession, path: str) -> DataFrame:
     """Current state without the bucketing column."""
+    recover_compact_crash(spark, path)
     return _state_df(spark, path, _read_meta(spark, path)).drop(BUCKET_COL)

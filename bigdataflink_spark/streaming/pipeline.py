@@ -37,8 +37,12 @@ State lives in a bucketed parquet directory per table
 (``streaming/merge.py``): partitioned on ``pmod(hash(key), N)``, a
 micro-batch reads and rewrites ONLY the buckets its keys hash into
 (dynamic partition overwrite) — O(dirty buckets) write amplification,
-the plain-parquet analog of a Delta/Iceberg ``MERGE INTO``. On a real
-lakehouse the same per-batch logic (steps 1-2) drives file-level
+the plain-parquet analog of a Delta/Iceberg ``MERGE INTO``. Each table
+sizes its own N from its bytes (``merge.fit_state_buckets``, called by
+the table's worker before its merge): one bucket until the state
+outgrows one scan split, which is every table at the paper's scale,
+then a staged rebucket to the smallest power of two that fits. On a
+real lakehouse the same per-batch logic (steps 1-2) drives file-level
 instead of bucket-level pruning.
 The upsert query starts through the package's one foreachBatch driver
 (``streaming/statestore.start_foreach_batch``): on restart it
@@ -150,10 +154,6 @@ def read_sales_stream(spark: SparkSession, jsonl_dir: str, max_files_per_trigger
     return parse_sales_records(raw)
 
 
-# Buckets per state table: star-scale states are small; at 100 TB
-# raise toward state_size / target_file_size (see streaming/merge.py).
-STATE_BUCKETS = 16
-
 def _state_path(state_dir: str, table: str) -> str:
     return os.path.join(state_dir, "state_fact" if table == FACT else f"state_{table}")
 
@@ -177,9 +177,10 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
     tables = project_star(cleansed)
 
     def merge_table(table: str) -> None:
+        path = _state_path(state_dir, table)
         merge.merge_lww_bucketed(
-            spark, tables[table], _state_path(state_dir, table), STAR[table].key,
-            num_buckets=STATE_BUCKETS,
+            spark, tables[table], path, STAR[table].key,
+            num_buckets=merge.fit_state_buckets(spark, path),
         )
 
     try:

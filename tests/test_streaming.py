@@ -417,6 +417,193 @@ def test_bucketed_merge_rejects_bucket_count_change(spark, workdir):
     assert [tuple(r) for r in read_state(spark, path).collect()] == [(1, "c", 3)]
 
 
+_KV_SCHEMA = "k long, payload string, arrival_seq long"
+_SPLIT_KEY = "spark.sql.files.maxPartitionBytes"
+
+
+def _lww_truth(spark, rows):
+    from bigdataflink_spark.operators.dedup import lww_dedup
+
+    df = spark.createDataFrame(rows, _KV_SCHEMA)
+    return sorted(tuple(r) for r in lww_dedup(df, ["k"], "arrival_seq").collect())
+
+
+def _state_rows(spark, path):
+    from bigdataflink_spark.streaming.merge import read_state
+
+    return sorted(tuple(r) for r in read_state(spark, path).collect())
+
+
+def _state_bytes(spark, path):
+    from bigdataflink_spark.sources.formats import hadoop_fs
+
+    fs, hpath, _ = hadoop_fs(spark, path)
+    return fs.getContentSummary(hpath).getLength()
+
+
+def _pinned_buckets(path):
+    import json
+    import os
+
+    with open(os.path.join(path, "_bdf_state_meta.json")) as f:
+        return json.load(f)["num_buckets"]
+
+
+def test_fit_state_buckets_grows_by_staged_rebucket(spark, workdir):
+    """A state starts with one bucket and is rebucketed to the smallest
+    power of two whose splits hold its bytes: lowering the split size
+    between merges grows N 1 → 2 → 4. After every merge the state is
+    the LWW of all rows so far, every bucket dir is below N, and the
+    metadata pins N, so a merge with the old N still fails fast."""
+    import os
+
+    from bigdataflink_spark.streaming.merge import fit_state_buckets, merge_lww_bucketed
+
+    path = f"{workdir}/grown_state"
+    batches = [
+        [(k, f"b{i}_{k}", 1000 * i + k) for k in range(60 * i, 60 * i + 100)]
+        for i in range(4)
+    ]
+    prev_split = spark.conf.get(_SPLIT_KEY)
+    seen, merged = [], []
+    try:
+        for i, rows in enumerate(batches):
+            if i:
+                # bytes == split fits one bucket; then a split of
+                # ceil(bytes / 2N) needs exactly 2N buckets
+                per = 1 if i == 1 else 2 * seen[-1]
+                spark.conf.set(_SPLIT_KEY, str(-(-_state_bytes(spark, path) // per)))
+            n = fit_state_buckets(spark, path)
+            merge_lww_bucketed(spark, spark.createDataFrame(rows, _KV_SCHEMA), path, "k",
+                               num_buckets=n)
+            seen.append(n)
+            merged += rows
+            assert _state_rows(spark, path) == _lww_truth(spark, merged)
+            buckets = [int(d.split("=")[1]) for d in os.listdir(path)
+                       if d.startswith("_bucket=")]
+            assert buckets and all(b < n for b in buckets), (n, buckets)
+            assert _pinned_buckets(path) == n
+    finally:
+        spark.conf.set(_SPLIT_KEY, prev_split)
+    assert seen == [1, 1, 2, 4]
+    assert not os.path.exists(path + ".compact_tmp")
+    assert not os.path.exists(path + ".compact_old")
+    with pytest.raises(ValueError, match="num_buckets"):
+        merge_lww_bucketed(spark, spark.createDataFrame([(1, "x", 9999)], _KV_SCHEMA), path,
+                           "k", num_buckets=2)
+
+
+@pytest.mark.parametrize("failure", ["crash", "refused"])
+def test_rebucket_second_rename_failure_recovers_old_state(spark, workdir, monkeypatch,
+                                                           failure):
+    """The rebucket's swap fails at its second rename, either by a
+    crash (the old state is parked at ``.compact_old``) or by a refused
+    rename (rolled back, the staged dir left behind). The call raises;
+    the next read recovers the pre-rebucket state, and a rerun
+    finishes the rebucket."""
+    import os
+
+    from bigdataflink_spark.sources import formats
+    from bigdataflink_spark.streaming.merge import fit_state_buckets, merge_lww_bucketed
+
+    path = f"{workdir}/rebucket_{failure}"
+    rows = [(k % 150, f"v{k}", k) for k in range(200)]
+    merge_lww_bucketed(spark, spark.createDataFrame(rows, _KV_SCHEMA), path, "k",
+                       num_buckets=1)
+    truth = _lww_truth(spark, rows)
+    real_hadoop_fs = formats.hadoop_fs
+
+    class SecondRenameFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            if src.getName().endswith(".compact_tmp"):
+                if failure == "crash":
+                    raise OSError("injected crash between the renames")
+                return False
+            return self._fs.rename(src, dst)
+
+    def failing_hadoop_fs(spark_, p):
+        fs, hpath, jvm = real_hadoop_fs(spark_, p)
+        return SecondRenameFails(fs), hpath, jvm
+
+    prev_split = spark.conf.get(_SPLIT_KEY)
+    spark.conf.set(_SPLIT_KEY, str(-(-_state_bytes(spark, path) // 2)))
+    try:
+        monkeypatch.setattr(formats, "hadoop_fs", failing_hadoop_fs)
+        with pytest.raises(OSError):
+            fit_state_buckets(spark, path)
+        monkeypatch.undo()
+        assert os.path.exists(path) == (failure == "refused")
+        assert _state_rows(spark, path) == truth
+        assert _pinned_buckets(path) == 1
+        assert not os.path.exists(path + ".compact_tmp")
+        assert not os.path.exists(path + ".compact_old")
+        assert fit_state_buckets(spark, path) == 2
+    finally:
+        spark.conf.set(_SPLIT_KEY, prev_split)
+    assert _state_rows(spark, path) == truth
+    assert _pinned_buckets(path) == 2
+
+
+def test_one_bucket_merge_runs_no_collect(spark, workdir, monkeypatch):
+    """A one-bucket state's only bucket is the dirty one: merging into
+    it must not collect the dirty-bucket list to the driver."""
+    from bigdataflink_spark.streaming.merge import merge_lww_bucketed
+
+    path = f"{workdir}/one_bucket_state"
+    first = [(k, f"a{k}", k) for k in range(50)]
+    second = [(k, f"b{k}", 100 + k) for k in range(25, 75)]
+    merge_lww_bucketed(spark, spark.createDataFrame(first, _KV_SCHEMA), path, "k",
+                       num_buckets=1)
+    incoming = spark.createDataFrame(second, _KV_SCHEMA)
+
+    def no_collect(self):
+        raise AssertionError("one-bucket merge collected to the driver")
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # an abstract base that the classic implementation overrides)
+    monkeypatch.setattr(type(incoming), "collect", no_collect)
+    merge_lww_bucketed(spark, incoming, path, "k", num_buckets=1)
+    monkeypatch.undo()
+    assert _state_rows(spark, path) == _lww_truth(spark, first + second)
+
+
+def test_fit_state_buckets_small_state_is_noop(spark, workdir):
+    """A new state gets one bucket, and a state below one split keeps
+    its N (1, or a larger pinned N: N never shrinks); neither probe
+    writes anything."""
+    import os
+
+    from bigdataflink_spark.streaming.merge import fit_state_buckets, merge_lww_bucketed
+
+    def listing(p):
+        return sorted(
+            (os.path.join(dp, f), os.stat(os.path.join(dp, f)).st_mtime_ns)
+            for dp, _, fs in os.walk(p)
+            for f in fs
+        )
+
+    new = f"{workdir}/small_new"
+    assert fit_state_buckets(spark, new) == 1
+    assert not os.path.exists(new)
+    for n in (1, 4):
+        path = f"{workdir}/small_{n}"
+        rows = [(k, f"v{k}", k) for k in range(20)]
+        merge_lww_bucketed(spark, spark.createDataFrame(rows, _KV_SCHEMA), path, "k",
+                           num_buckets=n)
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        assert _state_bytes(spark, path) < split
+        before = listing(path)
+        assert fit_state_buckets(spark, path) == n
+        assert listing(path) == before
+        assert not os.path.exists(path + ".compact_tmp")
+
+
 def test_dead_letter_sink_persists_malformed_records(spark, workdir):
     """A malformed payload must land in the dead-letter parquet (with
     the raw line preserved) while the pipeline completes and builds
