@@ -59,6 +59,25 @@ def read_json(fs, jvm, path) -> dict:
     return json.loads(raw)
 
 
+def publish_json(fs, jvm, tmp: str, final: str, record: dict) -> bool:
+    """Publish the small JSON ``record`` at the fresh name ``final``:
+    write it to ``tmp``, then one rename (atomic on local FS and HDFS),
+    so a reader never sees a partial record and a crash before the
+    rename leaves only the invisible temp. Returns the rename's result
+    (False: ``final`` was taken, e.g. a lost compare-and-set); a failed
+    rename deletes ``tmp``."""
+    Path = jvm.org.apache.hadoop.fs.Path
+    out = fs.create(Path(tmp), True)
+    try:
+        out.write(bytearray(json.dumps(record).encode("utf-8")))
+    finally:
+        out.close()
+    if fs.rename(Path(tmp), Path(final)):
+        return True
+    fs.delete(Path(tmp), False)
+    return False
+
+
 def read_any(
     spark: SparkSession,
     path: str,

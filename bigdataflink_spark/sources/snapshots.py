@@ -77,12 +77,11 @@ at the call site.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataflink_spark.sources.formats import hadoop_fs as _fs
+from bigdataflink_spark.sources.formats import publish_json
 from bigdataflink_spark.sources.formats import read_json as _read_json
 
 LOG_DIR = "_log"
@@ -174,27 +173,12 @@ def _publish_checkpoint(
     caller re-reads the log and retries at the next seq; the loser's
     temp is removed."""
     fs, _, jvm = _fs(spark, f"{table}/{LOG_DIR}")
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{table}/{LOG_DIR}/.ckpt-{new_seq:08d}.json.tmp"
+    return publish_json(
+        fs, jvm,
+        f"{table}/{LOG_DIR}/.ckpt-{new_seq:08d}.json.tmp",
+        f"{table}/{LOG_DIR}/ckpt-{new_seq:08d}.json",
+        {"seq": new_seq, "upto": upto, "versions": versions},
     )
-    final = jvm.org.apache.hadoop.fs.Path(
-        f"{table}/{LOG_DIR}/ckpt-{new_seq:08d}.json"
-    )
-    out = fs.create(tmp, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"seq": new_seq, "upto": upto, "versions": versions}
-                ).encode("utf-8")
-            )
-        )
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        return False
-    return True
 
 
 def checkpoint_log(spark: SparkSession, table: str) -> int | None:
@@ -246,18 +230,10 @@ def _append_commit_record(spark: SparkSession, table: str, record: dict) -> None
     version = record["version"]
     fs, log_root, jvm = _fs(spark, f"{table}/{LOG_DIR}")
     fs.mkdirs(log_root)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{table}/{LOG_DIR}/.v-{version:08d}.json.tmp"
-    )
-    final = jvm.org.apache.hadoop.fs.Path(
-        f"{table}/{LOG_DIR}/v-{version:08d}.json"
-    )
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(record, indent=1).encode("utf-8")))
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
+    final = f"{table}/{LOG_DIR}/v-{version:08d}.json"
+    if not publish_json(
+        fs, jvm, f"{table}/{LOG_DIR}/.v-{version:08d}.json.tmp", final, record
+    ):
         raise IOError(f"snapshot commit rename failed for {final}")
 
 
@@ -300,19 +276,12 @@ def _try_claim(
 
     fs, log_root, jvm = _fs(spark, f"{table}/{LOG_DIR}")
     fs.mkdirs(log_root)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{table}/{LOG_DIR}/.claim-{version:08d}.{_uuid.uuid4().hex}.tmp"
+    return publish_json(
+        fs, jvm,
+        f"{table}/{LOG_DIR}/.claim-{version:08d}.{_uuid.uuid4().hex}.tmp",
+        _claim_path(table, version),
+        {"token": token},
     )
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps({"token": token}).encode("utf-8")))
-    finally:
-        out.close()
-    final = jvm.org.apache.hadoop.fs.Path(_claim_path(table, version))
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        return False
-    return True
 
 
 def _claim_token(spark: SparkSession, table: str, version: int) -> str | None:

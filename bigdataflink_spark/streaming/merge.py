@@ -1,24 +1,32 @@
 """Bucketed MERGE-on-key state store (plain-parquet approximation of
-Delta/Iceberg ``MERGE INTO``).
+Delta/Iceberg ``MERGE INTO``) — the one store behind every upsert
+target of the streaming layer.
 
 A naive state sink rewrites the WHOLE state table per micro-batch
 (the pipeline's original design) — correct, but O(state) write
 amplification: at 100 TB a 1k-row batch would rewrite the full fact
-table. This module keeps the same last-write-wins semantics
-(reference: ``ON CONFLICT … DO UPDATE``, flink/stream_to_star.py:
-116-121) with O(dirty buckets) amplification instead — it IS the
-pipeline's state sink (streaming/pipeline.py::upsert_star_batch):
+table. This module keeps the reference's upsert semantics (``ON
+CONFLICT … DO UPDATE``, flink/stream_to_star.py:116-121) with
+O(dirty buckets) amplification instead:
 
 * state lives partitioned by ``_bucket = pmod(hash(key), N)``;
 * a micro-batch only touches the buckets its keys hash into —
   existing rows of those buckets are read (partition-pruned scan),
-  unioned with the batch, LWW-reduced, and written back via DYNAMIC
-  partition overwrite, which replaces only the dirty partitions;
+  folded with the batch, and written back via DYNAMIC partition
+  overwrite, which replaces only the dirty partitions;
 * clean buckets are never read, never rewritten — their files are
   bit-identical afterwards (asserted in tests via mtime).
 
-Idempotency is unchanged: per-key ``arrival_seq`` travels in state, so
-a replayed batch converges to the same winners (SURVEY.md §2.9 T3).
+:func:`merge_bucketed` owns that layout; only the fold differs per
+store (Structured Streaming's view of state as an idempotent fold of
+each batch). It serves two stores:
+
+* the star's last-write-wins state (:func:`merge_lww_bucketed`, the
+  sink of streaming/pipeline.py::upsert_star_batch): one row per key,
+  and per-key ``arrival_seq`` travels in state, so a replayed batch
+  converges to the same winners (SURVEY.md §2.9 T3);
+* the SCD2 change log (streaming/scd2.py::merge_scd2_batch): several
+  rows per key, re-collapsed per batch behind a drop-late gate.
 
 Thread safety: merges into DISJOINT state dirs may run concurrently
 from several threads of one session (the pipeline merges its seven
@@ -37,9 +45,9 @@ session's scan split size (``spark.sql.files.maxPartitionBytes``,
 fits. Below one split, extra buckets prune nothing worth having: the
 whole state is one scan split, and each bucket only adds a file, a
 partition commit and scan overhead to every merge. The rebucket is a
-full LWW rewrite into a staged sibling that carries its own metadata,
-swapped in by ``sources/formats.swap_in_staged``, the two-rename swap
-``compact_dir`` also uses; every state probe here runs
+re-hash of every row into a staged sibling that carries its own
+metadata, swapped in by ``sources/formats.swap_in_staged``, the
+two-rename swap ``compact_dir`` also uses; every state probe here runs
 ``recover_compact_crash`` first, so a crash at any point leaves either
 the old or the new state. A real lakehouse MERGE only improves constants
 (file-level instead of bucket-level pruning).
@@ -48,6 +56,7 @@ the old or the new state. A real lakehouse MERGE only improves constants
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,7 +102,9 @@ def fit_state_buckets(spark: SparkSession, path: str) -> int:
     existing state keeps its pinned N while its bytes fit in N scan
     splits; past that it is rebucketed here, before the merge, to the
     smallest power of two that fits, and the new N is returned. N never
-    shrinks.
+    shrinks. The rebucket re-hashes every row as it is: LWW state
+    already holds one row per key, and a change log's several rows per
+    key must all survive.
     """
     recover_compact_crash(spark, path)
     meta = _read_meta(spark, path)
@@ -107,41 +118,43 @@ def fit_state_buckets(spark: SparkSession, path: str) -> int:
         need *= 2
     if need <= meta["num_buckets"]:
         return meta["num_buckets"]
-    # full LWW rewrite into the staged sibling, then the two-rename swap
-    key, seq_col = meta["key"], meta["seq_col"]
-    state = _state_df(spark, path, meta).drop(BUCKET_COL)
-    winners = _bucketed(lww_dedup(state, [key], seq_col), key, need)
-    _write_state(spark, winners, staged_dir(path), key, seq_col, need)
+    # full re-hash into the staged sibling (one file per bucket), then
+    # the two-rename swap
+    key = meta["key"]
+    state = _bucketed(_state_df(spark, path, meta).drop(BUCKET_COL), key, need)
+    _write_state(spark, state.repartition(BUCKET_COL), staged_dir(path), key, need)
     swap_in_staged(spark, path)
     return need
 
 
-def merge_lww_bucketed(
+def merge_bucketed(
     spark: SparkSession,
     incoming: DataFrame,
     path: str,
     key: str,
-    seq_col: str = "arrival_seq",
-    num_buckets: int = 32,
+    num_buckets: int,
+    fold: Callable[[DataFrame | None, DataFrame], DataFrame],
 ) -> None:
-    """Upsert ``incoming`` into the bucketed LWW state at ``path``.
+    """Fold ``incoming`` into the bucketed state at ``path``.
 
-    ``incoming`` may hold several rows per key: one LWW pass over
-    existing ∪ incoming picks the same winners as deduplicating the
-    batch first. Only the buckets containing incoming keys are read
-    and rewritten; a one-bucket state's only bucket is the dirty one,
-    so it runs no dirty-bucket job.
+    ``fold(existing, incoming)`` returns the new rows of the dirty
+    buckets: ``existing`` holds their current rows (None for a new
+    state) and ``incoming`` the batch, both with the bucket column. Only
+    the buckets containing incoming keys are read and rewritten; a
+    one-bucket state's only bucket is the dirty one, so it runs no
+    dirty-bucket job.
     State existence is probed through the Hadoop FileSystem API (a
     driver-local os.path check is always false on HDFS/S3 → would
     silently drop prior state). The bucket count is pinned in
     ``_bdf_state_meta.json`` inside the state dir: merging with a
-    different ``num_buckets`` would leave stale winners in old
-    buckets, so a mismatch fails fast instead of corrupting state
+    different ``num_buckets`` would leave stale rows in old buckets,
+    so a mismatch fails fast instead of corrupting state
     (:func:`fit_state_buckets` changes N by a full rebucket).
     """
     recover_compact_crash(spark, path)
     inc = _bucketed(incoming, key, num_buckets)
     fs, hpath, _ = hadoop_fs(spark, path)
+    existing = None
     if fs.exists(hpath):
         meta = _read_meta(spark, path)
         if meta is not None and meta.get("num_buckets") != num_buckets:
@@ -155,14 +168,33 @@ def merge_lww_bucketed(
         if num_buckets > 1:
             dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
             existing = existing.filter(F.col(BUCKET_COL).isin(dirty))
-        merged = existing.unionByName(inc)
-    else:
-        merged = inc
-    winners = lww_dedup(merged, [key], seq_col)
     # cut lineage to the files being overwritten (read-then-overwrite
     # of the same path is otherwise undefined)
-    winners = winners.localCheckpoint(eager=True)
-    _write_state(spark, winners, path, key, seq_col, num_buckets)
+    rows = fold(existing, inc).localCheckpoint(eager=True)
+    _write_state(spark, rows, path, key, num_buckets)
+
+
+def merge_lww_bucketed(
+    spark: SparkSession,
+    incoming: DataFrame,
+    path: str,
+    key: str,
+    seq_col: str = "arrival_seq",
+    num_buckets: int = 32,
+) -> None:
+    """Upsert ``incoming`` into the bucketed LWW state at ``path``
+    (:func:`merge_bucketed` with an LWW fold).
+
+    ``incoming`` may hold several rows per key: one LWW pass over
+    existing ∪ incoming picks the same winners as deduplicating the
+    batch first.
+    """
+
+    def lww(existing: DataFrame | None, inc: DataFrame) -> DataFrame:
+        merged = inc if existing is None else existing.unionByName(inc)
+        return lww_dedup(merged, [key], seq_col)
+
+    merge_bucketed(spark, incoming, path, key, num_buckets, lww)
 
 
 def _bucketed(df: DataFrame, key: str, num_buckets: int) -> DataFrame:
@@ -170,13 +202,12 @@ def _bucketed(df: DataFrame, key: str, num_buckets: int) -> DataFrame:
 
 
 def _write_state(
-    spark: SparkSession, winners: DataFrame, path: str, key: str, seq_col: str,
-    num_buckets: int,
+    spark: SparkSession, rows: DataFrame, path: str, key: str, num_buckets: int
 ) -> None:
-    """Overwrite the buckets present in ``winners`` (dynamic partition
+    """Overwrite the buckets present in ``rows`` (dynamic partition
     overwrite, set per write), then pin the layout in the metadata."""
     (
-        winners.write.mode("overwrite")
+        rows.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BUCKET_COL)
         .parquet(path)
@@ -187,11 +218,10 @@ def _write_state(
         {
             "num_buckets": num_buckets,
             "key": key,
-            "seq_col": seq_col,
             # pins the read schema: no inference job per read, and an
             # all-empty state (a dim no record has fed yet: zero
             # partition dirs on disk) still reads back with its schema
-            "schema": winners.schema.json(),
+            "schema": rows.schema.json(),
         },
     )
 

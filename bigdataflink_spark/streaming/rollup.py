@@ -65,12 +65,10 @@ using the magic committer.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdataflink_spark.sources.formats import hadoop_fs, read_json
+from bigdataflink_spark.sources.formats import hadoop_fs, publish_json, read_json
 from bigdataflink_spark.streaming.statestore import start_foreach_batch
 
 COMMIT_DIR = "_compactions"
@@ -199,24 +197,13 @@ def _commit_gen(
     fs, _, jvm = hadoop_fs(spark, parts_dir)
     commit_root = jvm.org.apache.hadoop.fs.Path(f"{parts_dir}/{COMMIT_DIR}")
     fs.mkdirs(commit_root)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{parts_dir}/{COMMIT_DIR}/.gen-{new_gen}.json.tmp"
-    )
-    final = jvm.org.apache.hadoop.fs.Path(
-        f"{parts_dir}/{COMMIT_DIR}/gen-{new_gen}.json"
-    )
-    out = fs.create(tmp, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"gen": new_gen, "superseded_max_batch": new_max}
-                ).encode("utf-8")
-            )
-        )
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
+    final = f"{parts_dir}/{COMMIT_DIR}/gen-{new_gen}.json"
+    if not publish_json(
+        fs, jvm,
+        f"{parts_dir}/{COMMIT_DIR}/.gen-{new_gen}.json.tmp",
+        final,
+        {"gen": new_gen, "superseded_max_batch": new_max},
+    ):
         raise IOError(f"commit rename failed for {final}")
 
 

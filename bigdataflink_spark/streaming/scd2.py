@@ -8,7 +8,9 @@ The reference keeps only the LATEST dimension row per key
 (``ON CONFLICT … DO UPDATE``, flink/stream_to_star.py:116-121);
 this maintainer keeps the full versioned history while staying
 incremental: state is the per-key CHANGE LOG (one row per version
-start), bucketed like streaming/merge.py's LWW store, so each
+start), merged through streaming/merge.py's bucketed store
+(``merge_bucketed`` with this module's gate + re-collapse fold, N
+sized from the log's bytes by ``fit_state_buckets``), so each
 micro-batch reads and rewrites only the buckets its keys hash into
 — O(dirty buckets) write amplification, never O(history).
 
@@ -40,18 +42,21 @@ just the next change row appearing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bigdataflink_spark.sources.formats import hadoop_fs
 from bigdataflink_spark.streaming.merge import (
-    BUCKET_COL,
-    _read_meta,
-    _state_df,
-    _write_meta,
+    fit_state_buckets,
+    merge_bucketed,
+    read_state,
 )
 from bigdataflink_spark.streaming.statestore import start_foreach_batch
+
+
+def _obs(us: str, seq: str) -> Column:
+    """An observation's (ts, seq) position, ordered as a struct."""
+    return F.struct(F.col(us).alias("_f_us"), F.col(seq).alias("_f_seq"))
 
 
 def merge_scd2_batch(
@@ -62,7 +67,6 @@ def merge_scd2_batch(
     attr_col: str,
     ts_col: str,
     tiebreak_col: str,
-    num_buckets: int = 32,
 ) -> int:
     """Merge one micro-batch of observations (key, attr, ts, tiebreak)
     into the bucketed SCD2 change-log state at ``path``.
@@ -71,115 +75,73 @@ def merge_scd2_batch(
     before the key's observed frontier — see module docstring for why
     they cannot be honored incrementally).
     """
-    inc = batch.select(
+    observations = batch.select(
         F.col(key_col),
         F.col(attr_col),
         # cast handles TIMESTAMP_NTZ sources (naive-as-UTC under the
         # engine-wide UTC session contract); plain TIMESTAMP is a no-op
         F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_ts_us"),
         F.col(tiebreak_col).cast("long").alias("_seq"),
-    ).withColumn(BUCKET_COL, F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets)))
-
-    fs, hpath, _ = hadoop_fs(spark, path)
+    )
     n_late = 0
-    old_frontier = None
-    if fs.exists(hpath):
-        meta = _read_meta(spark, path)
-        if meta is not None and meta.get("num_buckets") != num_buckets:
-            raise ValueError(
-                f"SCD2 state at {path} was bucketed with "
-                f"num_buckets={meta.get('num_buckets')}; merging with "
-                f"{num_buckets} would corrupt it."
+
+    def recollapse(existing: DataFrame | None, inc: DataFrame) -> DataFrame:
+        nonlocal n_late
+        obs = _obs("_ts_us", "_seq")
+        old_frontier = None
+        if existing is not None:
+            # drop-late gate vs the OBSERVED frontier (every state row of
+            # a key carries the same (_obs_us, _obs_seq)); legacy state
+            # without the columns falls back to the change-log max
+            frontier = (
+                _obs("_obs_us", "_obs_seq")
+                if "_obs_us" in existing.columns
+                else obs
             )
-        dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
-        existing = _state_df(spark, path, meta).filter(F.col(BUCKET_COL).isin(dirty))
-        # drop-late gate vs the OBSERVED frontier (every state row of a
-        # key carries the same (_obs_us, _obs_seq)); legacy state
-        # without the columns falls back to the change-log max
-        if "_obs_us" in existing.columns:
             old_frontier = existing.groupBy(key_col).agg(
-                F.max(
-                    F.struct(
-                        F.col("_obs_us").alias("_f_us"),
-                        F.col("_obs_seq").alias("_f_seq"),
-                    )
-                ).alias("_frontier")
+                F.max(frontier).alias("_frontier")
             )
             existing = existing.drop("_obs_us", "_obs_seq")
+            gated = inc.join(F.broadcast(old_frontier), key_col, "left")
+            n_late = gated.filter(obs < F.col("_frontier")).count()
+            inc = gated.filter(
+                F.col("_frontier").isNull() | (obs >= F.col("_frontier"))
+            ).drop("_frontier")
+            merged = existing.unionByName(inc)
         else:
-            old_frontier = existing.groupBy(key_col).agg(
-                F.max(
-                    F.struct(
-                        F.col("_ts_us").alias("_f_us"),
-                        F.col("_seq").alias("_f_seq"),
-                    )
-                ).alias("_frontier")
-            )
-        gated = inc.join(F.broadcast(old_frontier), key_col, "left")
-        obs = F.struct(
-            F.col("_ts_us").alias("_f_us"), F.col("_seq").alias("_f_seq")
-        )
-        late = gated.filter(obs < F.col("_frontier"))
-        n_late = late.count()
-        inc = gated.filter(
-            F.col("_frontier").isNull() | (obs >= F.col("_frontier"))
-        ).drop("_frontier")
-        merged = existing.unionByName(inc)
-    else:
-        merged = inc
+            merged = inc
 
-    # re-collapse to the change log: first row per key, then every
-    # NULL-safe attr change (state rows re-qualify identically, so a
-    # replayed batch converges — idempotent like the LWW merge)
-    w = Window.partitionBy(key_col).orderBy(F.asc("_ts_us"), F.asc("_seq"))
-    changes = (
-        merged.withColumn("_prev", F.lag(attr_col).over(w))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(
-            (F.col("_rn") == 1)
-            | ~F.col(attr_col).eqNullSafe(F.col("_prev"))
+        # re-collapse to the change log: first row per key, then every
+        # NULL-safe attr change (state rows re-qualify identically, so
+        # a replayed batch converges — idempotent like the LWW merge)
+        w = Window.partitionBy(key_col).orderBy(F.asc("_ts_us"), F.asc("_seq"))
+        changes = (
+            merged.withColumn("_prev", F.lag(attr_col).over(w))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(
+                (F.col("_rn") == 1)
+                | ~F.col(attr_col).eqNullSafe(F.col("_prev"))
+            )
+            .drop("_prev", "_rn")
         )
-        .drop("_prev", "_rn")
-    )
-    # advance the observed frontier: max over everything merged this
-    # round, lifted by the previous frontier (which may exceed the
-    # change-log max when same-attr observations collapsed away)
-    batch_max = merged.groupBy(key_col).agg(
-        F.max(
-            F.struct(F.col("_ts_us").alias("_f_us"), F.col("_seq").alias("_f_seq"))
-        ).alias("_bmax")
-    )
-    if old_frontier is not None:
-        frontier_new = (
-            batch_max.join(old_frontier, key_col, "left")
-            .select(
+        # advance the observed frontier: max over everything merged
+        # this round, lifted by the previous frontier (which may exceed
+        # the change-log max when same-attr observations collapsed away)
+        frontier_new = merged.groupBy(key_col).agg(F.max(obs).alias("_bmax"))
+        if old_frontier is not None:
+            frontier_new = frontier_new.join(old_frontier, key_col, "left").select(
                 F.col(key_col),
                 F.greatest(F.col("_bmax"), F.col("_frontier")).alias("_bmax"),
             )
+        return changes.join(frontier_new, key_col, "left").select(
+            *changes.columns,
+            F.col("_bmax._f_us").alias("_obs_us"),
+            F.col("_bmax._f_seq").alias("_obs_seq"),
         )
-    else:
-        frontier_new = batch_max
-    changes = changes.join(frontier_new, key_col, "left").select(
-        *[c for c in changes.columns],
-        F.col("_bmax._f_us").alias("_obs_us"),
-        F.col("_bmax._f_seq").alias("_obs_seq"),
-    )
-    changes = changes.localCheckpoint(eager=True)
-    (
-        changes.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
-    )
-    _write_meta(
-        spark,
-        path,
-        {
-            "num_buckets": num_buckets,
-            "key": key_col,
-            "seq_col": tiebreak_col,
-            "schema": changes.schema.json(),
-        },
+
+    merge_bucketed(
+        spark, observations, path, key_col, fit_state_buckets(spark, path),
+        recollapse,
     )
     return n_late
 
@@ -190,7 +152,7 @@ def read_scd2_history(
     """The queryable history: change-log state + one lead() window →
     (key, attr, valid_from_us, valid_to_us, version), the exact
     output schema of operators/scd.scd2_history."""
-    state = _state_df(spark, path, _read_meta(spark, path))
+    state = read_state(spark, path)
     w = Window.partitionBy(key_col).orderBy(F.asc("_ts_us"), F.asc("_seq"))
     return state.select(
         F.col(key_col),
@@ -210,7 +172,6 @@ def run_scd2_stream(
     attr_col: str,
     ts_col: str,
     tiebreak_col: str,
-    num_buckets: int = 32,
 ) -> None:
     """Drive the maintainer over a stream via foreachBatch
     (availableNow). Checkpointing makes batch replay safe: a replayed
@@ -218,8 +179,7 @@ def run_scd2_stream(
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
         merge_scd2_batch(
-            spark, batch, state_path, key_col, attr_col, ts_col,
-            tiebreak_col, num_buckets,
+            spark, batch, state_path, key_col, attr_col, ts_col, tiebreak_col
         )
 
     start_foreach_batch(stream, checkpoint, _apply).awaitTermination()

@@ -1195,6 +1195,70 @@ def test_streaming_scd2_observed_frontier_gate(spark, tmp_path):
     assert hist2 == [("A", 1), ("B", 2)]
 
 
+def test_scd2_change_log_grows_by_staged_rebucket(spark, tmp_path):
+    """The SCD2 change log sizes its buckets like the LWW state: it
+    starts with one bucket and, as the split size drops below its
+    bytes, is re-hashed to 2 and then 4 buckets. Every version row
+    survives the rebucket: after every batch the history equals the
+    one-shot scd2_history over all rows so far, every bucket dir is
+    below N, and the metadata pins N."""
+    import os
+    from datetime import datetime, timedelta
+
+    from bigdataflink_spark.operators.scd import scd2_history
+    from bigdataflink_spark.streaming.scd2 import (
+        merge_scd2_batch,
+        read_scd2_history,
+    )
+
+    schema = "k long, attr string, ts timestamp, seq long"
+    # CDC contract: every batch is later in event time than the one
+    # before; keys overlap across batches and attrs repeat, so the log
+    # holds several rows per key and collapses same-attr runs
+    batches = [
+        [
+            (k, f"a{(k * 7 + i * (k % 3)) % 3}",
+             datetime(2024, 1, 1) + timedelta(hours=1000 * i + k), 1000 * i + k)
+            for k in range(60 * i, 60 * i + 100)
+        ]
+        for i in range(4)
+    ]
+    path = str(tmp_path / "scd2_grown")
+    prev_split = spark.conf.get(_SPLIT_KEY)
+    seen, observed = [], []
+    try:
+        for i, rows in enumerate(batches):
+            if i:
+                per = 1 if i == 1 else 2 * seen[-1]
+                spark.conf.set(_SPLIT_KEY, str(-(-_state_bytes(spark, path) // per)))
+            n_late = merge_scd2_batch(
+                spark, spark.createDataFrame(rows, schema), path, "k", "attr", "ts",
+                "seq",
+            )
+            assert n_late == 0
+            n = _pinned_buckets(path)
+            seen.append(n)
+            observed += rows
+            got = sorted(
+                tuple(r) for r in read_scd2_history(spark, path, "k", "attr").collect()
+            )
+            want = sorted(
+                tuple(r)
+                for r in scd2_history(
+                    spark.createDataFrame(observed, schema), "k", "attr", "ts", "seq"
+                ).collect()
+            )
+            assert got == want
+            buckets = [int(d.split("=")[1]) for d in os.listdir(path)
+                       if d.startswith("_bucket=")]
+            assert buckets and all(b < n for b in buckets), (n, buckets)
+    finally:
+        spark.conf.set(_SPLIT_KEY, prev_split)
+    assert seen == [1, 1, 2, 4]
+    assert not os.path.exists(path + ".compact_tmp")
+    assert not os.path.exists(path + ".compact_old")
+
+
 @pytest.mark.slow
 def test_property_merge_and_scd2_any_slicing_converges(spark, tmp_path):
     """Property (hypothesis): for RANDOM batch slicings, orderings,
@@ -1239,6 +1303,7 @@ def test_property_merge_and_scd2_any_slicing_converges(spark, tmp_path):
     )
 
     case_n = [0]
+    scd2_buckets = []
 
     @settings(
         max_examples=5,
@@ -1285,8 +1350,8 @@ def test_property_merge_and_scd2_any_slicing_converges(spark, tmp_path):
                 "attr",
                 "ts",
                 "seq",
-                num_buckets=4,
             )
+        scd2_buckets.append(_pinned_buckets(sp))
         got = sorted(tuple(r) for r in read_state(spark, mp).collect())
         assert got == one_shot
         hist = sorted(
@@ -1294,7 +1359,15 @@ def test_property_merge_and_scd2_any_slicing_converges(spark, tmp_path):
         )
         assert hist == scd_truth
 
-    check()
+    # a split far below the change log's bytes makes fit_state_buckets
+    # grow it past one bucket, so the slicings exercise a multi-bucket log
+    prev_split = spark.conf.get(_SPLIT_KEY)
+    spark.conf.set(_SPLIT_KEY, "1024")
+    try:
+        check()
+    finally:
+        spark.conf.set(_SPLIT_KEY, prev_split)
+    assert max(scd2_buckets) > 1, scd2_buckets
 
 
 def _rollup_totals(spark, parts_dir):
