@@ -11,7 +11,8 @@ The full per-query map is also written to BENCH_DETAIL.json.
 
 Each query is forced with a full-result count (no collect of payload;
 the driver measures plan+execute wall time). A warmup query absorbs
-JVM/codegen startup so numbers reflect steady-state throughput.
+JVM/codegen startup so numbers reflect steady-state throughput. All
+timing goes through bigdataflink_spark/measure.py.
 """
 
 from __future__ import annotations
@@ -19,9 +20,9 @@ from __future__ import annotations
 import itertools
 import json
 import os
-import time
 
 from bigdataflink_spark import get_spark
+from bigdataflink_spark.measure import best_of, consume, mini_calib, warm_up
 from bigdataflink_spark.plans.queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -167,71 +168,47 @@ HEADLINE = [
 ]
 
 
+# continuity metric: the r1 bench recorded exactly this 29-query set
+# (BENCH_r01.json) — its subtotal is the number comparable across
+# rounds as the headline list grows.
+R1_SET = [
+    "q01_pricing_summary", "q02_revenue_by_region", "q03_top_customers",
+    "q04_priority_semi_join", "q06_ri_check", "q08_date_parts",
+    "q10_window_rank", "q11_json_extract", "q14_lww_dedup",
+    "q15_tumbling_window", "q17_session_window", "q20_dedup_exact",
+    "q21_minhash_lsh", "q22_simhash", "q24_embedding_topk",
+    "q26_ivf_topk", "q30_text_stats", "q33_fingerprint",
+    "q38_asof_join", "q39_range_join", "q42_salted_join",
+    "q44_corpus_pipeline", "q48_sessionize", "q49_embedding_lsh_neardup",
+    "q52_forecast_revenue", "q55_returned_items", "q56_nation_volume",
+    "q57_window_battery", "q62_large_orders",
+]
+
+
 def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warmup: JVM + codegen + parquet footer caches
-    QUERIES["q02_revenue_by_region"](spark, SF_DIR).count()
-
-    # Python-worker warmup (VERDICT r10 #2): the first codec-family
-    # Arrow stage otherwise pays n_workers × ~0.7 s importing the
-    # heavy operator modules (operators/multimodal is 5 kLoC) inside
-    # each forked worker, which on a loaded host can survive into
-    # run-2/3 of best-of-3 and masquerade as a plan regression
-    # (q212 r10: recorded 3.75-7.34 s vs 1.05 s warm). One pass with
-    # more tasks than workers pre-imports everything in the pool;
-    # workers are reused afterwards (spark.python.worker.reuse).
-    n_warm = int(os.environ.get("SPARK_GRAFT_CPUS", "32")) * 4
-
-    def _preimport(it):
-        import bigdataflink_spark.operators.jpeg_arith  # noqa: F401
-        import bigdataflink_spark.operators.multimodal  # noqa: F401
-        import bigdataflink_spark.operators.zstd  # noqa: F401
-
-        yield from it
-
-    spark.range(n_warm, numPartitions=n_warm).mapInPandas(
-        _preimport, "id long"
-    ).count()
+    warm_up(spark, SF_DIR)
 
     # hardware calibration: a fixed pure-JVM aggregation whose cost is
     # independent of this repo's code. Round-over-round comparisons
     # should normalize by this — the sandbox VM's speed varies between
     # rounds, and a uniform shift in calib_sec explains a uniform
     # shift in every query time.
-    c0 = time.perf_counter()
-    spark.range(200_000_000).selectExpr("sum(id * 3 % 7)").collect()
-    calib = round(time.perf_counter() - c0, 3)
+    calib = round(
+        best_of(
+            lambda: spark.range(200_000_000).selectExpr("sum(id * 3 % 7)").collect(), 1
+        ),
+        3,
+    )
 
     def _measure(name: str, reps: int) -> "tuple[float, float]":
-        """One measurement pass for a query: JVM GC, a per-query
-        mini-calib, then best-of-``reps`` wall. Returns (best_sec,
-        calib_sec in 200M-row units).
-
-        GC between queries (round 11): accumulated heap from 100+
-        queries in one shared JVM otherwise inflates late-suite
-        measurements by up to ×8 (q212 measured 5.5 s in-suite vs
-        0.66 s with GC'd runs of the identical prefix — suite
-        position, not the plan). Per-query LOCAL calibration
-        (round 11): the sandbox host's speed swings ±2.5× within one
-        bench run (measured calib 1.535 → 0.665 in minutes), so one
+        """(best-of-``reps`` seconds, the query's own mini-calib taken
+        right before its reps). Per-query calibration (round 11): one
         run-level calib can't normalize a query that landed in a slow
-        window — r10's q212 "regression" was exactly this. A 25M-row
-        mini-calib (~0.1 s) right before the reps, scaled to the
-        200M-row unit, gives the per-query denominator."""
-        spark._jvm.System.gc()
-        c = float("inf")
-        for _ in range(3):
-            c0 = time.perf_counter()
-            spark.range(25_000_000).selectExpr("sum(id * 3 % 7)").collect()
-            c = min(c, time.perf_counter() - c0)
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, SF_DIR).count()
-            best = min(best, time.perf_counter() - t0)
-        return best, c * 8.0
+        window — r10's q212 "regression" was exactly this."""
+        c = mini_calib(spark)
+        return best_of(lambda: consume(QUERIES[name](spark, SF_DIR), "count"), reps), c
 
     # best-of-3 per query (VERDICT r2 #4): run 1 pays one-off
     # plan/codegen compilation, runs 2-3 sample steady state twice so a
@@ -246,21 +223,6 @@ def main() -> None:
         local_calib[name] = round(c, 3)
         norms[name] = round(best / c, 3)
 
-    # continuity metric: the r1 bench recorded exactly this 29-query
-    # set (BENCH_r01.json) — its subtotal is the number comparable
-    # across rounds as the headline list grows.
-    r1_set = [
-        "q01_pricing_summary", "q02_revenue_by_region", "q03_top_customers",
-        "q04_priority_semi_join", "q06_ri_check", "q08_date_parts",
-        "q10_window_rank", "q11_json_extract", "q14_lww_dedup",
-        "q15_tumbling_window", "q17_session_window", "q20_dedup_exact",
-        "q21_minhash_lsh", "q22_simhash", "q24_embedding_topk",
-        "q26_ivf_topk", "q30_text_stats", "q33_fingerprint",
-        "q38_asof_join", "q39_range_join", "q42_salted_join",
-        "q44_corpus_pipeline", "q48_sessionize", "q49_embedding_lsh_neardup",
-        "q52_forecast_revenue", "q55_returned_items", "q56_nation_volume",
-        "q57_window_battery", "q62_large_orders",
-    ]
     # Second r1-set pass at run END, keeping per-query minima across
     # both passes (VERDICT r12 "What's wrong #2"): the r12 driver run
     # hit a ~13× host slowdown exactly while the r1 set ran early in
@@ -269,9 +231,7 @@ def main() -> None:
     # passes an hour of suite apart cannot both land in one contended
     # window, so min(start, end) — raw AND normalized independently —
     # is the self-exonerating record.
-    for name in r1_set:
-        if name not in times:
-            continue
+    for name in R1_SET:
         best, c = _measure(name, 2)
         if best < times[name]:
             times[name] = round(best, 3)
@@ -281,13 +241,11 @@ def main() -> None:
             local_calib[name] = round(c, 3)
 
     total = round(sum(times.values()), 3)
-    r1_subtotal = round(sum(times[q] for q in r1_set if q in times), 3)
+    r1_subtotal = round(sum(times[q] for q in R1_SET), 3)
     # the normalized subtotal uses PER-QUERY mini-calibs (each query's
     # seconds divided by the host speed measured seconds before it),
     # summed over the r1 set — units: 200M-row-calib multiples.
-    r1_subtotal_norm = round(
-        sum(norms[q] for q in r1_set if q in norms), 3
-    )
+    r1_subtotal_norm = round(sum(norms[q] for q in R1_SET), 3)
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     # The driver captures only the LAST ~2 KB of stdout; with 80+ query
     # entries the full map no longer fits, so round 6's headline was

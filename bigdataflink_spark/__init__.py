@@ -4,6 +4,7 @@ capabilities of the reference streaming star-schema ETL
 
 Layout:
     session        SparkSession factory with scale-oriented defaults
+    measure        the one timing core of bench.py and the tools/ probes
     functions/     column-expression library (cleanse/coerce semantics)
     sources/       batch + streaming sources and sinks
     operators/     dedup, similarity, text analysis, windows, multimodal

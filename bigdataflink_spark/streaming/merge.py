@@ -35,7 +35,10 @@ dynamic overwrite is the per-write ``partitionOverwriteMode`` option,
 so one thread can never restore ``static`` under another's write (a
 static overwrite with ``partitionBy`` deletes every clean bucket).
 State is read with the schema pinned in its metadata — no
-schema-inference job per merge.
+schema-inference job per merge. The metadata is published once, when a
+directory's first rows are written, by a temp + rename
+(``formats.publish_json``), and never rewritten: a crash inside the
+publish leaves only the ignored temp, never a torn metadata file.
 
 Scaling N: buckets play the role of Delta's file-level pruning, and
 each state derives its own N from its bytes (:func:`fit_state_buckets`).
@@ -60,10 +63,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from bigdataflink_spark.operators.dedup import lww_dedup
 from bigdataflink_spark.sources.formats import (
     hadoop_fs,
+    publish_json,
     read_json,
     recover_compact_crash,
     staged_dir,
@@ -84,14 +89,45 @@ def _read_meta(spark: SparkSession, path: str) -> dict | None:
     return read_json(fs, jvm, mpath)
 
 
-def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
+def _publish_meta(
+    spark: SparkSession, path: str, key: str, num_buckets: int, schema: StructType
+) -> None:
+    """Pin the layout of the state at ``path``, which has no metadata
+    yet: its first merge, or the staged dir of a rebucket, which
+    ``recover_compact_crash`` has just cleared. A first merge that died
+    before this publish left rows without metadata; the next merge reads
+    them by inference and publishes here."""
     fs, _, jvm = hadoop_fs(spark, path)
-    mpath = jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
-    stream = fs.create(mpath, True)
-    try:
-        stream.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        stream.close()
+    final = f"{path.rstrip('/')}/{_META_FILE}"
+    publish_json(
+        fs,
+        jvm,
+        final + ".tmp",  # underscore-led like the final name: not data
+        final,
+        {
+            "num_buckets": num_buckets,
+            "key": key,
+            # pins the read schema: no inference job per read, and an
+            # all-empty state (a dim no record has fed yet: zero
+            # partition dirs on disk) still reads back with its schema
+            "schema": _nullable(schema).json(),
+        },
+    )
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable: the form a
+    parquet read gives back whatever was written, so the first merge's
+    rows (often non-null) pin the same schema later merges see."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def fit_state_buckets(spark: SparkSession, path: str) -> int:
@@ -122,7 +158,9 @@ def fit_state_buckets(spark: SparkSession, path: str) -> int:
     # the two-rename swap
     key = meta["key"]
     state = _bucketed(_state_df(spark, path, meta).drop(BUCKET_COL), key, need)
-    _write_state(spark, state.repartition(BUCKET_COL), staged_dir(path), key, need)
+    staged = staged_dir(path)
+    _write_state(state.repartition(BUCKET_COL), staged)
+    _publish_meta(spark, staged, key, need, state.schema)
     swap_in_staged(spark, path)
     return need
 
@@ -146,15 +184,16 @@ def merge_bucketed(
     State existence is probed through the Hadoop FileSystem API (a
     driver-local os.path check is always false on HDFS/S3 → would
     silently drop prior state). The bucket count is pinned in
-    ``_bdf_state_meta.json`` inside the state dir: merging with a
-    different ``num_buckets`` would leave stale rows in old buckets,
-    so a mismatch fails fast instead of corrupting state
+    ``_bdf_state_meta.json`` inside the state dir, published by the
+    first merge and never rewritten: merging with a different
+    ``num_buckets`` would leave stale rows in old buckets, so a
+    mismatch fails fast instead of corrupting state
     (:func:`fit_state_buckets` changes N by a full rebucket).
     """
     recover_compact_crash(spark, path)
     inc = _bucketed(incoming, key, num_buckets)
     fs, hpath, _ = hadoop_fs(spark, path)
-    existing = None
+    existing = meta = None
     if fs.exists(hpath):
         meta = _read_meta(spark, path)
         if meta is not None and meta.get("num_buckets") != num_buckets:
@@ -171,7 +210,9 @@ def merge_bucketed(
     # cut lineage to the files being overwritten (read-then-overwrite
     # of the same path is otherwise undefined)
     rows = fold(existing, inc).localCheckpoint(eager=True)
-    _write_state(spark, rows, path, key, num_buckets)
+    _write_state(rows, path)
+    if meta is None:
+        _publish_meta(spark, path, key, num_buckets, rows.schema)
 
 
 def merge_lww_bucketed(
@@ -201,28 +242,14 @@ def _bucketed(df: DataFrame, key: str, num_buckets: int) -> DataFrame:
     return df.withColumn(BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(num_buckets)))
 
 
-def _write_state(
-    spark: SparkSession, rows: DataFrame, path: str, key: str, num_buckets: int
-) -> None:
+def _write_state(rows: DataFrame, path: str) -> None:
     """Overwrite the buckets present in ``rows`` (dynamic partition
-    overwrite, set per write), then pin the layout in the metadata."""
+    overwrite, set per write)."""
     (
         rows.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BUCKET_COL)
         .parquet(path)
-    )
-    _write_meta(
-        spark,
-        path,
-        {
-            "num_buckets": num_buckets,
-            "key": key,
-            # pins the read schema: no inference job per read, and an
-            # all-empty state (a dim no record has fed yet: zero
-            # partition dirs on disk) still reads back with its schema
-            "schema": rows.schema.json(),
-        },
     )
 
 
@@ -231,8 +258,6 @@ def _state_df(spark: SparkSession, path: str, meta: dict | None) -> DataFrame:
     is explicit: no schema-inference job, and a state with no data
     files yet reads back empty with its schema. State without metadata
     falls back to an inferred read."""
-    from pyspark.sql.types import StructType
-
     if meta is not None and "schema" in meta:
         schema = StructType.fromJson(json.loads(meta["schema"]))
         return spark.read.schema(schema).parquet(path)

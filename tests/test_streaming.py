@@ -604,6 +604,74 @@ def test_fit_state_buckets_small_state_is_noop(spark, workdir):
         assert not os.path.exists(path + ".compact_tmp")
 
 
+def test_state_metadata_is_published_once(spark, workdir):
+    """The first merge publishes the state metadata and later merges
+    never rewrite it: a rewrite in place can be torn by a crash, and a
+    torn metadata file fails every later read and merge. The pinned
+    schema is the one later reads give back (every field nullable),
+    although the first batch's columns are not nullable."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from bigdataflink_spark.streaming.merge import merge_lww_bucketed
+
+    path = f"{workdir}/meta_once"
+    meta = os.path.join(path, "_bdf_state_meta.json")
+
+    def batch(lo, seq):
+        return spark.range(lo, lo + 20).select(
+            F.col("id").alias("k"),
+            F.array(F.col("id")).alias("ids"),
+            F.struct(F.col("id").alias("x")).alias("st"),
+            (F.col("id") + seq).alias("arrival_seq"),
+        )
+
+    merge_lww_bucketed(spark, batch(0, 0), path, "k", num_buckets=4)
+    with open(meta, "rb") as f:
+        before = f.read()
+    mtime = os.stat(meta).st_mtime_ns
+    merge_lww_bucketed(spark, batch(10, 100), path, "k", num_buckets=4)
+    with open(meta, "rb") as f:
+        assert f.read() == before
+    assert os.stat(meta).st_mtime_ns == mtime
+    pinned = StructType.fromJson(json.loads(json.loads(before)["schema"]))
+    assert pinned == spark.read.parquet(path).schema
+
+
+def test_torn_metadata_publish_recovers_on_next_merge(spark, workdir, monkeypatch):
+    """A first merge that dies inside its metadata publish leaves its
+    rows and a partial temp: the state still reads, the next merge
+    completes and publishes the metadata, and no temp is left."""
+    import os
+
+    from bigdataflink_spark.streaming import merge
+
+    path = f"{workdir}/meta_torn"
+    first = [(k, f"a{k}", k) for k in range(30)]
+    second = [(k, f"b{k}", 100 + k) for k in range(20, 40)]
+
+    def torn_publish(fs, jvm, tmp, final, record):
+        out = fs.create(jvm.org.apache.hadoop.fs.Path(tmp), True)
+        out.write(bytearray(b'{"num_buck'))
+        out.close()
+        raise OSError("injected crash inside the metadata publish")
+
+    monkeypatch.setattr(merge, "publish_json", torn_publish)
+    with pytest.raises(OSError, match="injected"):
+        merge.merge_lww_bucketed(spark, spark.createDataFrame(first, _KV_SCHEMA), path, "k",
+                                 num_buckets=1)
+    monkeypatch.undo()
+    assert _state_rows(spark, path) == _lww_truth(spark, first)
+    assert merge.fit_state_buckets(spark, path) == 1
+    merge.merge_lww_bucketed(spark, spark.createDataFrame(second, _KV_SCHEMA), path, "k",
+                             num_buckets=1)
+    assert _state_rows(spark, path) == _lww_truth(spark, first + second)
+    assert _pinned_buckets(path) == 1
+    assert [f for f in os.listdir(path) if "tmp" in f] == []
+
+
 def test_dead_letter_sink_persists_malformed_records(spark, workdir):
     """A malformed payload must land in the dead-letter parquet (with
     the raw line preserved) while the pipeline completes and builds

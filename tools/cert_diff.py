@@ -4,7 +4,7 @@ correctness artifact and the repo's committed LOCAL sweep agree on
 every query they both grade (VERDICT r3 #7 — turn the "local sweep
 uses the driver's methodology" claim from an assertion into a check).
 
-    python tools/cert_diff.py CORRECTNESS_r03.json CORRECTNESS_LOCAL_r3.json
+    python tools/cert_diff.py CORRECTNESS_r13.json CORRECTNESS_LOCAL_r13.json
 
 For each query present in BOTH artifacts, asserts:
   * the pass bit matches (driver: rows/schema/hash all true; local:

@@ -2,10 +2,11 @@
 """Parallel-scaling probe (round 14, VERDICT r13 "Next round" #7):
 run ONE query at the ×100 tier in THIS process's Spark session and
 print a JSON line with the noop-consumed best-of-reps wall and a
-mini-calib. The suite-level c8/c32 bench ratio is ≈1 because sf0.1
-is fixed-per-job-overhead bound; this probe answers the real
-question — do the heavy DATA-BOUND paths parallelize? — by timing
-them on 100× the rows at two core counts.
+mini-calib (200M-row units, as in bench.py; SCALE.md's round-14 table
+recorded the raw 25M-row time, 1/8 of it). The suite-level c8/c32
+bench ratio is ≈1 because sf0.1 is fixed-per-job-overhead bound; this
+probe answers the real question — do the heavy DATA-BOUND paths
+parallelize? — by timing them on 100× the rows at two core counts.
 
 Usage (one process per measurement so sessions are fresh and the
 core count is honest):
@@ -25,11 +26,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, ".")
 
 from bigdataflink_spark import get_spark  # noqa: E402
+from bigdataflink_spark.measure import best_of, consume, mini_calib, warm_up  # noqa: E402
 from bigdataflink_spark.plans.queries import QUERIES  # noqa: E402
 
 DST100 = "/tmp/spark_graft_sf10"
@@ -40,31 +41,19 @@ REPS = int(os.environ.get("BENCH_REPS", "2"))
 def main() -> None:
     name = sys.argv[1]
     sf_dir = DST100_DOMAIN if len(sys.argv) > 2 and sys.argv[2] == "domain" else DST100
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("core-scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup: codegen + python workers
-    QUERIES["q02_revenue_by_region"](spark, "/root/testdata/sf0.1").count()
-    calib = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(25_000_000).selectExpr("sum(id * 3 % 7)").collect()
-        calib = min(calib, time.perf_counter() - t0)
-    best = float("inf")
-    for _ in range(REPS):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        best = min(best, time.perf_counter() - t0)
+    warm_up(spark, "/root/testdata/sf0.1")
+    calib = mini_calib(spark)
+    best = best_of(lambda: consume(QUERIES[name](spark, sf_dir), "noop"), REPS)
     print(
         json.dumps(
             {
                 "query": name,
                 "sf_dir": sf_dir,
-                "cpus": cpus,
+                "cpus": spark.sparkContext.defaultParallelism,
                 "best_s": round(best, 2),
-                "calib25M_s": round(calib, 3),
+                "calib_s": round(calib, 3),
             }
         )
     )

@@ -6,13 +6,18 @@ sf0.1 fact-side tables 10× with key shifts (lineitem/orders shift
 order keys in sync; events/documents/embeddings shift their ids) while
 dimensions stay fixed — growing facts against stable dims, which also
 makes FK keys 10× hotter (a mild skew stress). Then times the bench
-headline suite at sf0.1 and sf1 and prints per-query scaling factors.
+headline suite at sf0.1 and sf1 and prints per-query scaling factors;
+the ×100 tiers (``TIERS100``) do the same against a synthetic sf10.
+Every row times through bigdataflink_spark/measure.py: a GC and a
+mini-calib, then per scale one warm run that counts the rows and the
+best of 3 consumed runs.
 
 A query whose time grows ≲ data growth is scan/shuffle-bound and will
 survive a 100× scale-up by adding executors; anything super-linear is
 flagged. Results → SCALE.md (hand-curated from this output).
 
-Run: python tools/scale_probe.py
+Run: python tools/scale_probe.py                              # ×10
+     python tools/scale_probe.py {100,state,sketch,r12,r13}   # one ×100 tier
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from bigdataflink_spark import get_spark  # noqa: E402
+from bigdataflink_spark.measure import best_of, consume, mini_calib, warm_up  # noqa: E402
 from bigdataflink_spark.plans.queries import QUERIES  # noqa: E402
 from bigdataflink_spark.sources.tables import TABLES, load_table  # noqa: E402
 
@@ -101,14 +107,33 @@ def build_sf1(spark) -> None:
         out.write.mode("overwrite").parquet(f"{DST}/{t}.parquet")
 
 
-def time_suite(spark, sf_dir: str) -> dict[str, float]:
-    QUERIES["q02_revenue_by_region"](spark, sf_dir).count()  # warm
-    out = {}
-    for name in PROBE:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).count()
-        out[name] = round(time.perf_counter() - t0, 3)
-    return out
+def steady(spark, fn, sf_dir: str, how: str) -> "tuple[int, float]":
+    """(rows, best-of-3 seconds) of ``fn(spark, sf_dir)`` consumed by
+    ``how`` (``measure.consume``). Counting the rows first doubles as a
+    warm run: one-shot times in this shared JVM swing up to 4× on
+    GC/JIT state carried over from the previous query (measured: q21
+    sf10 8.7s ↔ 36.8s across runs), so the minimum is the only number
+    that reflects the PLAN."""
+    n = fn(spark, sf_dir).count()
+    return n, round(best_of(lambda: consume(fn(spark, sf_dir), how), 3), 3)
+
+
+def scale_row(spark, fn, big_dir: str, how: str, big: str) -> dict:
+    """One probe row: ``fn`` at sf0.1 and at ``big_dir`` (labelled
+    ``sf<big>``), after a GC and a mini-calib (200M-row units) that
+    says how fast the host was while the row was measured."""
+    calib = mini_calib(spark)
+    n_small, t_small = steady(spark, fn, SRC, how)
+    n_big, t_big = steady(spark, fn, big_dir, how)
+    return {
+        "sf0.1_s": t_small,
+        f"sf{big}_s": t_big,
+        "x": round(t_big / t_small, 2) if t_small else None,
+        "rows0.1": n_small,
+        f"rows{big}": n_big,
+        "calib": round(calib, 3),
+    }
+
 
 # ---- 100× tier: top-5 bench heavyweights against a synthetic sf10 --
 #
@@ -148,51 +173,53 @@ def _sign_lsh_scaled(spark, sf_dir):
     return sign_lsh_neardup_pairs(emb, threshold=0.9)
 
 
-PROBE100 = {
-    "q02_revenue_by_region": QUERIES["q02_revenue_by_region"],
-    "q21_minhash_lsh": QUERIES["q21_minhash_lsh"],
-    "q26_ivf_topk": QUERIES["q26_ivf_topk"],
-    "sign_lsh_64bit(q49-at-scale)": _sign_lsh_scaled,
-    "q56_nation_volume": QUERIES["q56_nation_volume"],
+PROBE100 = [
+    "q02_revenue_by_region",
+    "q21_minhash_lsh",
+    "q26_ivf_topk",
+    "sign_lsh_64bit(q49-at-scale)",
+    "q56_nation_volume",
     # r3 additions (VERDICT r2 #6): the LLM-pipeline heavies whose 10×
     # growth was output-driven — verify they stay ~linear at 100×
-    "q96_passage_dedup": QUERIES["q96_passage_dedup"],
-    "q101_fuzzy_match": QUERIES["q101_fuzzy_match"],
-    "q108_ngram_novelty": QUERIES["q108_ngram_novelty"],
-    "q126_unigram_lm_score": QUERIES["q126_unigram_lm_score"],
-    "q136_market_basket": QUERIES["q136_market_basket"],
+    "q96_passage_dedup",
+    "q101_fuzzy_match",
+    "q108_ngram_novelty",
+    "q126_unigram_lm_score",
+    "q136_market_basket",
     # r8 addition (VERDICT r7 #1): the staged stratified draw — the
     # dominant language stratum grows 100x but the rank window's
     # input stays ~allocation, so wall must be scan-bound sub-linear
-    "q209_exact_stratified_sample": QUERIES["q209_exact_stratified_sample"],
+    "q209_exact_stratified_sample",
     # r10 additions: the quantized-ANN pair — int8 scoring is one
     # scan-shaped pass; PQ's ADC reads only codes + a broadcast LUT,
     # and the exact legs (float top-5 audits) are the linear residue
-    "q223_int8_ann": QUERIES["q223_int8_ann"],
-    "q224_pq_ann": QUERIES["q224_pq_ann"],
+    "q223_int8_ann",
+    "q224_pq_ann",
     # r10 codec additions: the arithmetic JPEG profiles — per-bit
     # Python entropy layers inside the embarrassingly-parallel Arrow
     # map shape; wall tracks the x100 OUTPUT rows, per-doc cost flat
-    "q220_jpeg_arithmetic": QUERIES["q220_jpeg_arithmetic"],
-    "q225_jpeg_arith_lossless": QUERIES["q225_jpeg_arith_lossless"],
+    "q220_jpeg_arithmetic",
+    "q225_jpeg_arith_lossless",
     # r11 additions: exact substring dedup (window explode + count
     # shuffle + interval merge — must track total tokens ~linearly),
     # the BPE trainer (one corpus census, then 8 vocab-sized rounds —
     # wall should grow ≪ corpus), and the composed ANN stack (routed
     # cells only: candidate rows ∝ cell size; the exact audit legs
     # are the linear residue)
-    "q226_substring_dedup": QUERIES["q226_substring_dedup"],
-    "q227_bpe_train": QUERIES["q227_bpe_train"],
-    "q228_ivf_int8_rerank": QUERIES["q228_ivf_int8_rerank"],
+    "q226_substring_dedup",
+    "q227_bpe_train",
+    "q228_ivf_int8_rerank",
     # r12 additions: excision (q226's head + one per-doc HOF
     # projection — must track q226), and the tokenizer end-to-end
     # (corpus census + one explode-join; vocab-sized everything else)
-    "q231_substring_excise": QUERIES["q231_substring_excise"],
-    "q233_bpe_encode_pack": QUERIES["q233_bpe_encode_pack"],
+    "q231_substring_excise",
+    "q233_bpe_encode_pack",
     # r12: IVF-PQ — ADC work ∝ routed cells, codes 8 bytes/vector;
     # the cell-exact recall leg is the linear residue (as in q228)
-    "q235_ivf_pq_rerank": QUERIES["q235_ivf_pq_rerank"],
-}
+    "q235_ivf_pq_rerank",
+]
+# probe rows that are not a declared query
+PROBE_FNS = {"sign_lsh_64bit(q49-at-scale)": _sign_lsh_scaled}
 FIXED100 = ["region", "nation", "customer", "supplier", "part"]
 
 
@@ -262,54 +289,89 @@ def _build_sf10_events(spark) -> None:
     ).write.mode("overwrite").parquet(f"{DST100}/events.parquet")
 
 
-def main_100() -> None:
-    spark = get_spark("scale-probe-100")
-    spark.sparkContext.setLogLevel("ERROR")
-    if not os.path.exists(f"{DST100}/lineitem.parquet"):
-        print("building synthetic sf10 ...", file=sys.stderr)
-        build_sf10(spark)
-    QUERIES["q02_revenue_by_region"](spark, SRC).count()  # warm
-    report = {}
+# ×100 tiers, one per run: query → (×100 dir, consumption). count()
+# for the scan/shuffle-shaped families; a noop write for the
+# deliverable-emitting queries, whose expensive work IS the output
+# projection that count() prunes (q231's repaired-text assembly, q233's
+# id flattening: the round-10 "probe the CONSUMED column" lesson).
+TIERS100 = {
+    "100": dict.fromkeys(PROBE100, (DST100, "count")),
+    # round 4 (VERDICT r3 #5): the state / iterative family — snapshots,
+    # the one-scan expectations engine, streaming SCD2, the rollup;
+    # the tier adds PageRank at real iteration counts and the rollup's
+    # compaction payoff (_state_legs)
+    "state": dict.fromkeys(
+        [
+            "q174_snapshot_diff",
+            "q179_expectations_audit",
+            "q180_streaming_scd2",
+            "q181_continuous_rollup",
+        ],
+        (DST100, "count"),
+    ),
+    # round 10 (VERDICT r9 #6): the full sketch family — batch
+    # KMV/Bloom/CMS/quantile plus the streaming twins. Streaming twins
+    # allocate fresh tempdir state per call, so steady-state repeats
+    # re-run the whole 3-micro-batch pipeline each time (that IS the
+    # measured shape: per-batch cost must be flat in corpus size
+    # because state is bounded — k·levels rows / m positions /
+    # keep·d·w counters).
+    "sketch": dict.fromkeys(
+        [
+            "q213_kmv_distinct",
+            "q214_bloom_seen_set",
+            "q215_streaming_bloom",
+            "q216_cms_frequency",
+            "q217_quantile_sketch",
+            "q218_streaming_kmv",
+            "q219_streaming_cms",
+            "q221_theta_set_ops",
+            "q222_streaming_quantile",
+            # r12: the q217 split — production build must probe
+            # ~flat-ish (2 corpus passes), the audit carries the linear
+            # residue
+            "q234_quantile_sketch_audit",
+            # r12 (VERDICT r11 "What's wrong #2"): the substring twin —
+            # EXACT dedup state is honestly linear in distinct grams, so
+            # per-batch cost tracks batch + state scan; compaction
+            # bounds the file count, not the bytes
+            "q230_streaming_substr_dedup",
+        ],
+        (DST100, "count"),
+    ),
+    # round 12: the deliverable-emitting operators
+    "r12": dict.fromkeys(
+        [
+            "q231_substring_excise",
+            "q233_bpe_encode_pack",
+            "q235_ivf_pq_rerank",
+            "q236_streaming_substr_excise",
+            "q237_curated_corpus",
+            "q238_streaming_pq_index",
+        ],
+        (DST100, "noop"),
+    ),
+    # round 13: q237 composed on the DOMAIN-PRESERVING clone (the
+    # token-tagged clone fails the stopword gate and q237 measured 0
+    # rows); q239 keep-first excision (vs q231's drop-all machinery);
+    # q240 routed streaming PQ index, with the measured per-trigger
+    # scan fraction (avg n_scanned / store size) at both scales — the
+    # scored-rows-proportional-to-routed-cells pin.
+    "r13": {
+        "q237_curated_corpus": (DST100_DOMAIN, "noop"),
+        "q239_substring_excise_keepfirst": (DST100, "noop"),
+        "q240_streaming_ivf_pq_index": (DST100, "noop"),
+    },
+}
 
-    def steady(fn, sf):
-        """Best-of-3 after one warmup: one-shot times in this shared
-        JVM swing up to 4× on GC/JIT state carried over from the
-        previous query (measured: q21 sf10 8.7s ↔ 36.8s across runs),
-        so the minimum is the only number that reflects the PLAN."""
-        n = fn(spark, sf).count()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf).count()
-            best = min(best, time.perf_counter() - t0)
-        return n, round(best, 3)
 
-    for name, fn in PROBE100.items():
-        n_small, t_small = steady(fn, SRC)
-        n_big, t_big = steady(fn, DST100)
-        report[name] = {
-            "sf0.1_s": t_small,
-            "sf10_s": t_big,
-            "x": round(t_big / t_small, 2) if t_small else None,
-            "rows0.1": n_small,
-            "rows10": n_big,
-        }
-        print(f"{name}: {report[name]}", file=sys.stderr)
-    print(json.dumps({"copies": COPIES100, "queries": report}, indent=2))
+def main_100(tier: str) -> None:
+    """One ×100 tier: every query of ``TIERS100[tier]`` at sf0.1 and at
+    its ×100 dir.
 
-
-def main_state() -> None:
-    """Round-4 tier (VERDICT r3 #5): 100× posture of the state /
-    iterative family — snapshots, PageRank at real iteration counts,
-    the one-scan expectations engine, streaming SCD2, and the rollup's
-    parts-merge cost with the compaction payoff measured.
-
-    Run: python tools/scale_probe.py state
+    Run: python tools/scale_probe.py {100,state,sketch,r12,r13}
     """
-    import shutil
-    import tempfile
-
-    spark = get_spark("scale-probe-state")
+    spark = get_spark(f"scale-probe-{tier}")
     spark.sparkContext.setLogLevel("ERROR")
     if not os.path.exists(f"{DST100}/lineitem.parquet"):
         print("building synthetic sf10 ...", file=sys.stderr)
@@ -317,34 +379,34 @@ def main_state() -> None:
     elif not os.path.exists(f"{DST100}/events.parquet"):
         print("adding events to existing sf10 ...", file=sys.stderr)
         _build_sf10_events(spark)
-    QUERIES["q02_revenue_by_region"](spark, SRC).count()  # warm
-    report = {}
-
-    def steady(fn, sf, reps=3):
-        n = fn(spark, sf).count()
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf).count()
-            best = min(best, time.perf_counter() - t0)
-        return n, round(best, 3)
-
-    for name in (
-        "q174_snapshot_diff",
-        "q179_expectations_audit",
-        "q180_streaming_scd2",
-        "q181_continuous_rollup",
+    probes = TIERS100[tier]
+    if any(d == DST100_DOMAIN for d, _ in probes.values()) and not os.path.exists(
+        f"{DST100_DOMAIN}/documents.parquet"
     ):
-        n_small, t_small = steady(QUERIES[name], SRC)
-        n_big, t_big = steady(QUERIES[name], DST100)
-        report[name] = {
-            "sf0.1_s": t_small,
-            "sf10_s": t_big,
-            "x": round(t_big / t_small, 2) if t_small else None,
-            "rows0.1": n_small,
-            "rows10": n_big,
-        }
+        print("building domain-preserving sf10 documents ...", file=sys.stderr)
+        build_sf10_domain(spark)
+    warm_up(spark, SRC)
+    report = {}
+    for name, (big_dir, how) in probes.items():
+        report[name] = scale_row(spark, PROBE_FNS.get(name) or QUERIES[name], big_dir, how, "10")
+        if name == "q240_streaming_ivf_pq_index":
+            for tag, d in (("scan_frac0.1", SRC), ("scan_frac10", big_dir)):
+                rows = QUERIES[name](spark, d).collect()
+                total = load_table(spark, "embeddings", d).count()
+                last = [r for r in rows if r.slice == 2]
+                if last:
+                    avg = sum(r.n_scanned for r in last) / len(last)
+                    report[name][tag] = round(avg / total, 4)
         print(f"{name}: {report[name]}", file=sys.stderr)
+    if tier == "state":
+        report.update(_state_legs(spark))
+    print(json.dumps({"tier": tier, "copies": COPIES100, "queries": report}, indent=2))
+
+
+def _state_legs(spark) -> dict:
+    """The state tier's two timed legs beyond its queries."""
+    import shutil
+    import tempfile
 
     # PageRank at real iteration counts on the sf10 event graph:
     # post-lineage-fix, total time must be ~linear in iterations
@@ -372,7 +434,7 @@ def main_state() -> None:
         total = time.perf_counter() - t0
         pr[iters] = {"total_s": round(total, 2), "s_per_iter": round(total / iters, 3)}
         print(f"pagerank sf10 iters={iters}: {pr[iters]}", file=sys.stderr)
-    report["pagerank_iteration_sweep_sf10"] = pr
+    report = {"pagerank_iteration_sweep_sf10": pr}
 
     # Rollup: parts-merge cost vs batch count + compaction payoff.
     from bigdataflink_spark.streaming.rollup import (
@@ -406,7 +468,7 @@ def main_state() -> None:
     }
     print(f"rollup sf10: {report['rollup_compaction_sf10']}", file=sys.stderr)
     shutil.rmtree(os.path.dirname(parts), ignore_errors=True)
-    print(json.dumps({"tier": "state", "copies": COPIES100, "queries": report}, indent=2))
+    return report
 
 
 def main() -> None:
@@ -415,128 +477,9 @@ def main() -> None:
     if not os.path.exists(f"{DST}/lineitem.parquet"):
         print("building synthetic sf1 ...", file=sys.stderr)
         build_sf1(spark)
-    small = time_suite(spark, SRC)
-    big = time_suite(spark, DST)
-    report = {
-        q: {
-            "sf0.1_s": small[q],
-            "sf1_s": big[q],
-            "x": round(big[q] / small[q], 2) if small[q] else None,
-        }
-        for q in PROBE
-    }
+    warm_up(spark, SRC)
+    report = {q: scale_row(spark, QUERIES[q], DST, "count", "1") for q in PROBE}
     print(json.dumps({"copies": COPIES, "queries": report}, indent=2))
-
-
-def main_sketch() -> None:
-    """Round-10 tier (VERDICT r9 #6): the full sketch family at ×100 —
-    batch KMV/Bloom/CMS/quantile plus the three streaming twins
-    (Bloom q215, KMV q218, CMS q219). Streaming twins allocate fresh
-    tempdir state per call, so steady-state repeats re-run the whole
-    3-micro-batch pipeline each time (that IS the measured shape:
-    per-batch cost must be flat in corpus size because state is
-    bounded — k·levels rows / m positions / keep·d·w counters).
-
-    Run: python tools/scale_probe.py sketch
-    """
-    spark = get_spark("scale-probe-sketch")
-    spark.sparkContext.setLogLevel("ERROR")
-    if not os.path.exists(f"{DST100}/lineitem.parquet"):
-        print("building synthetic sf10 ...", file=sys.stderr)
-        build_sf10(spark)
-    elif not os.path.exists(f"{DST100}/events.parquet"):
-        _build_sf10_events(spark)
-    QUERIES["q02_revenue_by_region"](spark, SRC).count()  # warm
-    report = {}
-
-    def steady(fn, sf, reps=3):
-        n = fn(spark, sf).count()
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf).count()
-            best = min(best, time.perf_counter() - t0)
-        return n, round(best, 3)
-
-    for name in (
-        "q213_kmv_distinct",
-        "q214_bloom_seen_set",
-        "q215_streaming_bloom",
-        "q216_cms_frequency",
-        "q217_quantile_sketch",
-        "q218_streaming_kmv",
-        "q219_streaming_cms",
-        "q221_theta_set_ops",
-        "q222_streaming_quantile",
-        # r12: the q217 split — production build must probe ~flat-ish
-        # (2 corpus passes), the audit carries the linear residue
-        "q234_quantile_sketch_audit",
-        # r12 (VERDICT r11 "What's wrong #2"): the substring twin —
-        # EXACT dedup state is honestly linear in distinct grams, so
-        # per-batch cost tracks batch + state scan; compaction bounds
-        # the file count, not the bytes
-        "q230_streaming_substr_dedup",
-    ):
-        n_small, t_small = steady(QUERIES[name], SRC)
-        n_big, t_big = steady(QUERIES[name], DST100)
-        report[name] = {
-            "sf0.1_s": t_small,
-            "sf10_s": t_big,
-            "x": round(t_big / t_small, 2) if t_small else None,
-            "rows0.1": n_small,
-            "rows10": n_big,
-        }
-        print(f"{name}: {report[name]}", file=sys.stderr)
-    print(json.dumps({"tier": "sketch", "copies": COPIES100, "queries": report}, indent=2))
-
-
-def main_r12() -> None:
-    """Round-12 tier: the deliverable-emitting operators at ×100,
-    consumed via a NOOP WRITE — count() prunes final projections, and
-    for q231/q233 the expensive work IS the projection (repaired-text
-    assembly / id flattening): the round-10 "probe the CONSUMED
-    column" lesson applied to string/array outputs.
-
-    Run: python tools/scale_probe.py r12
-    """
-    spark = get_spark("scale-probe-r12")
-    spark.sparkContext.setLogLevel("ERROR")
-    if not os.path.exists(f"{DST100}/lineitem.parquet"):
-        print("building synthetic sf10 ...", file=sys.stderr)
-        build_sf10(spark)
-    report = {}
-
-    def consume(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def steady(fn, sf, reps=3):
-        n = fn(spark, sf).count()
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            consume(fn(spark, sf))
-            best = min(best, time.perf_counter() - t0)
-        return n, round(best, 3)
-
-    for name in (
-        "q231_substring_excise",
-        "q233_bpe_encode_pack",
-        "q235_ivf_pq_rerank",
-        "q236_streaming_substr_excise",
-        "q237_curated_corpus",
-        "q238_streaming_pq_index",
-    ):
-        n_small, t_small = steady(QUERIES[name], SRC)
-        n_big, t_big = steady(QUERIES[name], DST100)
-        report[name] = {
-            "sf0.1_s": t_small,
-            "sf10_s": t_big,
-            "x": round(t_big / t_small, 2) if t_small else None,
-            "rows0.1": n_small,
-            "rows10": n_big,
-        }
-        print(f"{name}: {report[name]}", file=sys.stderr)
-    print(json.dumps({"tier": "r12", "copies": COPIES100, "queries": report}, indent=2))
 
 
 def build_sf10_domain(spark) -> None:
@@ -585,77 +528,9 @@ def build_sf10_domain(spark) -> None:
             os.symlink(f"{DST100}/{t}.parquet", link)
 
 
-def main_r13() -> None:
-    """Round-13 tier:
-
-    * q237 composed curated corpus at ×100 on the DOMAIN-PRESERVING
-      clone (the r12 gap: the token-tagged clone failed the stopword
-      gate and q237 measured 0 rows — part-by-part only);
-    * q239 keep-first excision (vs q231's drop-all machinery);
-    * q240 routed streaming PQ index, with the measured per-trigger
-      scan fraction (avg n_scanned / store size) at both scales —
-      the scored-rows-proportional-to-routed-cells pin.
-
-    Run: python tools/scale_probe.py r13
-    """
-    spark = get_spark("scale-probe-r13")
-    spark.sparkContext.setLogLevel("ERROR")
-    if not os.path.exists(f"{DST100}/lineitem.parquet"):
-        print("building synthetic sf10 ...", file=sys.stderr)
-        build_sf10(spark)
-    if not os.path.exists(f"{DST100_DOMAIN}/documents.parquet"):
-        print("building domain-preserving sf10 documents ...", file=sys.stderr)
-        build_sf10_domain(spark)
-    report = {}
-
-    def consume(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def steady(fn, sf, reps=3):
-        n = fn(spark, sf).count()
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            consume(fn(spark, sf))
-            best = min(best, time.perf_counter() - t0)
-        return n, round(best, 3)
-
-    for name, big_dir in (
-        ("q237_curated_corpus", DST100_DOMAIN),
-        ("q239_substring_excise_keepfirst", DST100),
-        ("q240_streaming_ivf_pq_index", DST100),
-    ):
-        n_small, t_small = steady(QUERIES[name], SRC)
-        n_big, t_big = steady(QUERIES[name], big_dir)
-        report[name] = {
-            "sf0.1_s": t_small,
-            "sf10_s": t_big,
-            "x": round(t_big / t_small, 2) if t_small else None,
-            "rows0.1": n_small,
-            "rows10": n_big,
-        }
-        if name == "q240_streaming_ivf_pq_index":
-            for tag, d in (("scan_frac0.1", SRC), ("scan_frac10", big_dir)):
-                rows = QUERIES[name](spark, d).collect()
-                total = load_table(spark, "embeddings", d).count()
-                last = [r for r in rows if r.slice == 2]
-                if last:
-                    avg = sum(r.n_scanned for r in last) / len(last)
-                    report[name][tag] = round(avg / total, 4)
-        print(f"{name}: {report[name]}", file=sys.stderr)
-    print(json.dumps({"tier": "r13", "copies": COPIES100, "queries": report}, indent=2))
-
-
 if __name__ == "__main__":
-    if "state" in sys.argv[1:]:
-        main_state()
-    elif "sketch" in sys.argv[1:]:
-        main_sketch()
-    elif "r12" in sys.argv[1:]:
-        main_r12()
-    elif "r13" in sys.argv[1:]:
-        main_r13()
-    elif "100" in sys.argv[1:]:
-        main_100()
+    tier = next((t for t in TIERS100 if t in sys.argv[1:]), None)
+    if tier:
+        main_100(tier)
     else:
         main()

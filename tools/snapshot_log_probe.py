@@ -20,11 +20,11 @@ from __future__ import annotations
 
 import sys
 import tempfile
-import time
 
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, ".")
+from bigdataflink_spark.measure import best_of  # noqa: E402
 from bigdataflink_spark.sources import snapshots as sn  # noqa: E402
 
 
@@ -47,14 +47,9 @@ def main() -> None:
             )
         return table
 
-    def t_list(table: str, reps: int = 5) -> float:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            got = sn.list_versions(spark, table)
-            best = min(best, time.perf_counter() - t0)
-        assert len(got) > 0
-        return best
+    def t_list(table: str) -> float:
+        assert sn.list_versions(spark, table)
+        return best_of(lambda: sn.list_versions(spark, table), 5)
 
     for nv in (100, n):
         table = build(nv)
