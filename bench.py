@@ -23,166 +23,17 @@ import os
 
 from bigdataflink_spark import get_spark
 from bigdataflink_spark.measure import best_of, consume, mini_calib, warm_up
-from bigdataflink_spark.plans.queries import QUERIES
+from bigdataflink_spark.plans.queries import QUERIES, REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: one per operator family; the quadratic exact-verify
 # variants (q23/q25) are correctness tools, not throughput paths, and
 # are excluded — their scalable twins (q21 LSH, q26 IVF) are included.
-HEADLINE = [
-    "q01_pricing_summary",
-    "q02_revenue_by_region",
-    "q03_top_customers",
-    "q04_priority_semi_join",
-    "q06_ri_check",
-    "q08_date_parts",
-    "q10_window_rank",
-    "q11_json_extract",
-    "q14_lww_dedup",
-    "q15_tumbling_window",
-    "q17_session_window",
-    "q20_dedup_exact",
-    "q21_minhash_lsh",
-    "q22_simhash",
-    "q24_embedding_topk",
-    "q26_ivf_topk",
-    "q30_text_stats",
-    "q33_fingerprint",
-    "q38_asof_join",
-    "q39_range_join",
-    "q42_salted_join",
-    "q44_corpus_pipeline",
-    "q48_sessionize",
-    "q49_embedding_lsh_neardup",
-    # TPC-H-shaped batch (added with the q52+ suite; totals before/after
-    # that commit differ by these five entries — compare per-query)
-    "q52_forecast_revenue",
-    "q55_returned_items",
-    "q56_nation_volume",
-    "q57_window_battery",
-    "q62_large_orders",
-    # round-2 additions: the two heaviest TPC-H shapes (Q9 five-way,
-    # Q21 double-correlation) and the derived-partsupp Q2 shape
-    "q77_product_type_profit",
-    "q78_waiting_suppliers",
-    "q90_min_cost_supplier",
-    # round-2 training-pipeline additions (linear corpus passes)
-    "q96_passage_dedup",
-    "q97_vocab_coverage",
-    "q99_scd2_history",
-    "q101_fuzzy_match",
-    # time-series / corpus-analytics batch (q103+): the grid explode,
-    # the bigram first-occurrence join, and the full-outer reconcile
-    "q103_gap_fill",
-    "q108_ngram_novelty",
-    "q109_full_outer_reconcile",
-    # round-2 continuation: chunker (pure map), LM scorer (token join),
-    # PIT join, TV divergence, basket pairing
-    "q125_doc_chunking",
-    "q126_unigram_lm_score",
-    "q129_pit_join",
-    "q132_source_divergence",
-    "q136_market_basket",
-    # round-3 additions: the newest families (VERDICT r2 #5) — cover-day
-    # explode, BPE pair counts, bitmap distinct, session path mining,
-    # RANGE frame, EWMA fold, prefix-collision census
-    "q143_active_users",
-    "q150_bpe_merge_candidates",
-    "q157_bitmap_distinct",
-    "q158_session_paths",
-    "q160_trailing_window_count",
-    "q161_ewma",
-    "q165_prefix_collisions",
-    # round-3 operator families: audio codec, sketch-accuracy audit,
-    # Pareto window sweep, int8 quantization, integer PageRank,
-    # expectations engine, compacted continuous rollup
-    "q166_audio_channel_stats",
-    "q173_minhash_estimation_audit",
-    "q175_pareto_frontier",
-    "q177_int8_quantization_audit",
-    "q178_pagerank",
-    "q179_expectations_audit",
-    "q181_continuous_rollup",
-    "q182_snapshot_drift_gate",
-    "q183_png_codec",
-    "q184_wav_container",
-    "q185_semantic_dedup",
-    "q186_snapshot_vacuum",
-    "q187_jpeg_roundtrip",
-    "q188_jpeg_subsampled",
-    "q189_png_profiles",
-    "q190_tvd_drift_gate",
-    "q191_mp4_metadata",
-    "q192_streaming_semdedup",
-    "q193_fmp4_fragments",
-    "q194_gif_codec",
-    "q195_flac_codec",
-    "q196_warc_ingest",
-    "q197_flac_lpc",
-    "q198_wds_tar_ingest",
-    "q199_html_extract",
-    "q200_cc_pipeline",
-    "q201_warc_stream_ingest",
-    "q202_url_normalize",
-    "q203_robots_decisions",
-    "q204_jpeg_progressive",
-    "q205_warc_zstd_ingest",
-    "q206_zstd_roundtrip",
-    "q207_png_subbyte",
-    "q208_flac_depths",
-    "q209_exact_stratified_sample",
-    "q210_jpeg_extended",
-    "q211_wav_formats",
-    "q212_jpeg_lossless",
-    "q213_kmv_distinct",
-    "q214_bloom_seen_set",
-    "q215_streaming_bloom",
-    "q216_cms_frequency",
-    "q217_quantile_sketch",
-    "q218_streaming_kmv",
-    "q219_streaming_cms",
-    "q220_jpeg_arithmetic",
-    "q221_theta_set_ops",
-    "q222_streaming_quantile",
-    "q223_int8_ann",
-    "q224_pq_ann",
-    "q225_jpeg_arith_lossless",
-    "q226_substring_dedup",
-    "q227_bpe_train",
-    "q228_ivf_int8_rerank",
-    "q229_bpe_segment_census",
-    "q230_streaming_substr_dedup",
-    "q231_substring_excise",
-    "q232_bpe_vocab_export",
-    "q233_bpe_encode_pack",
-    "q234_quantile_sketch_audit",
-    "q235_ivf_pq_rerank",
-    "q236_streaming_substr_excise",
-    "q237_curated_corpus",
-    "q238_streaming_pq_index",
-    "q239_substring_excise_keepfirst",
-    "q240_streaming_ivf_pq_index",
-    "q241_curated_corpus_keepfirst",
-    "q242_pq_kmeans_ann",
-]
-
-
-# continuity metric: the r1 bench recorded exactly this 29-query set
-# (BENCH_r01.json) — its subtotal is the number comparable across
-# rounds as the headline list grows.
-R1_SET = [
-    "q01_pricing_summary", "q02_revenue_by_region", "q03_top_customers",
-    "q04_priority_semi_join", "q06_ri_check", "q08_date_parts",
-    "q10_window_rank", "q11_json_extract", "q14_lww_dedup",
-    "q15_tumbling_window", "q17_session_window", "q20_dedup_exact",
-    "q21_minhash_lsh", "q22_simhash", "q24_embedding_topk",
-    "q26_ivf_topk", "q30_text_stats", "q33_fingerprint",
-    "q38_asof_join", "q39_range_join", "q42_salted_join",
-    "q44_corpus_pipeline", "q48_sessionize", "q49_embedding_lsh_neardup",
-    "q52_forecast_revenue", "q55_returned_items", "q56_nation_volume",
-    "q57_window_battery", "q62_large_orders",
-]
+HEADLINE = [name for name, q in REGISTRY.items() if q.headline]
+# continuity metric: the 29-query set BENCH_r01.json recorded; its
+# subtotal stays comparable across rounds as the headline set grows.
+R1_SET = [name for name, q in REGISTRY.items() if q.r1]
 
 
 def main() -> None:

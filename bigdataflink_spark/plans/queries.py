@@ -21,6 +21,7 @@ deterministic:
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,11 +84,41 @@ _DISC_PRICE = (
 _CHARGE = f"({_DISC_PRICE}) * (CAST(1 AS DECIMAL(6,4)) + CAST(l_tax AS DECIMAL(6,4)))"
 
 
+class Query(NamedTuple):
+    """One declared query: the function and what bench.py and
+    tools/plan_audit.py read about it."""
+
+    fn: Callable[[SparkSession, str], DataFrame]
+    note: str
+    headline: bool
+    r1: bool
+    nested_loop: str | None
+
+
+REGISTRY: dict[str, Query] = {}
+
+
+def query(note: str, *, headline: bool = False, r1: bool = False,
+          nested_loop: str | None = None):
+    """Register the decorated query under its own name. ``note`` says
+    why its plan is the one wanted at 1000 executors / 100 TB
+    (PLANS.md); ``headline`` puts it in bench.py's timed set and
+    ``r1`` in the frozen 29-query continuity set of BENCH_r01.json;
+    ``nested_loop`` justifies an intended BroadcastNestedLoopJoin."""
+
+    def register(fn):
+        REGISTRY[fn.__name__] = Query(fn, note, headline, r1, nested_loop)
+        return fn
+
+    return register
+
+
 # --------------------------------------------------------------------
 # Core relational suite (SURVEY §2.1-§2.8 parity)
 # --------------------------------------------------------------------
 
 
+@query("Single scan → partial+final hash agg; one exchange on the 4-value group key. Decimal sums stay in codegen.", headline=True, r1=True)
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan+filter+hash-agg (A1/A3, P6, pushdown showcase)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -119,6 +150,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Flagship star join: fact scans 3 of 11 columns and never shuffles at this SF — nation/region hinted broadcast, customer unhinted (AQE broadcasts it here, degrades to a shuffle join at 100× instead of OOMing a forced build side); the only guaranteed exchange is the final 2-key agg.", headline=True, r1=True)
 def q02_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship 5-way star join + agg (J1): revenue by region/year.
 
@@ -146,6 +178,7 @@ def q02_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Agg before sort; global top-k via TakeOrderedAndProject (no full sort shuffle).", headline=True, r1=True)
 def q03_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort/limit/top-k (§2.6): top-10 customers by order revenue."""
     orders = _t(spark, sf_dir, "orders")
@@ -166,6 +199,7 @@ def q03_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("LeftSemi broadcast — probe side streams, no dedup materialization.", headline=True, r1=True)
 def q04_priority_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (§2.3): orders with any late-shipped lineitem."""
     orders = _t(spark, sf_dir, "orders")
@@ -178,6 +212,7 @@ def q04_priority_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("NOT EXISTS plans as a LEFT ANTI hash join on custkey — orders is probed as a slim key projection, never materialized; limit rides TakeOrdered.")
 def q05_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join (§2.3): customers with no URGENT order. (The
     unfiltered 'never ordered' form matches on 0=0 rows at sf>=0.01 —
@@ -195,6 +230,7 @@ def q05_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Six left joins + one conditional-agg pass; bounded nation/region hinted, SF-scaling part/supplier/customer AQE-sized (broadcast here, shuffle at 100×); fact side single scan.", headline=True, r1=True)
 def q06_ri_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """6-way LEFT JOIN referential-integrity check (J2/A3) — the
     reference's verification query (README.md:202-216) on testdata;
@@ -228,6 +264,7 @@ def q06_ri_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("COUNT(*) + COUNT(DISTINCT) in one pass via Catalyst's Expand-based multi-distinct rewrite — no self-join, one exchange; the reference's uniqueness invariant as a single scan.")
 def q07_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT + COUNT(DISTINCT) uniqueness invariant (A1/A2)."""
     orders = _t(spark, sf_dir, "orders")
@@ -238,6 +275,7 @@ def q07_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("year/month computed in the scan projection; one exchange for the agg.", headline=True, r1=True)
 def q08_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """year/month/day extraction + group (F8)."""
     orders = _t(spark, sf_dir, "orders")
@@ -250,6 +288,7 @@ def q08_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("UNION ALL of two filtered slices of the SAME scan: both predicates push down, the union is a no-shuffle concatenation, one exchange for the status agg.")
 def q09_union_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two filtered slices (§2.7) — overlap preserved."""
     orders = _t(spark, sf_dir, "orders")
@@ -258,6 +297,7 @@ def q09_union_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b).groupBy("o_orderstatus").agg(F.count("*").alias("n"))
 
 
+@query("One shuffle on o_custkey for the ranking window; rank<=3 filters before any further op.", headline=True, r1=True)
 def q10_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window (§2.5): top-3 orders per customer by price."""
     orders = _t(spark, sf_dir, "orders")
@@ -269,6 +309,7 @@ def q10_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("from_json in the scan stage; no shuffle until the agg.", headline=True, r1=True)
 def q11_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON deserialize (F10) on events.props."""
     events = _t(spark, sf_dir, "events")
@@ -278,6 +319,7 @@ def q11_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("trim/nullif/concat_ws all evaluate in the scan projection (the reference's P4/P5 cleanse battery) — zero exchanges beyond the output.")
 def q12_string_cleanse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """trim/nullif/concat_ws/coalesce cleanse chain (F1-F4, P4-P5)."""
     customer = _t(spark, sf_dir, "customer")
@@ -289,6 +331,7 @@ def q12_string_cleanse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Tolerant casts (floor(try_cast), 3-format date cascade, coalesce defaults) are pure scan-stage expressions — the semantics-critical layer costs no shuffle at all.")
 def q13_coercions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference coercion semantics fixture (P8/P9, F5-F7) —
     FIXTURES.md §3 edge cases, bit-exact vs the oracle."""
@@ -309,6 +352,7 @@ def q13_coercions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Keyed LWW = one shuffle on the natural key, row_number, filter — the upsert semantics with exactly one exchange.", headline=True, r1=True)
 def q14_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-write-wins keyed upsert (A4) — the reference's ON CONFLICT
     DO UPDATE semantics: latest event per user wins."""
@@ -322,21 +366,25 @@ def q14_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("window() desugars to a bucket expression → plain hash agg; one exchange.", headline=True, r1=True)
 def q15_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling window (T2 extension)."""
     return windows.tumbling(_t(spark, sf_dir, "events"), "10 minutes")
 
 
+@query("Sliding window() explodes each event into its ~window/slide covering buckets (bounded amplification in the scan stage) then one hash agg — no per-window rescan.")
 def q16_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time sliding window (T2 extension)."""
     return windows.sliding(_t(spark, sf_dir, "events"), "10 minutes", "5 minutes")
 
 
+@query("session_window needs a per-key sort; one shuffle on user_id.", headline=True, r1=True)
 def q17_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based session window per user (T2 extension)."""
     return windows.session(_t(spark, sf_dir, "events"), "30 minutes")
 
 
+@query("ROLLUP = one Expand (×3 grouping sets) before a single hash agg — one exchange regardless of grouping-set count.")
 def q18_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets with GROUPING() disambiguation."""
     orders = _t(spark, sf_dir, "orders")
@@ -353,6 +401,7 @@ def q18_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("CUBE = one Expand (×4 grouping sets) + single hash agg — same one-exchange family as q18/q65.")
 def q35_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets over (status, priority)."""
     orders = _t(spark, sf_dir, "orders")
@@ -367,6 +416,7 @@ def q35_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Grouped percentile_disc is a within-group sort-agg on the bounded priority key; one exchange, exact discrete elements (no interpolation drift).")
 def q36_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (median/p90) per priority.
 
@@ -382,6 +432,8 @@ def q36_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("INTERSECT/EXCEPT plan as LEFT SEMI / LEFT ANTI over pre-aggregated distinct slices — key-cardinality shuffles, never row-level pairing.",
+       nested_loop="the BNLJ is the 1-row×1-row crossJoin stitching the intersect count to the except count — bounded by construction.")
 def q37_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT (§2.7 beyond the implicit UNION ALL):
     customers appearing in both status-F and status-O orders, and
@@ -394,6 +446,7 @@ def q37_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.crossJoin(only_f)
 
 
+@query("HLL approx_count_distinct + exact countDistinct share one agg pass; the bounded-error contract comparison is a scalar expression on the 1-row result.")
 def q19_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HLL) — scale-out variant of A2, with a
     verifiable error bound instead of a bare sketch value.
@@ -425,6 +478,7 @@ def q19_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
+@query("Hash-groupBy dedup: one shuffle on the content hash.", headline=True, r1=True)
 def q20_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup stats: hash-group on md5(text) per source."""
     docs = _t(spark, sf_dir, "documents")
@@ -434,6 +488,7 @@ def q20_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Signatures: one groupBy(doc) with P min-aggs (no P-way blowup). LSH: shuffle on band signature pairs only bucket-mates — candidate set, not corpus, is quadratic.", headline=True, r1=True)
 def q21_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands) + exact-Jaccard verify >= 0.8."""
     docs = _t(spark, sf_dir, "documents")
@@ -442,12 +497,14 @@ def q21_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Per-doc signature then groupBy signature: two narrow projections + one exchange.", headline=True, r1=True)
 def q22_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash signature per document."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.simhash(docs, bits=32)
 
 
+@query("Pair->cluster resolution: each min-label round is one keyed shuffle (edges joined to labels + min agg), lineage cut per round (localCheckpoint) so the plan stays constant-size; rounds = component diameter (2-4 for near-dup clusters). The audited plan is the final labels projection over the converged checkpoint.")
 def q72_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup PAIRS → duplicate CLUSTERS → canonical keep-set: the
     full corpus dedup. q21's MinHash+LSH candidate pairs are resolved
@@ -464,6 +521,8 @@ def q72_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_clusters(pairs, docs)
 
 
+@query("All-pairs exact-Jaccard ORACLE TWIN: mechanically guarded above ~10⁴ docs (guard_bruteforce raises) — the quadratic shape is the point of the check; q21's banded MinHash is the scale path.",
+       nested_loop="the BNLJ IS the semantics: all-pairs exact Jaccard, mechanically guarded above ~10⁴ docs; q21 is the scale path.")
 def q23_token_jaccard_bruteforce_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct-token Jaccard pairs >= 0.9 (all-pairs variant;
     the LSH-prefiltered version is q21 — this is the oracle-simple
@@ -493,6 +552,8 @@ def q23_token_jaccard_bruteforce_check(spark: SparkSession, sf_dir: str) -> Data
 # --------------------------------------------------------------------
 
 
+@query("Queries broadcast against the corpus; corpus never shuffles; per-pair work is one JVM fold (zip_with + aggregate).", headline=True, r1=True,
+       nested_loop="BNLJ is the semantics here: brute-force = score EVERY (query, corpus) pair; the broadcast side is the small query set, the corpus streams. The scale path is q26.")
 def q24_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 for queries vec_id < 10."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -501,12 +562,16 @@ def q24_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
+@query("All-pairs cosine ORACLE TWIN, same mechanical guard — q49's sign-LSH is the scale path; the exact form exists to certify it.",
+       nested_loop="the BNLJ IS the semantics: all-pairs exact cosine, mechanically guarded above ~10⁴ vectors; q49 is the scale path.")
 def q25_embedding_neardup_bruteforce_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs (cosine >= 0.4)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_neardup_pairs(emb, threshold=0.4)
 
 
+@query("Centroid build is a posexplode agg (bounded by cells×dims); probe routes to ONE cell → scoring join keys on cell id, shuffle ∝ corpus, not corpus².", headline=True, r1=True,
+       nested_loop="the BNLJ is only the query→centroid routing table (|queries| × |cells|, both tiny); the corpus-sized scoring join is the cell-keyed BroadcastHashJoin.")
 def q26_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-routed ANN top-5 (label cells) for queries vec_id < 10."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -520,6 +585,7 @@ def q26_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
+@query("Pure per-row expressions in the scan stage; one exchange for the source-level agg.", headline=True, r1=True)
 def q30_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus stats per (lang, source): token totals + quality."""
     docs = _t(spark, sf_dir, "documents")
@@ -542,6 +608,7 @@ def q30_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("N-gram heuristic language ID is a per-row expression battery in the scan stage; one bounded lang-key agg.")
 def q31_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language-ID prediction vs labeled lang."""
     docs = _t(spark, sf_dir, "documents")
@@ -557,6 +624,7 @@ def q31_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Whitespace + BPE-ish regex token counts are per-row array expressions — zero shuffles before the per-source agg.")
 def q32_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex token counting per source."""
     docs = _t(spark, sf_dir, "documents")
@@ -566,6 +634,7 @@ def q32_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Normalization + md5 in scan stage; countDistinct partials map-side.", headline=True, r1=True)
 def q33_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint uniqueness per source."""
     docs = _t(spark, sf_dir, "documents")
@@ -575,6 +644,7 @@ def q33_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Synthesized binary payloads flow through one modality-keyed agg; octet_length/md5 run per-row in the scan stage — payloads never shuffle wider than the 3-row result.")
 def q34_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column pipeline: opaque payload + typed metadata
     (operators/multimodal.py); byte stats per modality."""
@@ -587,6 +657,7 @@ def q34_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Union+window as-of: ONE shuffle on user_id (sort-merge-join cost); the naive theta formulation would be a nested-loop O(n·m).", headline=True, r1=True)
 def q38_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of LEFT join (extension §2.3): each purchase picks
     up the latest click value at-or-before it for the same user.
@@ -616,6 +687,7 @@ def q38_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TIERS = [("low", 0.0, 100.0), ("mid", 100.0, 250.0), ("high", 250.0, 500.0)]
 
 
+@query("Interval bucketing turns the band join into a broadcast HASH join on bucket + residual filter; tier table is a JVM LocalRelation.", headline=True, r1=True)
 def q39_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (band) join (extension §2.3): events joined to the value
     tier containing them, via interval bucketing so it plans as an
@@ -634,6 +706,7 @@ def q39_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 
+@query("Pivot with an explicit value list compiles to CASE-sum aggregates in ONE hash-agg pass — no per-pivot-column scan.")
 def q40_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (extension §2.4): yearly revenue by order priority, one
     column per priority. Explicit pivot values keep the plan a single
@@ -646,6 +719,7 @@ def q40_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The 5% sample is a deterministic md5-bucket filter in the scan stage (reproducible on any engine/partitioning, unlike TABLESAMPLE) — sampling costs zero shuffles; one agg exchange.")
 def q41_sampled_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 5% hash-sample then aggregate (TABLESAMPLE
     analog): the md5-derived bucket of o_orderkey reproduces the exact
@@ -660,6 +734,7 @@ def q41_sampled_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Salt spreads each hot key over 8 reducers; build side replicates ×8 (bounded), probe computes its salt in the scan stage.", headline=True, r1=True)
 def q42_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-controlled equi-join (operators/joins.salted_join): orders
     ⋈ customer spread over 8 salt sub-keys; row-identical to the plain
@@ -672,6 +747,7 @@ def q42_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Per-nation averages aggregate once (exact decimal) and broadcast back; the above-average filter compares sum·n against n·avg-sums in exact integers — no correlated subquery execution.")
 def q43_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar-subquery pattern (extension §2.4): customers
     whose balance strictly exceeds their nation's average. The
@@ -689,6 +765,7 @@ def q43_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Whole corpus pass in one plan: score+filter in the scan stage, ONE shuffle on fingerprint for dedup, one for the final agg. Nothing leaves the JVM.", headline=True, r1=True)
 def q44_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship training-data pass, end-to-end in ONE plan: quality
     scoring → language filter → exact near-dup removal (fingerprint,
@@ -735,6 +812,7 @@ def q44_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("lag + running-sum share ONE per-user window sort; the session agg groups on the same keys — a single shuffle end-to-end.", headline=True, r1=True)
 def q48_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with assigned session IDs (lag + cumulative
     sum over one per-user window): unlike q17's aggregated session
@@ -761,6 +839,7 @@ def q48_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("band self-join keys on (band, bsig) — candidates, not the corpus, are quadratic; exact cosine only on the ~23% surviving pairs.", headline=True, r1=True)
 def q49_embedding_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path twin of q25: sign-LSH bucketing cuts the candidate
     set ~4× before exact cosine (operators/similarity.
@@ -775,6 +854,7 @@ def q49_embedding_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("LIKE 'MED%' pushes to the part scan as StringStartsWith; nation hinted, part/supplier AQE-sized — the fact side stays shuffle-free while they fit.")
 def q47_part_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-way fact⋈part⋈supplier rollup by brand × supplier
     nation: exercises the two star arms untouched elsewhere with a
@@ -799,6 +879,8 @@ def q47_part_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("explode→tf/df aggs reuse the same term shuffle; the doc-count scalar broadcasts; top-k per source is one window over the already-partitioned agg.",
+       nested_loop="the BNLJ is the 1-row corpus-size broadcast (n_docs scalar) joined onto every (source, term) — a scalar fan-out, not a quadratic pairing.")
 def q46_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term scoring (SURVEY §7 step 6: tf via explode+agg): top-5
     rarity-weighted terms per source. idf uses the exact rational
@@ -832,6 +914,7 @@ def q46_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("HAVING is a post-agg filter on the single hash-agg pass — one exchange, predicate on the aggregated row only.")
 def q45_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation predicate (HAVING): repeat customers only."""
     orders = _t(spark, sf_dir, "orders")
@@ -842,6 +925,7 @@ def q45_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The F1-F11 scalar battery (concat_ws/trim/nullif/initcap…) is all scan-stage codegen — zero exchanges beyond the output collect.")
 def q50_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function battery beyond the reference's trim/concat
     (§2.8 extension): substring, upper/lower, replace, length,
@@ -863,6 +947,7 @@ def q50_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Monthly agg first (one exchange), then the cumulative ROWS frame rides a window over the AGGREGATED rows partitioned by priority — the running sum sorts months-per-priority, never raw orders.")
 def q51_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative-frame window (ROWS UNBOUNDED PRECEDING): monthly
     revenue and its running total per order priority, in exact
@@ -888,6 +973,7 @@ def q51_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("TPC-H Q6 shape: all three range predicates push to the parquet scan (row-group min/max pruning kills most of 100 TB before decode); 3-col ReadSchema; map-side partials collapse to one scalar row.", headline=True, r1=True)
 def q52_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-agg over the fact table with a
     tight conjunctive predicate — everything (three range filters, the
@@ -913,6 +999,7 @@ def q52_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("LEFT join keeps every customer; orders aggregates per custkey, then the second agg groups ~50 distinct counts — the distribution agg is effectively free after the join shuffle.")
 def q53_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: LEFT OUTER join + double aggregation — orders
     per customer, then customers per order-count (the classic
@@ -927,6 +1014,7 @@ def q53_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
+@query("One month's fact slice (pushed date range) joins part AQE-sized; both CASE sums come out of a single agg pass — no second scan for the denominator.")
 def q54_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional-aggregation ratio — share of one
     month's revenue from PROMO parts. The two sums come out of ONE
@@ -952,6 +1040,7 @@ def q54_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("returnflag and the order-date range both push to their scans; fact⋈orders is the one shuffle; nation hinted, customer AQE-sized; top-20 via TakeOrderedAndProject on the exact decimal sum, no global sort.", headline=True, r1=True)
 def q55_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by lost revenue on returned
     items in a quarter — fact⋈orders shuffle join plus a hinted
@@ -982,6 +1071,7 @@ def q55_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The SAME dim broadcasts twice under two roles (supplier nation / customer nation) — role-playing dimensions cost two tiny broadcasts, never a self-join shuffle; supplier/customer are unhinted (AQE-sized); fact⋈orders remains the only guaranteed exchange.", headline=True, r1=True)
 def q56_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: shipping volume between nation pairs — the same
     dimension table joined TWICE under different roles (supplier
@@ -1015,6 +1105,7 @@ def q56_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("lag/lead/ntile/first share ONE Window spec → a single shuffle+sort on o_custkey feeds all four functions in one Window node.", headline=True, r1=True)
 def q57_window_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic-window battery beyond q10's row_number (§2.5
     extension): lag, lead, ntile, first_value over one per-customer
@@ -1033,6 +1124,7 @@ def q57_window_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Element access, size, array_max/min are all per-row JVM expressions in the scan stage; the only exchange is the 10-group label agg.")
 def q58_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-function battery over the embedding column (§2.8
     extension): element access, size, array_max/min — reduced per
@@ -1061,6 +1153,7 @@ def q58_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("max_by/min_by are single-pass aggregates with map-side partials — the per-key winner without a window sort (the oracle needs two row_number windows for the same answer).")
 def q59_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by/min_by arg-max aggregates (A4's per-key winner semantics
     as a single agg, no window): richest and poorest customer name per
@@ -1075,6 +1168,7 @@ def q59_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The OR-of-ANDs references both join sides, so it evaluates as a post-join filter against part (AQE-sized); the fact scan still prunes to 4 columns and never shuffles.")
 def q60_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs predicate across the join — revenue
     from three disjoint (type/brand × quantity-band) channels. The
@@ -1096,6 +1190,8 @@ def q60_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The positive-balance stats collapse to ONE row and broadcast (scalar-subquery pattern); the distinct order-custkey probe shuffles once; balance×n > sum comparison stays in exact decimal in the scan stage.",
+       nested_loop="the BNLJ is the 1-row scalar-stats broadcast (the Q22 scalar subquery); every probe row pairs with exactly one build row.")
 def q61_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: global-aggregate comparison + existence probe —
     customers with above-average positive balance, bucketed by the
@@ -1123,6 +1219,7 @@ def q61_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Both date cutoffs push to their scans (complementary ranges prune most row groups on either side); segment filter prunes the customer build side (AQE-sized); top-10 via TakeOrderedAndProject after the group agg.")
 def q67_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: top-10 highest-revenue orders not yet shipped
     by a cutoff — cross-filtered dates (orders before, lineitems
@@ -1151,6 +1248,7 @@ def q67_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The late predicate compares columns across sides so it evaluates post-join, but both scans still prune columns; high/low counts come from ONE CASE agg pass on ship-year.")
 def q68_late_shipment_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: per-group counts of high- vs low-priority
     orders among late shipments (l_shipdate > o_orderdate + 30 days)
@@ -1171,6 +1269,7 @@ def q68_late_shipment_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Two DISTINCT aggregates + a plain count in ONE pass: Catalyst's Expand-based multi-distinct rewrite — no self-join, no second scan; one exchange on the 5-value group key.")
 def q70_filtered_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered distinct-count aggregation (extension §2.4): per
     priority, distinct ordering customers overall vs among F-status
@@ -1187,6 +1286,7 @@ def q70_filtered_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The whole binary pipeline (generate -> decode -> NN-resize -> byte stats) is three chained mapInPandas stages in ONE task pipeline: zero exchanges, payloads never shuffle — per-row Arrow work that scales embarrassingly with executors.")
 def q71_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode→resize over binary payload columns
     (extension; operators/multimodal.py): a deterministic 16×12
@@ -1203,6 +1303,7 @@ def q71_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.media_byte_stats(resized)
 
 
+@query("Split assignment is a scan-stage md5 expression (no shuffle, no RNG, no ordering dependence); the only exchange is the 3-group agg — reproducible splits at any scale by construction.")
 def q73_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment (extension;
     operators/sampling.hash_split): split(doc) is a pure function of
@@ -1221,6 +1322,7 @@ def q73_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Pure regexp_replace/regexp_count chain in the scan stage: zero exchanges, nothing leaves the JVM; redaction audits ride the same pass as the scrub itself.")
 def q74_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub pass (extension; operators/text.redact_pii): emails
     and phone numbers replaced by tags, counts audited. PII is
@@ -1245,6 +1347,7 @@ def q74_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Interval join keys on user_id — a plain keyed shuffle join with the 10-min range as residual condition, never a nested loop; streaming twin bounds state via watermarks.")
 def q75_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-join attribution (extension §2.3/§2.9): purchases
     credited to any same-user click in the preceding 10 minutes —
@@ -1273,6 +1376,7 @@ def q75_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Q5 shape: the defining c_nationkey = s_nationkey edge evaluates post-join between two dim arms; fact joins orders once (keyed shuffle), region filter prunes the broadcast build side.")
 def q76_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: revenue where the supplier is LOCAL to the
     customer (c_nationkey = s_nationkey) — the join graph's defining
@@ -1301,6 +1405,7 @@ def q76_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Q9 shape: p_type LIKE pushes to the part scan; the profit expression stays in exact decimal through one agg pass; fact joins orders once, supplier/part AQE-sized.", headline=True)
 def q77_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by nation × order-year across five
     tables. profit = disc_price − 0.6·p_retailprice·qty (the testdata
@@ -1336,6 +1441,7 @@ def q77_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Q21 shape: both correlations (EXISTS other supplier / NOT EXISTS other late) plan as left-semi and left-anti joins keyed on orderkey over a slim (orderkey,suppkey) projection — no nested loop; top-20 via TakeOrderedAndProject.", headline=True)
 def q78_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the ONLY late shipper in a
     multi-supplier order — a correlated EXISTS (another supplier in
@@ -1383,6 +1489,7 @@ def q78_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("percent_rank/cume_dist/nth_value share ONE per-custkey window sort; the RANGE frame adds a second spec on the same partition key, so both ride a single o_custkey shuffle.")
 def q79_window_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window battery round 2 (completing q57): percent_rank /
     cume_dist / nth_value over one total-ordered spec, plus a RANGE
@@ -1411,6 +1518,7 @@ def q79_window_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Seven date expressions, all in the scan projection: no exchange at all (pure per-row battery).")
 def q80_date_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-function battery over o_orderdate: add days / add months
     (end-of-month clamping), last_day, month truncation, ISO weekday
@@ -1431,6 +1539,7 @@ def q80_date_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Four higher-order array expressions (filter/fold/sort/zip) all in the scan projection — zero exchanges; the L2 fold is an explicit left-to-right double accumulation, the cross-engine-stable summation order.")
 def q81_array_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions over embeddings (completing q58's
     element/size/minmax surface): filter (positive-count), transform +
@@ -1459,6 +1568,7 @@ def q81_array_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Hand-decorrelated Q17: per-part averages aggregate once (partial map-side) and join back unhinted — AQE broadcasts while they fit, co-shuffles both sides on partkey at 100×; the threshold compares in exact decimal, multiplied through.")
 def q69_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated aggregate filter — revenue from
     lineitems whose quantity is below 20% of their part's average
@@ -1483,6 +1593,7 @@ def q69_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("mapInPandas streams corpus partitions through Arrow into per-batch numpy scoring (no per-row pickling, no corpus shuffle); only the per-query top-k window exchanges — the Python stage replaces q24's per-pair fold with one GEMM-shaped pass per batch.")
 def q66_embedding_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized Pandas-UDF twin of q24: per-Arrow-batch numpy
     scoring (mapInPandas) with left-to-right dim accumulation for
@@ -1493,6 +1604,7 @@ def q66_embedding_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
+@query("The HAVING-filtered agg keys on l_orderkey; its output is tiny (sum>250 survivors) so the join back to orders broadcasts the SURVIVORS, not the fact — at 100 TB the quantity agg is the only fact shuffle.", headline=True, r1=True)
 def q62_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: aggregate-subquery semi join — orders whose
     total line quantity exceeds 250, joined back to order/customer
@@ -1520,6 +1632,7 @@ def q62_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Quarter filter pushes to the scan; ONE fact scan + one supplier-key shuffle; the global MAX is a window over the tiny per-supplier agg (naive agg+join would scan the fact twice); winner filter compares exact decimals.")
 def q63_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: max-of-aggregate selection — the supplier(s)
     with the highest revenue in one quarter. The global max is a
@@ -1548,6 +1661,7 @@ def q63_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("nation hinted, supplier AQE-sized; numerator and denominator share ONE agg pass (CASE inside sum) — no second scan, one exchange on ship-year.")
 def q64_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: market-share ratio per year — NATION_9's share
     of shipped revenue. Numerator and denominator come out of ONE agg
@@ -1575,6 +1689,7 @@ def q64_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Expand writes one row per grouping set (×3) BEFORE the single hash agg — same plan family as rollup/cube, still exactly one exchange.")
 def q65_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (completing the q18 rollup / q35 cube
     family): per-status totals, per-priority totals, and the grand
@@ -1595,6 +1710,7 @@ def q65_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("All four repetition ratios are per-row array expressions over a ONCE-materialized token array — zero exchanges; the per-row cost is O(distinct·total) on ~100-token docs, never a corpus-wide op.")
 def q82_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document: duplicate-token
     fraction, most-frequent-token share, duplicate bigram/trigram
@@ -1618,6 +1734,7 @@ def q82_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Both sides explode to shingle rows; the left-semi join keys on the shingle string (one shuffle each side, AQE broadcasts the distinct benchmark set when small); per-doc hit counts reuse the doc_id shuffle — never pairwise.")
 def q83_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-decontamination pass (operators/dedup.ngram_containment):
     docs 0-24 stand in for an eval benchmark; every other document
@@ -1630,6 +1747,7 @@ def q83_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_containment(corpus, bench, ngram=5)
 
 
+@query("The sampling filter is a scan-stage md5 expression (zero shuffles); only the per-language audit agg exchanges — membership is partitioning-independent by construction.")
 def q84_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language downsampling
     (operators/sampling.stratified_hash_sample): keep 25% of English,
@@ -1648,6 +1766,7 @@ def q84_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Six columns profiled in ONE scan: Catalyst's Expand-based multi-distinct rewrite feeds a single two-stage hash agg; the unpivot explodes one driver-sized row. The approximate=True HLL variant drops the Expand for 100 TB.")
 def q85_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column census over orders (operators/profiling.profile): row /
     null / exact-distinct counts and numeric min-max for six columns
@@ -1669,6 +1788,7 @@ def q85_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("All four rule flags evaluate in the scan projection; one single-row conditional-sum agg, then a 5-row unpivot — the funnel costs exactly one pass over the corpus.")
 def q86_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter funnel over documents — the pass/fail audit of a
     Gopher-style rule chain (length → mean word length → stopword
@@ -1712,6 +1832,7 @@ def q86_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(F.explode(F.array(*rows)).alias("s")).select("s.*")
 
 
+@query("Eight moment aggregates share ONE partial+final hash-agg pass (numerically-stable pairwise merge of map-side partials); a single exchange on the 3-value flag key.")
 def q87_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical-moment aggregate battery per return flag: sample/
     population stddev and variance of quantity, correlation and both
@@ -1737,6 +1858,7 @@ def q87_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Nine string/regex expressions all evaluate in the scan projection; the only exchange is the compact group-key agg — nothing leaves codegen.")
 def q88_string_battery2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String/regex battery round 2 (completing q50's substring/upper/
     replace/LIKE surface): regexp_extract of the numeric id, regex
@@ -1783,6 +1905,7 @@ def _derived_partsupp(li: DataFrame) -> DataFrame:
     )
 
 
+@query("Q4 shape: the EXISTS plans as a hash LEFT SEMI keyed on orderkey with the ship-lag residual riding on it — lineitem is probed, never materialized; the date range pushes to the orders scan.")
 def q89_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: order counts per priority for one year, kept
     only when EXISTS a lineitem shipped >45 days after the order date
@@ -1806,6 +1929,7 @@ def q89_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return late.groupBy("o_orderpriority").agg(F.count("*").alias("order_count"))
 
 
+@query("Q2 shape: derived partsupp aggregates once on (partkey,suppkey); the min-cost window re-partitions on ps_partkey only (same data, narrower key); nation/region broadcast, part/supplier AQE-sized — at 100× the partsupp agg is the only fact-sized shuffle.", headline=True)
 def q90_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: for each small part, the cheapest EUROPE
     supplier (correlated-min subquery decorrelated into a ranking
@@ -1841,6 +1965,7 @@ def q90_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Q16 shape: NOT IN is a LEFT ANTI against the negative-balance keys (null-free by construction); COUNT DISTINCT expands on (brand,size,suppkey) — bounded groups, two-stage agg, no skew.")
 def q91_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per (brand, size)
     over the derived partsupp, excluding one brand and any supplier
@@ -1865,6 +1990,7 @@ def q91_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Q20 shape: per-(part,supp) and per-part sums share the l_partkey shuffle; the supplier keep-set is LEFT SEMI so multi-part qualifiers emit once; the 1997 range pushes to the fact scan.")
 def q92_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: NATION_3 suppliers who, for some part, shipped
     more than half of that part's 1997 volume (availqty>½·demand
@@ -1892,6 +2018,8 @@ def q92_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Q11 shape: the HAVING>scalar subquery is a one-row crossJoin broadcast; the threshold comparison multiplies through so both engines compare exact decimals; one partkey shuffle after the nation semi-filter.",
+       nested_loop="the BNLJ is the 1-row total-value broadcast (the Q11 HAVING scalar); every per-part row pairs with exactly one build row.")
 def q93_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose NATION_5-supplied value exceeds
     0.1% of that nation's total (the HAVING > scalar-subquery becomes
@@ -1921,6 +2049,7 @@ def q93_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One window cumsum per lang partition and an agg on the SAME keys — a single sort-shuffle serves both; bin ids derive from token offsets, so range-sub-sharding at 100 TB changes no answer.")
 def q94_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-sequence packing audit: stream documents per language
     in doc_id order into contiguous 2048-token bins (a doc's bin is
@@ -1948,6 +2077,8 @@ def q94_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Group sizes and the token total come from one agg + one-row crossJoin broadcast; token counting is a scan-stage array expression — the mixture table costs one corpus pass.",
+       nested_loop="the BNLJ is the 1-row totals broadcast (token total + group count) fanned onto the ~|sources×langs| mixture rows.")
 def q95_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-mixture rebalancing: per (source, lang) token shares and
     the resampling weight that would flatten the mixture to uniform
@@ -1979,6 +2110,7 @@ def q95_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Chunking is a scan-stage array expression; one explode to distinct (doc, passage), then both keyed exchanges carry xxhash64(passage) (r13: ~5x fewer shuffle bytes than the passage strings; oracle still counts strings, equality pinned by the 3-SF sweeps), one join back on the hash, one doc-key agg — linear in total passages, no pair join at any scale.", headline=True)
 def q96_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Passage-level exact dedup audit: per doc, how many of its
     distinct 3-token passages also appear in another document — the
@@ -1988,6 +2120,7 @@ def q96_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.passage_dedup_stats(docs, width=3)
 
 
+@query("Explode + (lang, term) agg with map-side partials; the cumulative-coverage window sorts the VOCABULARY per lang (distinct terms, not tokens) — the sort input stays millions-scale under a 100 TB corpus while the linear explode+agg does the heavy lifting.", headline=True)
 def q97_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-vocab sizing per language: distinct terms, total
     tokens, and the smallest frequency-ranked vocabulary covering 90%
@@ -1996,6 +2129,8 @@ def q97_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.vocab_coverage(docs, by_col="lang", coverage=0.9)
 
 
+@query("Scoring is q24's broadcast-queries pattern (corpus never shuffles); the vote adds a k-rows-per-query groupBy and one window — negligible; labels join via broadcast. Swap the scorer for ivf_topk at web scale, vote logic unchanged.",
+       nested_loop="the BNLJ is q24's brute-force scorer (small query set broadcast against the streaming corpus); swap in ivf_topk for web scale — the vote stage is scorer-agnostic.")
 def q98_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out 5-NN majority-vote label audit for queries
     vec_id < 10 (similarity.py knn_label_vote over the exact scorer)."""
@@ -2010,6 +2145,7 @@ def q98_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Change detection (lag+row_number) and interval assembly (lead+version) share the SAME (user × time) sort — Catalyst plans one shuffle + one sort feeding both Window nodes; no self-join, no per-row upserts, cost independent of history depth.", headline=True)
 def q99_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 dimension history: collapse each user's event_type
     timeline into versioned validity intervals (operators/scd.py) —
@@ -2022,6 +2158,7 @@ def q99_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("LSH pair generation is q21's bucketed shape; the greedy fixpoint iterates only the candidate-id frontier (localCheckpoint per round, like q72) — the audited plan is the final per-lang agg over the converged keep flags; the corpus passes once.")
 def q100_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup DEDUP (not just pair listing): MinHash LSH
     pairs resolved by the arrival-order greedy filter (first doc_id
@@ -2037,6 +2174,7 @@ def q100_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Prefix-filtered q-gram blocking (AllPairs family): each string joins on only its q·d+1 RAREST grams (canonical df order from one agg), so the candidate join never keys on Zipf-hot grams; below-threshold (short/degenerate) strings route through the r4 length-window fallback block — scan-stage membership test, ~0.2s at bench scale, zero fallback rows on this corpus — making recall for dist<=d exact at EVERY length mix; Levenshtein runs on candidates only; resolution is one window.", headline=True)
 def q101_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution: deterministic one-char-deleted corruptions
     resolved back to the clean set via prefix-filtered q-gram blocking
@@ -2061,6 +2199,8 @@ def q101_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("dist", F.col("dist").cast("long"))
 
 
+@query("Per-type HLL partials + one union-merge agg + the direct sketch — the mergeable-sketch contract pinned as ACCURACY bounds (both estimates in the 5% band, merged within 2% of direct), not byte equality: the HLL_4 union path lands registers differently than the direct sketch past coupon mode (caught by the round-6 sf0.1 sweep).",
+       nested_loop="the BNLJ is the 1-row×1-row crossJoin of the merged-sketch row with the direct-sketch row — the contract comparison, bounded by construction.")
 def q102_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch contract: Datasketches HLL partials built per
     event_type, unioned WITHOUT rescanning, must be ACCURACY-
@@ -2111,6 +2251,7 @@ def q102_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Events collapse to the hourly grid FIRST (one user-keyed agg), so the sequence() explode is linear in grid slots, not events; the grid←slots left join is AQE-broadcast here and co-shuffles on (user, slot) at 100×; the forward-fill window rides the same user_id partitioning. Grid granularity, not event volume, bounds the output.", headline=True)
 def q103_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user hourly gap fill + forward fill over the irregular
     events stream (operators/timeseries.gap_fill). Every exchange is
@@ -2121,6 +2262,7 @@ def q103_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return timeseries.gap_fill(events, "user_id", "ts", "value", "hour")
 
 
+@query("Moment sums (count/Σv/Σv²) aggregate map-side in exact decimal — one pass, one exchange on the bounded event_type key; the per-type stats row broadcasts back (hinted: cardinality is the type enum, not SF). The z flags evaluate in the probe scan stage.")
 def q104_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type z-score anomaly audit
     (operators/timeseries.zscore_flags). Mean/stddev come from EXACT
@@ -2131,6 +2273,7 @@ def q104_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return timeseries.zscore_flags(events, "event_type", "value", 2.0)
 
 
+@query("percentile_disc sorts within the 5 priority groups (one shuffle); the per-group cutoffs broadcast back (hinted: bounded key) and clipping runs in the probe scan stage; the clipped decimal mean reuses the same 5-group agg shape. Two passes over orders by design — percentiles are holistic.")
 def q105_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized robust mean per order priority: clip at the exact
     discrete P05/P95 (percentile_disc picks REAL data values —
@@ -2172,6 +2315,7 @@ def q105_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Per-user first-day and per-(user,day) distinct both key on user_id; the cohort join is unhinted (AQE broadcasts the per-user firsts here, co-shuffles at 100× — it GROWS with users, so no forced hint); final cell agg groups ~8 offsets × cohort days.")
 def q106_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users bucketed by first-active day,
     distinct-user counts at day offsets 0..7. Two keyed aggregations
@@ -2195,6 +2339,7 @@ def q106_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Canonicalization (lower/regex/collapse) and md5 are scan-stage expressions; the union of originals + synthesized variants feeds ONE shuffle on the canonical hash. Linear at any scale — the variant branch re-scans only the doc_id%5 slice.")
 def q107_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalized near-exact dedup: casefold, strip non-alnum,
     collapse whitespace, then hash-group — the normalization pass that
@@ -2226,6 +2371,7 @@ def q107_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One explode to distinct (doc, bigram) rows; first-occurrence agg keys on the bigram, and the join back reuses that same key (AQE broadcasts the firsts side here; at 100× both sides co-shuffle on the gram — never pairwise); the per-doc novelty agg is the second keyed exchange.", headline=True)
 def q108_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram novelty: the share of a doc's distinct
     word bigrams whose FIRST corpus occurrence (min doc_id) is this
@@ -2261,6 +2407,7 @@ def q108_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Both calendars pre-aggregate to one row per day BEFORE the full outer join, so the SortMergeJoin FullOuter exchanges day-cardinality rows, not facts; the src CASE evaluates post-join on null flags.", headline=True)
 def q109_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER reconciliation of two activity calendars (order days
     vs event days) — the join type the suite didn't cover. The key
@@ -2287,6 +2434,7 @@ def q109_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Catalyst decorrelates the LATERAL subquery into a join + per-region window rank (DomainJoin → rank<=2 filter): nation/customer join broadcasts, the windows ride one keyed sort — NOT one subquery execution per outer row; identical physical family to the window-rank twin q10.")
 def q110_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL join: per region, the top-2 nations by total
     customer balance, expressed as a lateral subquery with its own
@@ -2314,6 +2462,8 @@ def q110_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Min/max stats collapse to ONE row and broadcast (scalar crossJoin); the scale + 32-term bit-interleave tree is pure scan-stage codegen — zero data shuffles. write_zordered adds only the range-shard exchange on the key.",
+       nested_loop="the BNLJ is the 1-row min/max stats broadcast fanned onto every event row — the scalar-stats pattern (q61/q93), not a pairing.")
 def q111_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) clustering key over (user_id, value)
     (operators/zorder.py): min/max scalar stats broadcast back, affine
@@ -2330,6 +2480,8 @@ def q111_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keyed.select("event_id", F.col("_z").alias("z"))
 
 
+@query("Global min/max is a 1-row broadcast; bin assignment runs in the scan stage and the agg keys on the 20-value bin — bounded groups, map-side partials, one exchange.",
+       nested_loop="the BNLJ is the 1-row min/max broadcast fanned onto every order row — scalar stats, not a pairing.")
 def q112_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of order totals (20 bins over the global
     min/max): the profiling shape q85 doesn't cover. One scalar
@@ -2359,6 +2511,8 @@ def q112_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("The sketch and both exact percentiles come from one agg pass (percentile sorts within the single group); the 2-row targets broadcast back over the scan to measure achieved rank — the second pass is the price of auditing the first.",
+       nested_loop="the BNLJ is the 2-row percentile-targets broadcast measured against the scan — a bounded fan-out for the rank audit.")
 def q113_approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-error contract for the t-digest-style percentile sketch
     (q19/q102 design): sketch VALUES are engine-specific, so the query
@@ -2409,6 +2563,8 @@ def q113_approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+@query("One fact shuffle to per-key counts; the Gini's global rank is STAGED (r4): count-range buckets from broadcast quantiles, per-bucket ranking windows, B-row offsets broadcast back — no single-task sort of the key population; top-10 rides TakeOrdered; the 1-row stat legs recombine via scalar broadcasts.",
+       nested_loop="all BNLJs are 1-row scalar-stat recombinations (totals/top-10/entropy legs) — the q61/q93 pattern.")
 def q114_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join/agg-key skew diagnostic over orders-per-customer: heavy-key
     shares (max, top-10), Shannon entropy, and Gini of the key
@@ -2513,6 +2669,7 @@ def q114_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Spark 4 recursive CTE: the frontier shrinks 10× per step (parent = key DIV 10), so the walk is n·log₁₀(n) total rows of keyed projection — bounded recursion, no joins against raw fact data.")
 def q115_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE hierarchy walk (Spark 4's recursive CTE — the
     SQL surface behind q72/q100's iterative fixpoints): every customer
@@ -2538,6 +2695,7 @@ def q115_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Six commutative-associative aggregates share ONE partial+final hash-agg pass — order-independent bit-exact merges, one exchange on the 5-value priority key.")
 def q116_agg_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional / boolean / bitwise aggregate battery per order
     priority: count_if, bool_or / bool_and (SQL ANY/EVERY), and the
@@ -2557,6 +2715,8 @@ def q116_agg_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Each funnel stage is a filtered per-user min agg joined to the previous stage on user_id — per-stage state is one row per surviving user; the four stage counts recombine as 1-row broadcasts.",
+       nested_loop="all BNLJs are 1-row stage-count recombinations — the q61/q93 scalar pattern.")
 def q117_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel conversion (view → click-after-view →
     purchase-after-click): each stage is the user's FIRST qualifying
@@ -2597,6 +2757,7 @@ def q117_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Three chained mapInPandas stages (generate -> frame-slice -> stats) fuse into ONE task pipeline: zero exchanges, binary payloads never shuffle — q71's argument with a 1:N frame fan-out in the middle.")
 def q118_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video frame sampling over binary payload columns
     (operators/multimodal.py): a deterministic 10-frame 8x6 raw-RGB
@@ -2616,6 +2777,7 @@ def q118_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.frame_byte_stats(frames)
 
 
+@query("Base ∪ changes shuffles ONCE on the key for the latest-op window (q14's LWW cost envelope); deletes drop in the same filter, and the audit agg groups the 3-value status key.")
 def q119_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC apply: a synthesized change stream over orders (every 3rd
     key updates its price by +10.00 — an exact decimal add, so no
@@ -2659,6 +2821,7 @@ def q119_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("parse_json + variant_get run in the scan stage (no declared schema to break on drift); the multi-distinct agg is Catalyst's Expand rewrite on the bounded type key — one exchange.")
 def q120_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured VARIANT path (Spark 4): parse_json the props
     column WITHOUT declaring a schema (q11's from_json twin needs
@@ -2679,6 +2842,7 @@ def q120_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("collect_list rides the ONE group-key exchange; sort+slice are per-group in-memory (bounded by group size) — no window shuffle for the ranked-list shape.")
 def q121_grouped_topk_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped top-k materialized AS AN ORDERED ARRAY (the serving-
     layer shape: one row per group carrying its ranked list): top-3
@@ -2704,6 +2868,8 @@ def q121_grouped_topk_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE corpus scan: unigrams+bigrams explode together under a kind tag into a single token-keyed count shuffle, persisted vocab-sized — the scans listed below are all InMemoryTableScans of that one cache (the FileScan executes once at materialization; without the cache each of the 4 references re-scans the corpus, since filter pushdown defeats ReuseExchange). Unigram joins are vocab×vocab, totals ride 1-row broadcasts; the top-20 is TakeOrdered(20) + a 20-row rank window (r4 — no global window over the bigram set).",
+       nested_loop="the BNLJ is the 1-row (n_uni, n_bg) totals broadcast fanned onto the filtered bigram set — the q46 scalar pattern.")
 def q122_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus collocations by pointwise-mutual-information LIFT:
     bigram observed/expected ratio over the whole corpus. Like q46's
@@ -2784,6 +2950,8 @@ def q122_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Count-then-filter pre-pass (implemented r4): df counts on the persisted pair table, the stopword cut prunes hot terms via LEFT SEMI before any posting list exists, and a ranked filter bounds each surviving term to 8 postings — no term ever materializes its full list in an agg buffer.",
+       nested_loop="the BNLJ is the 1-row n_docs broadcast fanned onto per-term rows — q46's scalar idf pattern.")
 def q123_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index construction contract (the retrieval-layer
     shape): per term, document frequency, rational idf (n_docs/df,
@@ -2828,6 +2996,7 @@ def q123_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Two grouped percentile_disc passes on the bounded event_type key; the per-group cutoffs rejoin as broadcasts so the fact side never reshuffles. percentile_disc sorts within groups — at 100× swap to approx_percentile for the first pass and keep disc only for the audit.")
 def q124_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier audit per event type: median absolute deviation
     (MAD) with a 3×MAD fence — q104's z-score twin that a heavy-tailed
@@ -2875,6 +3044,7 @@ def q124_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Pure map stage: sequence→explode→slice all in the scan projection; ZERO exchanges. The only cost is the overlap's inherent ~1.33× token amplification — exactly the shape that scales by adding executors.", headline=True)
 def q125_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG-style overlapping chunker: 32-token windows at stride 24
     (8-token overlap) per document, each chunk fingerprinted for
@@ -2904,6 +3074,8 @@ def q125_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One tokenize-explode persisted feeds both the vocab count (term-keyed shuffle, vocab-sized output) and the per-doc join; the count side is sublinear in corpus so AQE broadcasts it at small SF and falls back to a term-keyed shuffle at 100 TB. Per-doc sums are exact BIGINTs — one final division.", headline=True,
+       nested_loop="the BNLJ is the 1-row corpus-token-total broadcast fanned onto the per-token join — the q46 scalar pattern.")
 def q126_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram language-model quality score per document (the CCNet-
     style perplexity proxy used to filter pretraining corpora): each
@@ -2943,6 +3115,8 @@ def q126_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc
 
 
+@query("Decile bounds via percentile_disc (distributed sort-agg) ride a 1-row broadcast; binning is a per-row array fold in the scan stage; final agg on the 10-value bin key. NO global ntile window — nothing serializes onto one task.",
+       nested_loop="the BNLJ is the 1-row decile-bounds broadcast fanned onto every order row — the q112 scalar-stats pattern.")
 def q127_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (quantile) histogram of order totals WITHOUT a
     global ntile: decile boundaries come from percentile_disc (a
@@ -2986,6 +3160,7 @@ def q127_equidepth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Two-level keyed agg: per-(custkey,priority) partials combine map-side, so the custkey shuffle carries ≤5 rows/customer; all map ops are per-row expressions after the agg.")
 def q128_map_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-type function battery: per customer, an order-priority →
     count map built with map_from_entries(collect_list(struct)), then
@@ -3024,6 +3199,7 @@ def q128_map_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("History (2 windows over one user_id sort) and grid (agg + sequence explode) each shuffle once on user_id; the PIT match is the per-key hash-join probe with the interval predicate applied inside the match — versions-per-key cost, never a cross product.", headline=True)
 def q129_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time join (operators/scd.pit_join): an hourly probe
     grid per user is enriched with the SCD2 event_type version that
@@ -3059,6 +3235,7 @@ def q129_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Single grouped pass on the 5-value priority key; all moment sums are exact (BIGINT/decimal) partial+final aggs in codegen; slope/intercept are per-group scalar expressions after the agg.")
 def q130_regression_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-priority simple linear regression (order price vs order
     date) WITHOUT regr_slope: the four moment sums accumulate exactly
@@ -3092,6 +3269,8 @@ def q130_regression_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Stratum table is bounded by source×lang cardinality and persisted — the corpus-sized token-count agg executes ONCE; quota/total/leftover and the global remainder-ranking window all run on the ~100 cached rows.",
+       nested_loop="both BNLJs are 1-row scalar broadcasts (token total; leftover seat count) onto the bounded stratum table.")
 def q131_sample_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest-remainder (Hamilton) apportionment of a 1000-doc
     sampling budget across (source, lang) strata by token mass — the
@@ -3143,6 +3322,8 @@ def q131_sample_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One tokenize scan into the persisted (source,term) count table; global/per-source totals derive from the cache. The term join shuffles vocab-sized data (sublinear in corpus); per-source sums are exact BIGINT cross-products with one division each.", headline=True,
+       nested_loop="the BNLJ is the 1-row corpus-total broadcast fanned onto the (source,term) join — the q46 scalar pattern.")
 def q132_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total-variation divergence of each source's unigram
     distribution from the whole corpus — the drift/contrast metric a
@@ -3190,6 +3371,7 @@ def q132_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Distinct (source,term) persisted; the self-join keys on term (vocab-sized shuffle) and its output is bounded by sources² — never documents². Set sizes rejoin as broadcasts.")
 def q133_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise vocabulary Jaccard between sources — the corpus-
     overlap census that decides whether two crawls are worth keeping
@@ -3237,6 +3419,7 @@ def q133_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One lead() window + one agg, both keyed on user_id — scales with keys, not history. Weights are exact integer micros × decimal values; one division per key.")
 def q134_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user time-weighted average of the event value signal
     (operators/timeseries.time_weighted_avg): interval-weighted, not
@@ -3247,6 +3430,7 @@ def q134_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return timeseries.time_weighted_avg(ev, "user_id", "ts", "value", "event_id")
 
 
+@query("One grouped pass for the wide agg; unpivot is a per-row Expand (3 output rows per input) with zero extra exchanges.")
 def q135_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long UNPIVOT (the q40 pivot's inverse): per-returnflag
     measure sums melt into (flag, measure, value) rows — the
@@ -3267,6 +3451,8 @@ def q135_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Basket table (order × brand, distinct) persisted; pair explode is quadratic per basket, linear in orders. Supports join back as broadcasts; top-20 via TakeOrdered + a 20-row rank window (r4).", headline=True,
+       nested_loop="the BNLJ is the 1-row n_orders broadcast fanned onto the support-cut pair set — the q46 scalar pattern.")
 def q136_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket brand affinity: per-order distinct brand sets →
     pair supports → lift, the association-rule surface. The pair
@@ -3338,6 +3524,7 @@ def q136_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One lead() window on the user_id shuffle; counts and shares on the bounded type×type key.")
 def q137_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-journey transition matrix: (event_type → next event_type)
     counts per user timeline plus each source state's outgoing share —
@@ -3364,6 +3551,7 @@ def q137_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One lead() window on user_id; the log2 bucket is an exact integer bit-length expression in the scan stage; final agg on the bounded type×bucket key.")
 def q138_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed inter-arrival-time histogram per event type —
     the latency-distribution shape ops dashboards draw. The bucket is
@@ -3393,6 +3581,7 @@ def q138_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Ranking window and group count share the one event_type partition spec — a single Exchange serves both. Conscious tradeoff: exact per-group ranks sort each (bounded-cardinality) type on one task; at 100 TB/type use the q127 boundary-broadcast bins instead (docstring).")
 def q139_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group quantile (rank) normalization — the feature
     transform that maps a skewed signal onto uniform [0,1] before
@@ -3425,6 +3614,7 @@ def q139_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Distinct (cust, month) then two windows + one agg, all on the custkey shuffle — the islands trick is pure integer arithmetic, no self-joins across months.")
 def q140_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest run of CONSECUTIVE months with ≥1 order per customer —
     the gaps-and-islands idiom (month_index − row_number is constant
@@ -3467,6 +3657,7 @@ def q140_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Interval join = equality-key hash join with the range residual (q75 shape); the per-purchase count window keys on purchase_id; credits clamp to decimal so the user-level sum is one exact agg.")
 def q141_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution (completing q75's single-touch
     credit): each purchase splits its value EQUALLY across all
@@ -3508,6 +3699,7 @@ def q141_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One grouped percentile_disc sort-agg on the bounded (iso_year, iso_week) key; week extraction runs in the scan projection.")
 def q142_weekly_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bucketed percentile bands: per ISO (year, week), the
     discrete P50/P90 of order totals plus volume — the trend-line
@@ -3535,6 +3727,7 @@ def q142_weekly_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("No range-window distinct: each distinct user-day explodes into its ≤7 cover days (linear 7× amplification) and one day-keyed distinct-count finishes — the shape that survives 100 TB where a per-day DISTINCT window rescans the trailing week per day.", headline=True)
 def q143_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / trailing-7-day WAU / stickiness per day — computed the
     distributed way: instead of a per-day COUNT(DISTINCT) over a
@@ -3569,6 +3762,8 @@ def q143_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Per-customer agg persisted; 9 percentile_disc boundaries in ONE distributed sort-agg ride a 1-row broadcast; scoring is per-row arithmetic; final census on the bounded 4³ segment key.",
+       nested_loop="the BNLJ is the 1-row nine-boundary broadcast fanned onto per-customer rows — the q127/q112 scalar-stats pattern.")
 def q144_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation: recency / frequency / monetary
     quartiles via percentile_disc boundaries (the q127 equi-depth
@@ -3615,6 +3810,7 @@ def q144_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One keyed window on custkey (completeness + recency sort); masking and field counting are scan-stage expressions.")
 def q145_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivorship / golden-record dedup (the MDM completion of LWW
     q14): among each customer's order rows, the MOST COMPLETE record
@@ -3661,6 +3857,8 @@ def q145_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Cell counts persisted; marginals derive from the cache; everything joins back as broadcasts on bounded keys. Emitting per-cell contributions keeps all arithmetic one-division deterministic.",
+       nested_loop="the BNLJ is the 1-row grand-total broadcast fanned onto the bounded cell table — the q61/q93 scalar pattern.")
 def q146_chisq_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence audit of the priority × status
     contingency table, reported PER CELL: observed count, expected
@@ -3716,6 +3914,8 @@ def q146_chisq_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Per-customer spend persisted; decile bounds in one distributed sort-agg ride a 1-row broadcast; binning is a per-row fold; final agg on the 10-value decile key.",
+       nested_loop="both BNLJs are 1-row scalar broadcasts (decile bounds; revenue total) — the q127 pattern.")
 def q147_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration ("do 20% of customers drive 80%?"):
     customers bucket into spend deciles via percentile_disc
@@ -3771,6 +3971,7 @@ def q147_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One distinct + one bucket-keyed integer agg — parallelizes over buckets; deliberately NOT a lead()-over-everything gap list, which would serialize the global sort.")
 def q148_id_continuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ID-continuity audit — the ingestion data-quality check "did we
     drop rows?": order keys bucket into fixed 1000-wide ranges and
@@ -3802,6 +4003,7 @@ def q148_id_continuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Self-join keyed on (user, type) with time/value bands as residuals — the equality key bounds pairing to within-key groups, never a time-only cross product.")
 def q149_double_fire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Double-fire detection — near-duplicate EVENTS (same user, same
     type, near-equal value |Δv|<5, within 1 hour), the telemetry twin
@@ -3838,6 +4040,7 @@ def q149_double_fire(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Char-pair extraction is a per-token array expression (amplification bounded by word length — linear in corpus bytes); one pair-keyed count shuffle; top-20 via TakeOrdered + a 20-row rank window (r4).", headline=True)
 def q150_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-training step zero: corpus-weighted counts of
     adjacent CHARACTER pairs inside words — the first BPE merge's
@@ -3860,6 +4063,8 @@ def q150_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_ranked(counts, 20, F.desc("n"), F.asc("pair"))
 
 
+@query("Per-row integer bin arithmetic in the scan stage; one bounded-key agg; padded-total scalar rides a 1-row broadcast.",
+       nested_loop="the BNLJ is the 1-row padded-total broadcast onto the bounded bin table — the q46 scalar pattern.")
 def q151_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing-efficiency census: docs bucket by token length into
     32-token bins; per bin, the padding waste a naive pad-to-bin-top
@@ -3892,6 +4097,7 @@ def q151_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Count-then-rank: one (brand,type) count shuffle + a brand-keyed window over the COUNTED table (bounded), never over raw rows.")
 def q152_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped MODE with a deterministic tiebreak (most common part
     type per brand; ties → lexicographically first type) — the
@@ -3913,6 +4119,7 @@ def q152_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Line-side keyed agg + header join (AQE-sized) + bounded-key agg; drift stays exact decimal so the 1-cent verdicts are partition-order-free.")
 def q153_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header↔detail reconciliation audit: does each order's stored
     total match the sum of its line charges? Per order status:
@@ -3954,6 +4161,7 @@ def q153_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("posexplode is linear (64×); (label,dim) agg then label rollup — integer micro-unit sums keep every intermediate exact until the per-label division.")
 def q154_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids, cross-engine-exact: components
     clamp to INTEGER micro-units — floor(v·1e6) of the float32 value
@@ -3997,6 +4205,7 @@ def q154_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Radius needs NO pairwise pass (E|v|²−|centroid|² from the same sums); the only quadratic piece is the labels² centroid pairing — bounded by label cardinality, never corpus. Persisted comp/per_dim serve all four aggregates from one explode.")
 def q155_cluster_tightness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-quality diagnostics per embedding label — mean squared
     radius (within-cluster tightness, via E|v|² − |centroid|², so NO
@@ -4095,6 +4304,7 @@ def q155_cluster_tightness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("All set ops are per-row scan-stage expressions against a literal probe array; one bounded source-key agg.")
 def q156_array_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array set-operation battery (completing q58/q81's element/
     fold surface): per document, the distinct-token set intersected /
@@ -4121,6 +4331,7 @@ def q156_array_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("bit_or partials combine map-side (associative) — one custkey shuffle carries a single long per key; bit_count is a per-row expression after the agg.", headline=True)
 def q157_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitmap-encoded distinct for small domains: each customer's set
     of order statuses packs into ONE BIGINT via bit_or of per-status
@@ -4150,6 +4361,7 @@ def q157_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Sessionization is the q48 lag-cumsum on one user-keyed sort; the path agg collects ≤3 structs per session; counts shuffle on the bounded path string; top-10 via TakeOrdered + a 10-row rank window (r4).", headline=True)
 def q158_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path mining: the ordered first-3-event-type path of every
     30-minute session, counted corpus-wide — the navigation-pattern
@@ -4189,6 +4401,7 @@ def q158_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_ranked(counts, 10, F.desc("n_sessions"), F.asc("path"))
 
 
+@query("As-of = equality-key join + per-purchase max (no window over raw events); the one-row percentile agg sorts only the conversion latencies.")
 def q159_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase conversion latency distribution: for each
     purchase, the time since the user's NEAREST PRECEDING click
@@ -4233,6 +4446,7 @@ def q159_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One user-keyed window pass; the RANGE frame is value-bounded integer micros, so the count is tie-order-free.", headline=True)
 def q160_trailing_window_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-EVENT trailing-hour activity: how many same-user events
     fall in the preceding hour, as a value-based RANGE frame over
@@ -4255,6 +4469,7 @@ def q160_trailing_window_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One collect per user (array bounded by per-key history); the fold is a per-row expression after the agg — the sequential recurrence costs a keyed shuffle, not a window scan per step.", headline=True)
 def q161_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially-weighted moving average (α=0.25) of the
     value signal — the sequential recurrence Spark has no window
@@ -4288,6 +4503,7 @@ def q161_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per
 
 
+@query("One key-equi FULL OUTER (AQE-sized) + a one-row audit agg; only the two id columns are ever read.")
 def q162_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modality coverage audit: do the text corpus and the
     embedding store line up row-for-row? FULL OUTER on doc_id↔vec_id
@@ -4322,6 +4538,7 @@ def q162_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Hash + token count in one scan (persisted); keep-set is a hash-keyed min agg; savings are exact integer sums with one final division.")
 def q163_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup impact report: per source, documents and tokens BEFORE
     vs AFTER exact-hash dedup (md5 of text, first doc_id keeps) — the
@@ -4353,6 +4570,7 @@ def q163_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Fact-side work is the q02 star join (one agg exchange); the ratio-to-parent window runs over the bounded 25-row nation table.")
 def q164_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratio-to-parent analytics: each nation's share of its REGION's
     revenue (the drill-down percentage every BI rollup shows next to
@@ -4387,6 +4605,7 @@ def q164_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One md5 per doc in the scan stage; one hash-keyed count; the ≥2 cut applies post-agg — linear, bounded per-doc work.", headline=True)
 def q165_prefix_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate sniff: documents sharing the SAME first-8-token
     prefix (templated intros, mirrored pages) — the cheap pre-filter
@@ -4408,6 +4627,7 @@ def q165_prefix_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Two Arrow map stages (synthesize clip, decode+stats), zero shuffles, zero joins — embarrassingly parallel per clip; at 100 TB the synthesize stage is replaced by a binary-column scan and the shape is unchanged.", headline=True)
 def q166_audio_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL raw-PCM16 audio decode over binary payload columns
     (extension; operators/multimodal.py — q71's design for the audio
@@ -4423,6 +4643,7 @@ def q166_audio_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_channel_stats(media, channels=2)
 
 
+@query("Three chained Arrow map stages (synthesize, floor-div downmix re-encode, decode+stats) — still zero shuffles; payload-in/payload-out downmix composes with any downstream media op.")
 def q167_audio_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mono downmix (floor-div channel mean, re-encoded PCM16 — the
     audio twin of q71's resize: payload in, payload out) followed by
@@ -4434,6 +4655,7 @@ def q167_audio_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_channel_stats(mono, channels=1)
 
 
+@query("Metrics accumulate inside the events scan (AccumulatorV2) — the noop write is the one action; the returned frame is a 1-row aggregate with the observed literals folded in. Zero extra scans of events beyond the observe pass + direct-check aggregate.")
 def q168_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible contract for the observe() surface (VERDICT r2
     #9 — previously pytest-only): quality metrics accumulate INSIDE
@@ -4481,6 +4703,7 @@ def _slice_through_parts(df: DataFrame, slice_col, n_slices, body, parts_dir):
         body(df.filter(F.pmod(slice_col, F.lit(n_slices)) == i), i, parts_dir)
 
 
+@query("Three partial-count writes (one keyed shuffle each over a third of the corpus) + one merge agg + top-20 — the same mergeable-partials state the streaming engine drives; at 100 TB the per-batch partial is the only state rewritten.")
 def q169_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible contract for the streaming top-k state
     (streaming/topk.py — mergeable per-batch token-count partials):
@@ -4499,6 +4722,7 @@ def q169_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_topk(spark, parts, k=20)
 
 
+@query("Three exact-decimal moment partials + one merge + broadcast of the 5-row stats to the scoring pass — identical shuffle count to q104, state-mediated.")
 def q170_streaming_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible contract for the streaming moments state
     (streaming/moments.py — exact-decimal (n, Σv, Σv²) partials):
@@ -4520,6 +4744,7 @@ def q170_streaming_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anomaly_audit(ev, read_moments(spark, parts))
 
 
+@query("Arrow-batched Python UDTF lateral per partition, md5 in the projection — zero shuffles like q125; the Python round-trip is the declared cost of the imperative surface (q125 is the production twin).")
 def q171_udtf_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible contract for the Python UDTF surface
     (functions/tablefuncs.ChunkDocUDTF — previously pytest-only):
@@ -4545,6 +4770,7 @@ def q171_udtf_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One Arrow grouped-agg pass (each group's values to one worker — declared order-statistic cost; q105 winsorized-decimal is the scale path) + a count agg joined on the ~5-row key set broadcast.")
 def q172_udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible contract for the grouped-agg pandas UDAF
     surface (functions/tablefuncs.make_trimmed_mean_udaf): 10%-
@@ -4579,6 +4805,7 @@ def q172_udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q21's signature/candidate shapes (one shingle shuffle, banded self-join on bucket keys) + two candidate-keyed joins for signatures and shingle sets — integer micro-unit comparison, linear in candidates.", headline=True)
 def q173_minhash_estimation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-accuracy audit for the MinHash family (extension): for
     every q21 LSH candidate pair, the 16-hash MinHash ESTIMATE of
@@ -4634,6 +4861,7 @@ def q173_minhash_estimation_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+@query("Two immutable snapshot writes + one full-outer join on the key over exactly the two compared versions (fingerprints computed in the scan stage) — linear, one shuffle; readers never replay a log.")
 def q174_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver contract for the versioned snapshot layer
     (sources/snapshots.py — VERSION-AS-OF time travel over immutable
@@ -4668,6 +4896,7 @@ def q174_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sn.diff_versions(spark, table, 0, 1, ["doc_id"])
 
 
+@query("The O(n²) dominance anti-join as a STAGED running-max sweep (round-3 advice fix): spend-range buckets from broadcast quantile boundaries, per-BUCKET window maxes (partitioned — no global single-task window), and a B-row cross-bucket running max broadcast back; the oracle keeps the NOT EXISTS definition so the staged sweep's equivalence is what gets checked.", headline=True)
 def q175_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D skyline / Pareto frontier (extension): customers not
     dominated on (max single-order price, order count) — no other
@@ -4765,6 +4994,7 @@ def q175_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("One per-group window sort with a running BIGINT weight sum; the 2·cum ≥ total pick stays in exact integers — no interpolation, same element on both engines.")
 def q176_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact weighted median per group (extension — the robust-stats
     family next to q124's MAD): per event type, the smallest value v
@@ -4799,6 +5029,7 @@ def q176_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Pure per-row higher-order functions over the embedding array — zero shuffles, zero joins; all arithmetic in BIGINT micro-units (|v| quantized then re-signed since Spark DIV truncates and DuckDB // floors).", headline=True)
 def q177_int8_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding int8 scalar quantization + reconstruction-error
     audit (extension — the compression step an ANN serving layer runs
@@ -4849,6 +5080,7 @@ def q177_int8_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Driver loop of 3 rounds, each one |E|-keyed join + one dst-keyed sum (edges persisted once); integer micro-unit ranks so the unrolled-SQL oracle matches bit-for-bit. Linear in |E| per round — the standard distributed PageRank shape.", headline=True)
 def q178_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact PageRank (extension; operators/graph.py — the
     iterative-fixpoint family next to q72's label propagation and
@@ -4877,6 +5109,8 @@ def q178_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("All four scalar rules share ONE aggregate scan (map-side partials, 1-row result); pk-unique adds one keyed count, the FK one left-anti join (AQE broadcasts the dim). Rule-per-row output so a gate is filter(~passed).", headline=True,
+       nested_loop="the two BNLJs are 1-row×1-row crossJoins stitching each keyed rule's violation count to its n_checked scalar — bounded by construction, one row per side.")
 def q179_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality expectations (extension;
     operators/expectations.py — the Great-Expectations shape): a
@@ -4917,6 +5151,7 @@ def q179_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return check_expectations(orders, rules, refs={"cust_fk": customer})
 
 
+@query("Three real change-log merges (dirty-bucket rewrites) + the lead() read — identical output to q104-style one-shot q99. The global row_number slice is fixture machinery only; production CDC feeds arrive time-ordered.")
 def q180_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver contract for the INCREMENTAL streaming SCD2 maintainer
     (streaming/scd2.py — q169/q170's pattern applied to the change-log
@@ -4961,6 +5196,7 @@ def q180_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_scd2_history(spark, state, "user_id", "event_type")
 
 
+@query("Three partial-aggregate part writes + one compaction rewrite + the final-merge agg — additive DECIMAL partials, so slicing and compaction are invisible to the result; the rollup never rescans raw events.", headline=True)
 def q181_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver contract for the continuous (hypertable-style) rollup
     (streaming/rollup.py — the last state-family member without a
@@ -4986,6 +5222,8 @@ def q181_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_rollup(spark, parts)
 
 
+@query("Cross-snapshot release gate: ONE aggregate scan per snapshot (all drift rules share it — count, null counts, distinct via the Expand rewrite), then 1-row×1-row arithmetic; drift ppm in exact DECIMAL(38,0) cross-products with one integral division, so verdicts are partition-order-free.", headline=True,
+       nested_loop="all three BNLJs are the 1-row×1-row crossJoin of the base snapshot's metric row with the current snapshot's — bounded by construction, one row per side per rule.")
 def q182_snapshot_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-snapshot expectations (extension; ties q174's versioned
     snapshots to q179's expectations engine — VERDICT r3 #8): commit
@@ -5028,6 +5266,7 @@ def q182_snapshot_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return check_snapshot_drift(spark, table, rules, base_version=0)
 
 
+@query("Two chained Arrow map stages (encode real PNGs, inflate+unfilter+stats) — zero shuffles, zero joins, q71's embarrassingly-parallel shape with a genuinely compressed wire format in the middle; at 100 TB the encode stage is replaced by a binary-column scan.", headline=True)
 def q183_png_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-image codec over binary columns (extension;
     operators/multimodal.py PNG section — upgrades round 3's 'all
@@ -5045,6 +5284,7 @@ def q183_png_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.png_channel_stats(media)
 
 
+@query("Two chained Arrow map stages (wrap PCM16 in real RIFF/WAVE, chunk-walk decode + stats) — zero shuffles, the q166 shape with genuine container parsing in the middle.", headline=True)
 def q184_wav_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio container parsing (extension; operators/multimodal
     WAV section — q183's PNG move applied to audio): each document's
@@ -5059,6 +5299,7 @@ def q184_wav_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.wav_channel_stats(media)
 
 
+@query("SemDeDup shape: the pair join keys on the CELL (equi-join), bounding the quadratic term by cell size; cells that outgrow exact_cell_limit auto-switch candidates to within-cell sign-LSH (probe-verified x1.06 wall for x100 data); norms precompute before the join multiplies rows; the drop set distincts and left-joins back.", headline=True)
 def q185_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (extension;
     operators/similarity.semantic_dedup — the embedding-space member
@@ -5073,6 +5314,7 @@ def q185_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.semantic_dedup(emb, threshold=0.4)
 
 
+@query("Four snapshot writes + vacuum (driver-side FS metadata ops — commit record deleted atomically before its data dir) + two pruned single-version reads; the audit row is driver-built, the only scans are the two read-backs.", headline=True)
 def q186_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot retention (extension; sources/snapshots.vacuum_snapshots
     — the Delta VACUUM / Iceberg expire-snapshots analog completing
@@ -5118,6 +5360,7 @@ def q186_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE Arrow map stage (raster -> real JFIF encode -> full segment-walk decode -> error contract): zero shuffles, zero joins — the embarrassingly-parallel codec shape; lossy, so the oracle pins dims + bounded-error booleans, never bytes.", headline=True)
 def q187_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline JPEG codec contract (extension;
     operators/multimodal.py JPEG section — closes the last image
@@ -5175,6 +5418,7 @@ def q187_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q187's shape (ONE Arrow map stage, zero shuffles/joins) over the wild-profile path: 4:2:0 chroma subsampling + DRI/RSTn restart intervals through the generalized MCU decoder; disjoint doc_id%5==1 fifth, bounded-error contract like every lossy codec here.", headline=True)
 def q188_jpeg_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wild-profile JPEG decode (extension; round-4 verdict "What's
     missing #2" — the codec previously decoded only the 4:4:4 stream
@@ -5234,6 +5478,7 @@ def q188_jpeg_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE Arrow map stage round-tripping all four non-RGB PNG color types (gray/Sub, gray+alpha/Up, RGBA/Paeth, palette/Average with PLTE expansion): zero shuffles, zero joins; PNG is lossless so the oracle recomputes every decoded byte from the closed forms — exact stats, never bounds.", headline=True)
 def q189_png_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wild-profile PNG round-trip contract (extension; round-5
     verdict "What's wrong #1" — the round-5 encoder widening to
@@ -5330,6 +5575,7 @@ def q189_png_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q182's release-gate shape extended to DISTRIBUTION drift: declared (bounded) TVD buckets compile to conditional SUMs inside the ONE aggregate scan per snapshot — no groupBy, no extra exchange; TVD ppm is an exact DECIMAL(38,0) cross-product sum with one integral division, so verdicts are partition-order-free.", headline=True)
 def q190_tvd_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift release gate (extension; round-4 task #6 —
     q182 pins count/null/distinct drift, real gates ALSO pin the
@@ -5393,6 +5639,7 @@ def q190_tvd_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return check_snapshot_drift(spark, table, rules, base_version=0)
 
 
+@query("ONE Arrow map stage (closed-form two-track MP4 build -> recursive box walk -> per-track metadata rows): zero shuffles, zero joins — the container-parse twin of the codec queries; stco offsets are pinned ABSOLUTE byte positions, so the oracle detects one-byte drift anywhere in the box tree.", headline=True)
 def q191_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MP4 / ISO-BMFF container metadata extraction (extension;
     round-4 task #4 — the last media family with NO container-level
@@ -5480,6 +5727,7 @@ def q191_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Three accept_batch steps, each ONE cell-keyed equi-join of the batch against parquet state (state side never re-scored, exact cosine on candidates only) + one state append; stream-over-slices == batch semantic_dedup exactly, so a stateful streaming operator gets a full value-hash oracle (q185's EXISTS).", headline=True)
 def q192_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online SemDeDup (extension; streaming/semdedup.py — round-4
     task #3: q185 was batch-only while MinHash near-dup had a
@@ -5514,6 +5762,7 @@ def q192_streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+@query("q191's Arrow-map shape over the fragmented layout: sample counts/bytes exist only in per-fragment trun tables, so the walk ACCUMULATES across moof boxes; zero shuffles, zero joins; with q187/q188/q189/q191 the codec contracts cover all five disjoint corpus fifths.", headline=True)
 def q193_fmp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fragmented-MP4 (fMP4/CMAF — the DASH/HLS wire shape) metadata
     walk (extension; completes the ISO-BMFF surface beyond q191's
@@ -5597,6 +5846,7 @@ def q193_fmp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE Arrow map stage (closed-form rasters -> real GIF89a encode (LZW/interlace/animation) -> decode -> palette-expanded exact stats): zero shuffles, zero joins; GIF is lossless so the oracle recomputes every decoded byte, and wsum_val position-weights values so even stats-invariant row permutations (wrong deinterlace) fail the hash.", headline=True)
 def q194_gif_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF89a round-trip contract (extension; completes the lossless
     image family beside PNG q183/q189 — GIF is the palette+LZW wire
@@ -5690,6 +5940,7 @@ def q194_gif_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE Arrow map stage (closed-form PCM -> real FLAC encode (vectorized Rice/partition-order planner: one (15,n) shift matrix + reduceat at the finest order, coarser orders pairwise-folded; cost-chosen stereo decorrelation) -> decode w/ CRC-8/CRC-16/MD5 verification -> exact per-channel stats) fed by ONE tiny doc-id fan-out shuffle (8-byte rows; FLAC at ~5 ms/doc is the heaviest per-row codec, and the audit corpus is a single parquet file = one scan partition — without the fan-out the stage runs on one core); zero joins; wsum_amp position-weights samples so frame-reassembly order bugs fail the hash, and compressed_smaller pins real compression (TRUE on structured signals, FALSE on hash noise).", headline=True)
 def q195_flac_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC round-trip contract (extension; completes the audio
     family with real COMPRESSION: raw PCM16 q166 -> RIFF/WAV
@@ -5795,6 +6046,7 @@ def q195_flac_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q195's fan-out Arrow-map shape for the LPC subframe family: period-6 linear recurrences (closed-form via i%6, SQL-recomputable) that fixed differencing can never whiten but order-2 LPC kills; lpc_used is read back from the stream BYTES (flac_subframe_histogram), not planner intent, and compressed_smaller pins that LPC delivers real compression while hash noise stays honestly verbatim; one 8-byte-row doc-id shuffle, zero joins.", headline=True)
 def q197_flac_lpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC LPC-subframe contract (extension; un-gates the one
     remaining ``NotImplementedError`` in the FLAC codec — q195 pins
@@ -5906,6 +6158,7 @@ def q197_flac_lpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE fan-out Arrow map stage (doc text -> generative HTML page loaded with extractor hazards: entities in title+body, style body with a bare '>', quoted attrs containing '>', href-less decoy anchors, script bodies containing literal '</p>' -> real single-pass tag tokenizer -> extracted-text facts); zero joins; body_md5 hashes the EXTRACTED text against a token-for-token SQL reconstruction, so one leaked script byte or fused block line fails the hash; at 100 TB this runs over q196's parsed WARC payloads.", headline=True)
 def q199_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML text-extraction contract (extension; the pipeline stage
     between archive ingest and the text battery — a web-scale corpus
@@ -5988,6 +6241,7 @@ def q199_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("END-TO-END composition of q196+q199 (stages that pass unit contracts can still lose bytes at the seams): ONE keyed shuffle into 1024-doc shards -> per-shard applyInPandas (HTML pages -> real .warc.gz build -> ingest-path parse -> real HTML tokenizer -> RAW extracted text out) -> a declarative JVM projection computes every downstream fact (split/size/md5 Catalyst expressions, whole-stage codegen); zero joins; body_md5 vs a from-the-table SQL reconstruction fails on a byte lost at ANY seam (warc framing, gzip, http parse, tag tokenizer); at 100 TB this IS the ingest DAG with the build half replaced by a binaryFile scan.", headline=True)
 def q200_cc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed Common-Crawl-shape pipeline contract (extension;
     q196 + q199 chained END TO END, because a pipeline whose stages
@@ -6077,6 +6331,7 @@ def q200_cc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q196's STREAMING twin: executors pack the corpus into real .warc.gz shard files (rename-to-final so the file source never sees partials), a checkpointed binaryFile stream tails the directory (availableNow) and parses each shard through the same sources/warc.py machinery (shard identity read from the in-band warcinfo record, not the file name), appending facts to a parquet sink the returned frame reads — so the driver hashes the streamed state itself against q196's exact SQL (full value-hash oracle for a streaming query); restart incrementality pinned by tests/test_streaming_shards.py.", headline=True)
 def q201_warc_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING archive ingest contract (extension; q196's
     streaming twin — how a 100 TB crawl actually lands: shards
@@ -6112,6 +6367,7 @@ def q201_warc_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_ingested(spark, out_dir)
 
 
+@query("ONE whole-stage-codegen projection, zero Python, zero shuffles: deterministic URLs built per row by Catalyst concat exercise the hazard matrix (mixed case, WWW., multi-part TLDs, trailing-dot host, explicit vs scheme-default ports, percent escapes, fragments), then functions/urls.py's pure-expression normalizers extract scheme/host/port/registrable-domain/decoded-path/param/fragment; the oracle applies the SAME policy in DuckDB, pinning cross-engine Java-regex-vs-RE2 parity — the actual risk of expression-based URL work at crawl scale.", headline=True)
 def q202_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL parse/normalize battery contract (extension; crawl
     pipelines filter, quota, and dedupe BY DOMAIN, so these
@@ -6164,6 +6420,7 @@ def q202_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE fan-out Arrow map, zero joins: per-site robots.txt bodies (deterministic from doc_id%40) are parsed ONCE per site cohort (memoized in the map stage — the amortization a billion-row decision join needs) and each doc's (agent, path) gets an RFC 9309 decision: longest-match precedence with the longer Allow /doc/*0$ overriding Disallow /doc/ exactly on ids ending in 0, specific-group selection stopping fallthrough to '*', per-group crawl-delay; the oracle recomputes every decision from the rule construction.", headline=True)
 def q203_robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """robots.txt decision contract (extension; the crawl-politeness
     half of the web-ingest family — RFC 9309 parsing + per-URL
@@ -6245,6 +6502,7 @@ def q203_robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q188's shape (ONE fan-out Arrow map, zero shuffles beyond the 8-byte doc-id fan-out, zero joins) over the progressive path: SOF2 encode (libjpeg 10-scan spectral-selection + successive-approximation script, 4:2:0, per-scan RSTn) -> multi-scan decode (DC/AC first+refine, cross-block EOB runs, non-interleaved component grids); the contract is byte-equality of progressive vs baseline decodes (same quantized coefficients, different entropy order) plus scan-script-reorder invariance — stronger than a lossy bound.", headline=True)
 def q204_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Progressive JPEG decode contract (extension; round-6 verdict
     "What's missing #1" — ~10% of wild web JPEGs are progressive, so
@@ -6345,6 +6603,7 @@ def q204_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q196's shard shape for the WebDataset layout: ONE keyed shuffle into 1024-doc shards -> per-shard applyInPandas builds a POSIX-ustar tar (spec-built headers: octal fields, space-summed checksums; NOT the tarfile module, but two-way stdlib-tarfile interop is test-pinned) with adjacent {key}.json+{key}.txt members per sample, then parses it back (checksum verify, bounds checks, adjacency-enforced sample grouping); zero joins; txt_md5/meta_lang/meta_n_chars pin byte-exact member recovery AND JSON sidecar parsing, sample_index pins grouping and walk order.", headline=True)
 def q198_wds_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset tar-shard ingest contract (extension; the OTHER
     archive format training corpora arrive in — multimodal datasets
@@ -6431,6 +6690,7 @@ def q198_wds_tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE keyed shuffle of (doc_id, text) into 1024-doc shards -> per-shard applyInPandas builds a Common-Crawl-layout .warc.gz (one gzip member PER record, leading warcinfo) and parses it back through the real ingest path (gzip member walk w/ CRC verify, WARC header/Content-Length/closing-CRLF validation, HTTP status+header+payload extraction); zero joins; payload_md5 pins byte-exact payload recovery against DuckDB's md5(text), rec_index pins member-split count and walk order; shard COUNT scales with the corpus (bounded per-shard work), and at 100 TB the build half disappears — shards already exist as binary files and the parse half maps over them.", headline=True)
 def q196_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC shard ingest contract (extension; the archive format
     web-scale training corpora actually arrive in): the full corpus
@@ -6523,6 +6783,7 @@ def q196_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q196's shard shape over a MIXED-compression corpus: 256-doc shards (both codecs present at every scale), odd shards one-RFC-8878-zstd-frame-per-record (spec-built store encoder + full frame/block/XXH64 walk in operators/zstd.py, unzstd-interop pinned), even shards the gzip layout; the reader sniffs per-shard magic; slice_fetch_ok re-parses every record from its bare (offset,length) slice — the fetchability property both layouts exist for — and the oracle pins it TRUE per record with md5-exact payloads.", headline=True)
 def q205_warc_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed gzip/zstd WARC corpus ingest (extension; round-6 verdict
     "What's missing #5" — Common Crawl ships ``.warc.zst`` beside
@@ -6611,6 +6872,7 @@ def q205_warc_zstd_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Budgeted corpus draw: ONE tiny stratum-count aggregate (collected driver-side — strata are languages, never corpus-sized; merge.py's justified-collect pattern), Hamilton largest-remainder apportionment in exact integer arithmetic, then a STAGED per-stratum selection (round 8): big strata pre-filter to bucket < ceil(RES*k/n) so the rank window sees ~alloc rows instead of the stratum population (no one-reducer sort of a dominant language at 100x; survivor-count check escalates any deficient stratum to the full rank, so the draw is identical by construction), allocation table broadcast back; md5-bucket ranking makes the draw a pure function of (salt, id), so the oracle replays the identical 200 selections.", headline=True)
 def q209_exact_stratified_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -6641,6 +6903,7 @@ def q209_exact_stratified_sample(
     )
 
 
+@query("Extended-sequential JPEG (SOF1) contract: one Arrow map stage over the doc_id%7==4 slice fanned out by the tiny doc-id repartition (heavy per-row codec work on all cores), zero joins, zero aggregates beyond the map; the 12-bit encode/decode plus the 8-bit SOF0/SOF1 twin comparison are per-row CPU, exactly where mapInPandas wants them.", headline=True)
 def q210_jpeg_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extended-sequential JPEG contract (extension; round-7 verdict
     "What's missing #1" — SOF1 is the scanned-document profile, the
@@ -6740,6 +7003,7 @@ def q210_jpeg_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Non-PCM16 WAV contract: one Arrow map stage over the doc_id%7==0 slice fanned out by the tiny doc-id repartition, zero joins; four per-row RIFF round-trips (16/24-bit int, float32, 8-bit unsigned) are per-row CPU in the map stage.", headline=True)
 def q211_wav_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-PCM16 WAV contract (extension; round-7/8 verdicts "What's
     missing" — wild audio corpora carry float32, 24-bit and 8-bit
@@ -6835,6 +7099,7 @@ def q211_wav_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q195's fan-out Arrow-map shape at the OTHER two whole-byte FLAC widths: an 8-bit mono sawtooth and a 24-bit stereo pair of closed-form linear signals encode/decode at native width (STREAMINFO MD5 over 1-/3-byte LE PCM, side channel at bps+1=25 bits, width-generic Rice/fixed machinery); lossless, so exact position-weighted per-channel stats recompute in SQL, and compressed_smaller pins real compression at both widths; one 8-byte-row doc-id shuffle, zero joins.", headline=True)
 def q208_flac_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-bit and 24-bit FLAC contract (extension; round-6 verdict
     "What's missing #3" — the PCM16-only gate left the other two
@@ -6915,6 +7180,7 @@ def q208_flac_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q189's shape (ONE Arrow map stage, zero shuffles, zero joins) over the sub-byte tier: 1/2/4-bit gray + palette profiles (MSB-first packed scanlines, byte-padded rows, filters at bpp=1, Adam7 passes packed independently, d=4 palette interlaced) — lossless, so the oracle recomputes every decoded value from the closed forms; one wrong bit in pack/unfilter/unpack/scatter fails the value hash.", headline=True)
 def q207_png_subbyte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-byte PNG profile contract (extension; round-6 verdict
     "What's missing #3" — 1/2/4-bit gray and palette files are the
@@ -6992,6 +7258,7 @@ def q207_png_subbyte(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("ONE fan-out Arrow map, zero joins: per-doc text -> REAL entropy-coded zstd frame (per-block Huffman literals w/ direct-weight canonical tree vs RLE vs raw, operators/zstd.py::zstd_compress, unzstd-interop pinned) -> full FSE/Huffman decode -> md5-exact recovery; entropy_smaller pins genuine shrinkage at the corpus-measured >=256-byte threshold, and corrupt_detected flips a mid-frame byte and pins that decode RAISES (XXH64/structural) instead of yielding silent wrong bytes.", headline=True)
 def q206_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entropy-coded zstd round-trip contract (extension; completes
     the RFC 8878 codec story opened by q205's framing): each sampled
@@ -7073,6 +7340,7 @@ def q206_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Lossless JPEG (SOF3) contract: q210's Arrow-map shape over the doc_id%7==2 slice (the last free seventh), zero joins; three per-row Annex-H predictive encode/decode round-trips (8-bit RGB pred 4, 12-bit gray pred 7, 16-bit gray pred 1 + restarts) are byte-EXACT by construction — the one JPEG mode where the contract is equality, not an error floor — and sof3_stream/compressed_smaller are read from the emitted bytes via the real marker walk.", headline=True)
 def q212_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lossless JPEG contract (SOF3, T.81 Annex H — round 9, VERDICT
     r8 "What's missing #3": the last non-arithmetic JPEG profile a
@@ -7188,6 +7456,8 @@ def q212_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("KMV bottom-k distinct sketch audit: per-partition k-capped distinct minima inside ONE Arrow stage (no corpus-wide shuffle in the sketch itself; k*P candidate rows feed a TakeOrdered), plus the audit-only exact countDistinct leg; the 1-row direct/merged/exact legs recombine via scalar crossJoins; integer estimate pinned to the last digit by the 48-bit md5 domain.", headline=True,
+       nested_loop="both BNLJs are 1-row x 1-row crossJoins stitching the direct sketch, merged sketch, and exact-count scalars - the q179 pattern, one row per side.")
 def q213_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (bottom-k / theta) distinct sketch audit (extension;
     operators/sketches.py::kmv_sketch — Bar-Yossef et al. 2002 /
@@ -7250,6 +7520,8 @@ def q213_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return row
 
 
+@query("Bloom seen-set audit: the filter is a DISTINCT-positions aggregate bounded by m=16384 rows and BROADCAST to the probe join (probe side never shuffles on a cluster); the false-positive count is deterministic (md5) so it is value-hashed exactly; bound boolean uses IEEE multiplies and a power-of-two divide, never libm pow.", headline=True,
+       nested_loop="the BNLJ is the 1-row bits_set scalar stitched onto the 1-row probe aggregate - the q61/q93 scalar pattern.")
 def q214_bloom_seen_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter seen-set audit (extension; operators/sketches.py
     ::bloom_positions/bloom_membership — Bloom 1970, the URL-frontier
@@ -7315,6 +7587,7 @@ def q214_bloom_seen_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Streaming Bloom seen-set: three accept_batch steps, each ONE broadcast membership join of the batch against <=16384 parquet position rows plus one anti-joined bounded append (state never exceeds the filter size, so an unbounded stream has bounded state); stream-over-slices == per-slice batch membership exactly, giving a stateful streaming operator a FULL value-hash oracle (the q192 pattern).", headline=True)
 def q215_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Bloom seen-set (extension; streaming/bloomdedup.py —
     q214's membership sketch gains the streaming twin every other
@@ -7358,6 +7631,8 @@ def q215_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Count-Min frequency sketch audit: ONE token-explode scan feeds the bounded d*w counter aggregate (<=32768 rows regardless of corpus - additive sums, merge = re-sum) and the audit-only exact top-10 leg; estimates broadcast-join the counter table (probe side never shuffles); both contract booleans (est>=true hard guarantee, (est-true)*w <= 8N) are pure integer math.", headline=True,
+       nested_loop="the BNLJ is the 1-row total-token scalar stitched onto the 13 probe rows - the q61/q93 scalar pattern.")
 def q216_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min frequency sketch audit (extension;
     operators/sketches.py::cms_build/cms_estimate — Cormode &
@@ -7412,6 +7687,8 @@ def q216_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Quantile sketch PRODUCTION build (round-12 split): the level census is ONE groupBy over <=49 bit-length levels (map-side combine -> <=49*P rows move), the power-of-two cutoff broadcasts back into one threshold filter scan, and the summary sorts <=cap=1024 retained rows — exactly 2 corpus passes, nothing else; the validation legs live in q234.", headline=True,
+       nested_loop="the one BNLJ is the <=49-row level-census cutoff broadcasting into the sample filter scan - the q213 scalar pattern.")
 def q217_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch — PRODUCTION build (operators/
     sketches.py::quantile_sketch — deterministic hash-threshold
@@ -7454,6 +7731,8 @@ def q217_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Quantile sketch ON-DEMAND audit (round-12 split): q217's 2 build passes plus the validation legs — exact percentile_disc, the full-data rank census, and the merge pin's shared parity census/filter pair (3 extra corpus passes, deliberately priced here, not in the production query); 1-row scalar crossJoins stitch summary, exact, rank and merge-pin legs; both rank-error booleans are pure integer math.", headline=True,
+       nested_loop="every BNLJ is a scalar stitch: the <=49-row level-census cutoff broadcasting into the sample filter (twice more for the merge halves/union), the 1-row summary broadcast into the rank scan, and the 1-row x 1-row crossJoins assembling the final row - the q213 pattern.")
 def q234_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ON-DEMAND audit of q217's quantile sketch (round 12 split,
     VERDICT r11 "What's wrong #3" — the declared production query now
@@ -7565,6 +7844,8 @@ def q234_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Streaming KMV distinct: three accept_batch steps, each ONE broadcast kth-threshold filter over the batch hashes + one bounded anti-join append into the entered-bottom-k state (<= k rows per batch worst case, k(1+ln(n/k)) expected) + a TakeOrdered over the tiny state; stream-over-slices == batch bottom-k over the prefix EXACTLY, full value-hash oracle (the q215 pattern).", headline=True,
+       nested_loop="the BNLJ is the 1-row kth-threshold scalar broadcast into each batch hash filter - the q213 scalar pattern.")
 def q218_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KMV distinct sketch (extension; streaming/kmvdist.py
     — with q215's Bloom twin and q219's CMS twin this finishes the
@@ -7601,6 +7882,8 @@ def q218_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("slice", "n_candidates", "estimate")
 
 
+@query("Streaming CMS: three accept_batch steps, each re-summing the batch counters into the newest complete GENERATION (<= d*w = 32768 rows, parquet _SUCCESS = visibility, replay rewrites its generation identically); per-batch probe estimates broadcast-join the bounded counter table; stream == batch re-sum over the prefix EXACTLY, full value oracle + est>=true + integer bound.", headline=True,
+       nested_loop="the BNLJs are the 1-row n_prefix scalar stitched onto the 4 probe rows per slice - the q216 scalar pattern.")
 def q219_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min frequency sketch (extension; streaming/
     cmsfreq.py). Orders arrive as three micro-batches (o_orderkey %
@@ -7703,6 +7986,7 @@ def q219_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Arithmetic JPEG (SOF9/SOF10) contract: q212's Arrow-map shape over the doc_id%11==6 slice, zero joins; per row the SAME quantized coefficients flow through SOF0 Huffman and SOF9/SOF10 QM-coded entropy layers (operators/jpeg_arith.py) and must decode to IDENTICAL pixels — any coder/model/stuffing/carry slip flips a boolean; stream pins (SOF9+DAC present, no DHT) read from the bytes via the real marker walk; arith_smaller pins genuine adaptive-estimation compression.", headline=True)
 def q220_jpeg_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic-coded JPEG contract (SOF9/SOF10, T.81 Annex D QM
     coder — round 10, VERDICT r9 "Next round #5": the last DCT JPEG
@@ -7814,6 +8098,8 @@ def q220_jpeg_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Streaming quantile sketch: three accept_batch steps, each ONE <=49-level census groupBy (map-side combined) + a broadcast semantic-cutoff filter over <=cap state rows + the batch scan, publishing cmsfreq-style generations (replay rewrites identically, _SUCCESS = visibility); gen-b == batch quantile_sketch(prefix) row-for-row, so each per-batch summary replays in SQL — full value oracle for stateful streaming quantiles.", headline=True,
+       nested_loop="the BNLJs are the 1-row semantic-cutoff and clamp scalars broadcast into each batch's <=cap-row state filter - the q217 scalar pattern, once per micro-batch.")
 def q222_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming quantile sketch (extension; streaming/quantsketch.py
     — the LAST member of the sketch family without a streaming twin:
@@ -7863,6 +8149,8 @@ def q222_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("slice", "sample_n", "lvl_cut", "p50_est", "p90_est")
 
 
+@query("Int8-quantized ANN audit: quantization is a whole-stage-codegen array projection (floor over IEEE doubles, no Python), scoring is q24's broadcast shape with exact int64 dot products and one correctly-rounded divide+sqrt as the rank key — the retrieval RESULT (not just its quality band) is engine-deterministic; the float exact-cosine leg is the audit, the int8 pass is the 100 TB path (4x smaller vectors).", headline=True,
+       nested_loop="the BNLJ is q24's brute-force semantics (10-query set broadcast against the streaming corpus with a != condition); the int8 scorer exists to make exactly this pass cheap at scale.")
 def q223_int8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8-quantized ANN retrieval audit (extension; operators/
     similarity.py::quantize_int8/int8_topk — the standard first rung
@@ -7927,6 +8215,8 @@ def q223_int8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("PQ ANN audit: encode = one broadcast codebook join + rank-1 window per (id, sub); ADC scoring reads ONLY codes + a per-query broadcast 8x64 LUT with a fixed-order fold over subspaces (never a float groupBy-sum); shortlist top-50 -> exact-cosine rerank touches 50 raw vectors per query. At 100 TB retrieval scans 8-byte codes, not 256-byte vectors — the raw corpus stays cold.", headline=True,
+       nested_loop="the BNLJs are the per-query 8x64 LUT broadcast fanned onto the code scan (a scalar-table fan-out, not a pairing) and q24's broadcast audit leg; the candidate scoring never touches raw vectors.")
 def q224_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN audit (extension; operators/
     similarity.py::pq_codebook/pq_encode/pq_adc_shortlist — Jégou,
@@ -8018,6 +8308,7 @@ def q224_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Arithmetic lossless JPEG (SOF11) contract: q212's Arrow-map shape over the doc_id%11==7 slice, zero joins; per row the Annex-H predictors drive the H.1.2.2 conditioned QM difference model (25 gradient contexts + dual X/M areas = the 158 stats bins T.81 publishes) through byte-EXACT round trips at 8/12/16-bit; stream pins (SOF11+DAC, no DHT/DQT) from the real marker walk; arith_smaller pins conditioned estimation beating per-image optimal Huffman.", headline=True)
 def q225_jpeg_arith_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic LOSSLESS JPEG contract (SOF11 — round 10, the last
     non-differential JPEG profile: T.81 Annex H prediction with the
@@ -8143,6 +8434,8 @@ def q225_jpeg_arith_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Theta set-operation audit: both bottom-k sketches build with q213's shape (per-partition k-capped minima in one Arrow stage, k·P candidate rows to a TakeOrdered), then ALL set algebra happens on two 1-row arrays — sub-theta filter/intersect/except are array expressions, estimates are int64 DIV. The only corpus-shuffling legs are the audit-only exact intersection/union; at 100 TB the operator itself moves two <=k arrays.", headline=True,
+       nested_loop="every BNLJ is a 1-row x 1-row crossJoin stitching the two sketch arrays and the exact-audit scalars - the q213 pattern; the set algebra itself is array expressions on one row.")
 def q221_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch set-operation audit (extension; operators/
     sketches.py::theta_set_ops — Beyer et al. SIGMOD 2007 / the
@@ -8215,6 +8508,7 @@ def q221_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Exact substring dedup, r13 head: overlapping 10-token windows materialize in the scan projection (transform over sequence) and posexplode, immediately reduced to (id, n_tokens, pos, xxhash64(window)) and lazily checkpointed ONCE; ONE shuffle on the 8-byte window hash for global occurrence counts (map-side combine), one join back keyed the same way (pinned shuffle_hash), then a per-doc window sort for the lag()-based interval merge — linear in total tokens, no pairwise join, no suffix array. Oracle still groups window strings; 3-SF sweeps pin equality.", headline=True)
 def q226_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring-level dedup (round 11, VERDICT r10 "What's
     missing #3" — the last canonical LLM-dedup family member, Lee et
@@ -8235,6 +8529,7 @@ def q226_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.substring_span_stats(docs, min_len=10).orderBy("doc_id")
 
 
+@query("BPE trainer: one corpus pass for the word census (explode + count shuffle), localCheckpoint bounds the vocab lineage; each of the 8 driver-loop iterations is a pair-explode + keyed sum over the DISTINCT-WORD table (vocab-sized, not corpus-sized) + a 1-row collect + a pure replace() projection. The corpus is touched exactly once.", headline=True)
 def q227_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training end-to-end (round 11, VERDICT r10
     "Next round" #4): 8 iterated merges over the documents corpus —
@@ -8249,6 +8544,8 @@ def q227_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bpe_train(docs, n_merges=8)
 
 
+@query("Composed ANN, r13: the cell label rides the quantize_int8 scan projection (the corpus self-join on id that re-attached it is gone — 2 fewer exchanges); centroid build is q26's bounded posexplode agg; routing joins the tiny centroid table broadcast; quantized scoring joins corpus cells to the BROADCAST routed-query table on cell id (only routed cells scanned); shortlist + n_candidates share one per-query window; exact rerank touches <=32 raw vectors per query. Audit legs (cell-exact, global brute force) are the linear residue.", headline=True,
+       nested_loop="the BNLJs are the query->centroid routing table (|queries| x |cells|, both tiny), q24's brute-force GLOBAL audit leg (reported unpinned), and the 1-row corpus-count scalar stitched into pruned_ok - the production scoring join is the cell-keyed broadcast hash join over routed cells only.")
 def q228_ivf_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed ANN stack audit (round 11, VERDICT r10 "Next round"
     #5): IVF cells → int8-quantized shortlist → exact rerank in one
@@ -8334,6 +8631,7 @@ def q228_ivf_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("q227's trainer loop (one corpus census + 8 vocab-sized rounds) plus one more vocab-sized symbol explode + keyed sum; the top-20 window runs over the bounded symbol census. Corpus touched exactly once.", headline=True)
 def q229_bpe_segment_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE census (round 11 — the apply side of q227's
     trainer): segment the corpus with the 8 trained merges and report
@@ -8350,6 +8648,7 @@ def q229_bpe_segment_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bpe_segment_census(docs, n_merges=8, topk=20)
 
 
+@query("Streaming substring dedup: per batch one window projection + posexplode, a gh-keyed count, a shuffle_hash join against the prior-gram state (pinned call-time file list - the round-11 snapshot-reuse fix), the shared interval merge, and an anti-joined state append. Per-trigger cost O(batch + state read).", headline=True)
 def q230_streaming_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-substring dedup (round 11 — the q226 span
     detector gains the streaming twin every other dedup family member
@@ -8395,6 +8694,7 @@ def q230_streaming_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Vocab export: q227's trainer loop (one corpus word census + 8 vocab-sized argmax rounds), then a charset-bounded distinct collect and the n_merges-row merge table assembled driver-side into the (token_id, symbol, kind) table — both collects are the sanctioned bounded class (alphabet + n_merges rows).", headline=True)
 def q232_bpe_vocab_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer vocabulary export (round 12, VERDICT r11 "What's
     missing #2"): the deterministic (token_id, symbol, kind) table
@@ -8408,6 +8708,7 @@ def q232_bpe_vocab_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bpe_vocab_export(docs, n_merges=8).orderBy("token_id")
 
 
+@query("Tokenizer end-to-end: trainer (corpus census once) + bounded symbol->id literal map; encode is one vocab-sized projection (per-word ids via the final vocab's own segmentation) joined shuffle_hash to the corpus's (doc,pos,word) posexplode (vocab build side never broadcasts - the q226 lesson), reassembled per doc by one collect_list bounded by doc length; packing is q94's one window cumsum + one agg keyed on lang.", headline=True)
 def q233_bpe_encode_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer end-to-end (round 12, VERDICT r11 "What's missing
     #2"): train 8 merges → assign vocab ids → encode every document
@@ -8426,6 +8727,8 @@ def q233_bpe_encode_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("IVF-PQ composed ANN: q228's broadcast centroid routing, PQ codes carrying their cell label THROUGH the encode Arrow stage (no corpus join-back), per-query LUT + bounded routing dict broadcast into ONE Arrow scoring stage that touches only routed-cell rows, global shortlist window over <=shortlist*P*|Q| local rows, exact rerank of <=32 raw vectors/query; n_candidates from the ncells-row census, never a second code scan. The cell-exact recall leg is the linear residue (as in q228).", headline=True,
+       nested_loop="the BNLJs are the query->centroid routing table (|queries| x |cells|, both tiny), the cell-exact recall leg's routed cross, and the 1-row corpus-count / recall-total scalars stitched into the flags - the q228 pattern; ADC scoring itself is the Arrow stage, not a join.")
 def q235_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed ANN (round 12, VERDICT r11 "Next round" #6):
     q228's cell routing in front of q224's PQ-ADC scoring in front of
@@ -8497,6 +8800,7 @@ def q235_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Streaming excision twin: q230's per-batch judge unchanged (window projection + posexplode, gh-keyed count, shuffle_hash join vs the file-list-pinned gram state, anti-joined append), then q231's excision tail per batch (interval merge + per-doc collect_list + ONE HOF projection over the batch's token arrays). Per-trigger cost O(batch + state read); output stream = the repaired corpus at arrival.", headline=True)
 def q236_streaming_substr_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming substring EXCISION (round 12 — q231's repaired-corpus
     deliverable at arrival, exactly as q230 is q226's span report at
@@ -8538,6 +8842,7 @@ def q236_streaming_substr_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Curated-corpus composition, r13 shape: the gates evaluate with the tokenization BOUND ONCE (text.gopher_gate — the AND-of-gates form re-split the text per sub-expression after filter pushdown inlined the alias; 12.9 s -> 1.6 s at sf0.1); the gate+dedup survivors materialize ONCE (lazy localCheckpoint — the subtree was recomputed 4x, 20 -> 10 Exchanges); lang rides the excision passthrough (join-back gone); excision is q231's hashed materialized-once machinery. Gates -> dedup -> excision order pinned by the oracle.", headline=True)
 def q237_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CURATED CORPUS, end to end (round 12): q86's Gopher-style
     quality gates → exact whole-doc dedup (lowest doc_id survives)
@@ -8586,6 +8891,8 @@ def q237_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@query("Streaming PQ-index ingest, r13: the bootstrap-frozen constants (dense codebook array + standing-query ADC LUT) are computed ONCE per stream (bootstrap_index) instead of re-collected per trigger; per batch ONE encode Arrow stage + anti-joined code append (8 bytes/vec state), retrieval = pq_adc_shortlist over the file-list-pinned post-append snapshot with the precomputed LUT. Per-trigger cost O(batch encode + store scan); the store scan is the honest linear residue of exact-membership retrieval - IVF routing over cells is the sublinear path (q240).", headline=True,
+       nested_loop="the BNLJs are the 1-row n_indexed store-size scalar crossJoined into every output row per batch - the q213 scalar-stitch pattern, once per micro-batch.")
 def q238_streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PQ-index ingest (round 12 — the similarity family's
     streaming twin; streaming/pqindex.py). Embeddings arrive as three
@@ -8635,6 +8942,7 @@ def q238_streaming_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("Substring excision over the r13 head: the window table reduces to (id, pos, xxhash64(window)) and lazily checkpoints ONCE (census + join-back share it — one corpus scan + one window Generate, was two of each; both exchanges carry 8-byte hashes, counts join PINNED shuffle_hash off the broadcast path — x2.1-2.3 at the x100 controlled probe, SCALE.md), dup starts merge to per-doc intervals under one lag window, intervals collect_list per doc (bounded by doc length), and ONE higher-order JVM projection filters each token array against its interval list — no Python.", headline=True)
 def q231_substring_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-span EXCISION (round 12, VERDICT r11 "What's missing
     #1"): the repaired corpus — q226 reports where the duplicated
@@ -8650,6 +8958,7 @@ def q231_substring_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.substring_excise(docs, min_len=10).orderBy("doc_id")
 
 
+@query("Keep-first excision: q231's window head, but the per-gram aggregation that counts occurrences ALSO takes min(struct(id,pos)) - the global first-occurrence election rides the same map-side-combining shuffle, no extra exchange. Join back pinned shuffle_hash (corpus-derived build side, the q226 AQE lesson); excision tail shared with q231 (interval merge + one JVM HOF projection).", headline=True)
 def q239_substring_excise_keepfirst(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -8670,6 +8979,8 @@ def q239_substring_excise_keepfirst(
     )
 
 
+@query("IVF-routed streaming PQ index, r13: bootstrap_routed freezes codebook AND centroids and precomputes the per-stream constants (dense codebook, query LUT, query->cell routing) ONCE; per batch one cell-assignment window + one encode Arrow stage; codes land partitionBy(cell); per trigger ONE pinned explicit-schema read over the touched+routed cell files serves both the replay anti-join and the scoring store (pre-append snapshot + the batch's own checkpointed codes — no post-append re-listing, no store checkpoint), so retrieval still LISTS AND SCANS only routed cells (scan_frac ~= nprobe/ncells at both probe scales - SCALE.md r13); ADC scoring one Arrow stage with per-query cell masks, census from the read slice only.", headline=True,
+       nested_loop="the BNLJs are the batch x ncells centroid cross joins of the cell-assignment/routing stages (ncells-row broadcast build side - the q228 routing idiom, bounded) per micro-batch.")
 def q240_streaming_ivf_pq_index(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -8726,6 +9037,7 @@ def q240_streaming_ivf_pq_index(
     )
 
 
+@query("q237's r13 funnel (bound-once gate, survivors checkpointed once, lang passthrough) with the excision stage swapped to the keep-first election: election fused into the same hashed gram aggregation (min-struct beside the count — no extra exchange), join back pinned shuffle_hash.", headline=True)
 def q241_curated_corpus_keepfirst(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -8770,6 +9082,7 @@ def q241_curated_corpus_keepfirst(
     ).orderBy("doc_id")
 
 
+@query("Lloyd-trained vs sampled PQ codebook through the identical q224 production shape: training is iters bounded-sample joins (train_ids x ncent rows, codebook broadcast, lineage localCheckpoint-truncated per iteration); both encodes are one Arrow stage each; shortlists/reranks the q224 plan. Exact top-5 leg is the priced brute-force audit (queries broadcast, corpus streams).", headline=True)
 def q242_pq_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd-TRAINED PQ codebook vs the sampled one (round 13 —
     cashing the cheque q224's docstring wrote: "a k-means codebook
@@ -8890,244 +9203,8 @@ def q242_pq_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Registration follows definition order; the suite runs in query-number order.
+REGISTRY = dict(sorted(REGISTRY.items(), key=lambda kv: int(kv[0][1:].split("_")[0])))
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_revenue_by_region": q02_revenue_by_region,
-    "q03_top_customers": q03_top_customers,
-    "q04_priority_semi_join": q04_priority_semi_join,
-    "q05_customers_without_orders": q05_customers_without_orders,
-    "q06_ri_check": q06_ri_check,
-    "q07_distinct_counts": q07_distinct_counts,
-    "q08_date_parts": q08_date_parts,
-    "q09_union_slices": q09_union_slices,
-    "q10_window_rank": q10_window_rank,
-    "q11_json_extract": q11_json_extract,
-    "q12_string_cleanse": q12_string_cleanse,
-    "q13_coercions": q13_coercions,
-    "q14_lww_dedup": q14_lww_dedup,
-    "q15_tumbling_window": q15_tumbling_window,
-    "q16_sliding_window": q16_sliding_window,
-    "q17_session_window": q17_session_window,
-    "q18_rollup": q18_rollup,
-    "q19_approx_distinct": q19_approx_distinct,
-    "q20_dedup_exact": q20_dedup_exact,
-    "q21_minhash_lsh": q21_minhash_lsh,
-    "q22_simhash": q22_simhash,
-    "q23_token_jaccard_bruteforce_check": q23_token_jaccard_bruteforce_check,
-    "q24_embedding_topk": q24_embedding_topk,
-    "q25_embedding_neardup_bruteforce_check": q25_embedding_neardup_bruteforce_check,
-    "q26_ivf_topk": q26_ivf_topk,
-    "q30_text_stats": q30_text_stats,
-    "q31_lang_id": q31_lang_id,
-    "q32_token_count": q32_token_count,
-    "q33_fingerprint": q33_fingerprint,
-    "q34_multimodal_bytes": q34_multimodal_bytes,
-    "q35_cube": q35_cube,
-    "q36_percentiles": q36_percentiles,
-    "q37_setops": q37_setops,
-    "q38_asof_join": q38_asof_join,
-    "q39_range_join": q39_range_join,
-    "q40_pivot": q40_pivot,
-    "q41_sampled_agg": q41_sampled_agg,
-    "q42_salted_join": q42_salted_join,
-    "q43_above_nation_avg": q43_above_nation_avg,
-    "q44_corpus_pipeline": q44_corpus_pipeline,
-    "q45_having": q45_having,
-    "q46_tfidf_topk": q46_tfidf_topk,
-    "q47_part_supplier_revenue": q47_part_supplier_revenue,
-    "q48_sessionize": q48_sessionize,
-    "q49_embedding_lsh_neardup": q49_embedding_lsh_neardup,
-    "q50_string_funcs": q50_string_funcs,
-    "q51_running_total": q51_running_total,
-    "q52_forecast_revenue": q52_forecast_revenue,
-    "q53_customer_distribution": q53_customer_distribution,
-    "q54_promo_revenue": q54_promo_revenue,
-    "q55_returned_items": q55_returned_items,
-    "q56_nation_volume": q56_nation_volume,
-    "q57_window_battery": q57_window_battery,
-    "q58_array_funcs": q58_array_funcs,
-    "q59_argmax": q59_argmax,
-    "q60_disjunctive_filter": q60_disjunctive_filter,
-    "q61_sales_opportunity": q61_sales_opportunity,
-    "q62_large_orders": q62_large_orders,
-    "q63_top_supplier": q63_top_supplier,
-    "q64_market_share": q64_market_share,
-    "q65_grouping_sets": q65_grouping_sets,
-    "q66_embedding_topk_pandas": q66_embedding_topk_pandas,
-    "q67_shipping_priority": q67_shipping_priority,
-    "q68_late_shipment_ratio": q68_late_shipment_ratio,
-    "q69_small_quantity_revenue": q69_small_quantity_revenue,
-    "q70_filtered_distinct": q70_filtered_distinct,
-    "q71_multimodal_resize": q71_multimodal_resize,
-    "q72_dedup_clusters": q72_dedup_clusters,
-    "q73_hash_split": q73_hash_split,
-    "q74_pii_redaction": q74_pii_redaction,
-    "q75_click_attribution": q75_click_attribution,
-    "q76_local_supplier_volume": q76_local_supplier_volume,
-    "q77_product_type_profit": q77_product_type_profit,
-    "q78_waiting_suppliers": q78_waiting_suppliers,
-    "q79_window_battery2": q79_window_battery2,
-    "q80_date_battery": q80_date_battery,
-    "q81_array_battery2": q81_array_battery2,
-    "q82_repetition_stats": q82_repetition_stats,
-    "q83_contamination_check": q83_contamination_check,
-    "q84_stratified_sample": q84_stratified_sample,
-    "q85_profile": q85_profile,
-    "q86_quality_funnel": q86_quality_funnel,
-    "q87_stats_battery": q87_stats_battery,
-    "q88_string_battery2": q88_string_battery2,
-    "q89_order_priority_check": q89_order_priority_check,
-    "q90_min_cost_supplier": q90_min_cost_supplier,
-    "q91_parts_supplier_counts": q91_parts_supplier_counts,
-    "q92_excess_stock_suppliers": q92_excess_stock_suppliers,
-    "q93_important_stock": q93_important_stock,
-    "q94_sequence_packing": q94_sequence_packing,
-    "q95_domain_mixture": q95_domain_mixture,
-    "q96_passage_dedup": q96_passage_dedup,
-    "q97_vocab_coverage": q97_vocab_coverage,
-    "q98_knn_label_vote": q98_knn_label_vote,
-    "q99_scd2_history": q99_scd2_history,
-    "q100_neardup_corpus": q100_neardup_corpus,
-    "q101_fuzzy_match": q101_fuzzy_match,
-    "q102_hll_mergeable": q102_hll_mergeable,
-    "q103_gap_fill": q103_gap_fill,
-    "q104_anomaly_zscore": q104_anomaly_zscore,
-    "q105_winsorized_mean": q105_winsorized_mean,
-    "q106_retention_cohorts": q106_retention_cohorts,
-    "q107_canonical_dedup": q107_canonical_dedup,
-    "q108_ngram_novelty": q108_ngram_novelty,
-    "q109_full_outer_reconcile": q109_full_outer_reconcile,
-    "q110_lateral_topn": q110_lateral_topn,
-    "q111_zorder_key": q111_zorder_key,
-    "q112_histogram": q112_histogram,
-    "q113_approx_percentile_contract": q113_approx_percentile_contract,
-    "q114_key_skew_profile": q114_key_skew_profile,
-    "q115_recursive_hierarchy": q115_recursive_hierarchy,
-    "q116_agg_battery": q116_agg_battery,
-    "q117_funnel": q117_funnel,
-    "q118_video_frame_stats": q118_video_frame_stats,
-    "q119_cdc_apply": q119_cdc_apply,
-    "q120_variant_extract": q120_variant_extract,
-    "q121_grouped_topk_arrays": q121_grouped_topk_arrays,
-    "q122_pmi_collocations": q122_pmi_collocations,
-    "q123_inverted_index": q123_inverted_index,
-    "q124_mad_outliers": q124_mad_outliers,
-    "q125_doc_chunking": q125_doc_chunking,
-    "q126_unigram_lm_score": q126_unigram_lm_score,
-    "q127_equidepth_bins": q127_equidepth_bins,
-    "q128_map_battery": q128_map_battery,
-    "q129_pit_join": q129_pit_join,
-    "q130_regression_by_group": q130_regression_by_group,
-    "q131_sample_allocation": q131_sample_allocation,
-    "q132_source_divergence": q132_source_divergence,
-    "q133_vocab_overlap": q133_vocab_overlap,
-    "q134_time_weighted_avg": q134_time_weighted_avg,
-    "q135_unpivot": q135_unpivot,
-    "q139_quantile_transform": q139_quantile_transform,
-    "q140_longest_streak": q140_longest_streak,
-    "q141_linear_attribution": q141_linear_attribution,
-    "q142_weekly_percentiles": q142_weekly_percentiles,
-    "q143_active_users": q143_active_users,
-    "q144_rfm_segmentation": q144_rfm_segmentation,
-    "q145_golden_record": q145_golden_record,
-    "q146_chisq_contingency": q146_chisq_contingency,
-    "q147_pareto_deciles": q147_pareto_deciles,
-    "q136_market_basket": q136_market_basket,
-    "q137_event_transitions": q137_event_transitions,
-    "q138_interarrival_histogram": q138_interarrival_histogram,
-    "q148_id_continuity": q148_id_continuity,
-    "q149_double_fire": q149_double_fire,
-    "q150_bpe_merge_candidates": q150_bpe_merge_candidates,
-    "q151_padding_waste": q151_padding_waste,
-    "q152_grouped_mode": q152_grouped_mode,
-    "q153_order_reconciliation": q153_order_reconciliation,
-    "q154_label_centroids": q154_label_centroids,
-    "q155_cluster_tightness": q155_cluster_tightness,
-    "q156_array_setops": q156_array_setops,
-    "q157_bitmap_distinct": q157_bitmap_distinct,
-    "q158_session_paths": q158_session_paths,
-    "q159_conversion_latency": q159_conversion_latency,
-    "q160_trailing_window_count": q160_trailing_window_count,
-    "q161_ewma": q161_ewma,
-    "q162_coverage_audit": q162_coverage_audit,
-    "q163_dedup_savings": q163_dedup_savings,
-    "q164_share_of_region": q164_share_of_region,
-    "q165_prefix_collisions": q165_prefix_collisions,
-    "q166_audio_channel_stats": q166_audio_channel_stats,
-    "q167_audio_downmix": q167_audio_downmix,
-    "q168_observe_metrics": q168_observe_metrics,
-    "q169_streaming_topk": q169_streaming_topk,
-    "q170_streaming_moments": q170_streaming_moments,
-    "q171_udtf_chunking": q171_udtf_chunking,
-    "q172_udaf_trimmed_mean": q172_udaf_trimmed_mean,
-    "q173_minhash_estimation_audit": q173_minhash_estimation_audit,
-    "q174_snapshot_diff": q174_snapshot_diff,
-    "q175_pareto_frontier": q175_pareto_frontier,
-    "q176_weighted_median": q176_weighted_median,
-    "q177_int8_quantization_audit": q177_int8_quantization_audit,
-    "q178_pagerank": q178_pagerank,
-    "q179_expectations_audit": q179_expectations_audit,
-    "q180_streaming_scd2": q180_streaming_scd2,
-    "q181_continuous_rollup": q181_continuous_rollup,
-    "q182_snapshot_drift_gate": q182_snapshot_drift_gate,
-    "q183_png_codec": q183_png_codec,
-    "q184_wav_container": q184_wav_container,
-    "q185_semantic_dedup": q185_semantic_dedup,
-    "q186_snapshot_vacuum": q186_snapshot_vacuum,
-    "q187_jpeg_roundtrip": q187_jpeg_roundtrip,
-    "q188_jpeg_subsampled": q188_jpeg_subsampled,
-    "q189_png_profiles": q189_png_profiles,
-    "q190_tvd_drift_gate": q190_tvd_drift_gate,
-    "q191_mp4_metadata": q191_mp4_metadata,
-    "q192_streaming_semdedup": q192_streaming_semdedup,
-    "q193_fmp4_fragments": q193_fmp4_fragments,
-    "q194_gif_codec": q194_gif_codec,
-    "q195_flac_codec": q195_flac_codec,
-    "q196_warc_ingest": q196_warc_ingest,
-    "q197_flac_lpc": q197_flac_lpc,
-    "q198_wds_tar_ingest": q198_wds_tar_ingest,
-    "q199_html_extract": q199_html_extract,
-    "q200_cc_pipeline": q200_cc_pipeline,
-    "q201_warc_stream_ingest": q201_warc_stream_ingest,
-    "q202_url_normalize": q202_url_normalize,
-    "q203_robots_decisions": q203_robots_decisions,
-    "q204_jpeg_progressive": q204_jpeg_progressive,
-    "q205_warc_zstd_ingest": q205_warc_zstd_ingest,
-    "q206_zstd_roundtrip": q206_zstd_roundtrip,
-    "q207_png_subbyte": q207_png_subbyte,
-    "q208_flac_depths": q208_flac_depths,
-    "q209_exact_stratified_sample": q209_exact_stratified_sample,
-    "q210_jpeg_extended": q210_jpeg_extended,
-    "q211_wav_formats": q211_wav_formats,
-    "q212_jpeg_lossless": q212_jpeg_lossless,
-    "q213_kmv_distinct": q213_kmv_distinct,
-    "q214_bloom_seen_set": q214_bloom_seen_set,
-    "q215_streaming_bloom": q215_streaming_bloom,
-    "q216_cms_frequency": q216_cms_frequency,
-    "q217_quantile_sketch": q217_quantile_sketch,
-    "q218_streaming_kmv": q218_streaming_kmv,
-    "q219_streaming_cms": q219_streaming_cms,
-    "q220_jpeg_arithmetic": q220_jpeg_arithmetic,
-    "q221_theta_set_ops": q221_theta_set_ops,
-    "q222_streaming_quantile": q222_streaming_quantile,
-    "q223_int8_ann": q223_int8_ann,
-    "q224_pq_ann": q224_pq_ann,
-    "q225_jpeg_arith_lossless": q225_jpeg_arith_lossless,
-    "q226_substring_dedup": q226_substring_dedup,
-    "q227_bpe_train": q227_bpe_train,
-    "q228_ivf_int8_rerank": q228_ivf_int8_rerank,
-    "q229_bpe_segment_census": q229_bpe_segment_census,
-    "q230_streaming_substr_dedup": q230_streaming_substr_dedup,
-    "q231_substring_excise": q231_substring_excise,
-    "q232_bpe_vocab_export": q232_bpe_vocab_export,
-    "q233_bpe_encode_pack": q233_bpe_encode_pack,
-    "q234_quantile_sketch_audit": q234_quantile_sketch_audit,
-    "q235_ivf_pq_rerank": q235_ivf_pq_rerank,
-    "q236_streaming_substr_excise": q236_streaming_substr_excise,
-    "q237_curated_corpus": q237_curated_corpus,
-    "q238_streaming_pq_index": q238_streaming_pq_index,
-    "q239_substring_excise_keepfirst": q239_substring_excise_keepfirst,
-    "q240_streaming_ivf_pq_index": q240_streaming_ivf_pq_index,
-    "q241_curated_corpus_keepfirst": q241_curated_corpus_keepfirst,
-    "q242_pq_kmeans_ann": q242_pq_kmeans_ann,
+    name: q.fn for name, q in REGISTRY.items()
 }

@@ -1,11 +1,16 @@
 from __future__ import annotations
 
+import glob
 import os
+from typing import NamedTuple
 
 import duckdb
 import pytest
 
 from bigdataflink_spark import get_spark
+from bigdataflink_spark.sources import SALES_CSV_GLOB
+from starbench.corpus import write_csv_corpus
+from starbench.expected import star_of
 
 # Override to sweep the oracle gate at another scale factor, e.g.
 #   SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 pytest tests/test_queries_oracle.py
@@ -50,6 +55,25 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+class SalesCorpus(NamedTuple):
+    glob: str
+    counts: dict[str, int] | None  # None: the reference CSVs keep their own goldens
+
+
+@pytest.fixture(scope="session")
+def sales_corpus(tmp_path_factory):
+    """The sales CSVs the star tests read: the reference corpus when
+    it exists, otherwise a generated reference-quirk corpus of the same
+    shape (10 files x 1000 rows, 1000 entities) with its expected
+    star-table row counts."""
+    if glob.glob(SALES_CSV_GLOB):
+        return SalesCorpus(SALES_CSV_GLOB, None)
+    d = str(tmp_path_factory.mktemp("sales_corpus"))
+    files = write_csv_corpus(d, 1, 10, 1000, 1000)
+    return SalesCorpus(os.path.join(d, "*.csv"),
+                       star_of(r for rows in files for r in rows).counts())
 
 
 @pytest.fixture(scope="session")

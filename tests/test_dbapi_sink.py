@@ -3,8 +3,8 @@
 re-expressed as a foreachPartition batched writer, tested against
 sqlite (same ON CONFLICT dialect family, stdlib — no server needed).
 
-The end-to-end tests stream a corpus (the full reference corpus, and
-a generated one that needs no reference CSVs) through BOTH terminal
+The end-to-end tests stream a corpus (the full sales corpus, and a
+small generated one with several writes per key) through BOTH terminal
 sinks — bucketed-parquet MERGE state and the DBAPI star — and assert
 they hold identical winners."""
 
@@ -162,12 +162,12 @@ def _stream_both_sinks_and_compare(spark, workdir: str, landing: str, tag: str) 
     con.close()
 
 
-def test_stream_to_dbapi_matches_parquet_state(spark, workdir):
-    """The full reference corpus through both terminal sinks."""
+def test_stream_to_dbapi_matches_parquet_state(spark, workdir, sales_corpus):
+    """The full 10,000-row sales corpus through both terminal sinks."""
     from bigdataflink_spark.sources.producer import produce_jsonl
 
     landing = f"{workdir}/landing"
-    assert produce_jsonl(spark, landing) == 10000
+    assert produce_jsonl(spark, landing, sales_corpus.glob) == 10000
     _stream_both_sinks_and_compare(spark, workdir, landing, "ref")
 
 

@@ -1,7 +1,10 @@
-"""The timing core (bigdataflink_spark/measure.py) and the bench's
-query sets."""
+"""The timing core (bigdataflink_spark/measure.py) and the query sets
+derived from the registry in plans/queries.py."""
 
 from __future__ import annotations
+
+import json
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -47,3 +50,19 @@ def test_r1_set_within_headline_within_queries():
     from bigdataflink_spark.plans.queries import QUERIES
 
     assert set(bench.R1_SET) <= set(bench.HEADLINE) <= set(QUERIES)
+
+
+def test_every_query_has_an_oracle_and_every_oracle_a_query():
+    from bigdataflink_spark.plans.oracles import ORACLES
+    from bigdataflink_spark.plans.queries import QUERIES
+
+    assert set(QUERIES) == set(ORACLES)
+
+
+def test_r1_set_is_the_suite_bench_r01_recorded():
+    """The r1 subtotal is the continuity metric: it must sum the same
+    queries, in the same order, as BENCH_r01.json."""
+    import bench
+
+    r01 = json.loads((Path(__file__).parents[1] / "BENCH_r01.json").read_text())
+    assert bench.R1_SET == list(r01["parsed"]["queries"])

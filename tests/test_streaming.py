@@ -1,5 +1,5 @@
 """Streaming pipeline tests (SURVEY.md §7 step 5): stream/batch parity
-on the full reference corpus, plus watermarked windowed aggregation."""
+on the full sales corpus, plus watermarked windowed aggregation."""
 
 from __future__ import annotations
 
@@ -24,11 +24,11 @@ def workdir():
 
 
 @pytest.mark.slow
-def test_stream_batch_parity(spark, workdir):
+def test_stream_batch_parity(spark, workdir, sales_corpus):
     """Replaying all 10 CSVs through the file stream (1 file per
     micro-batch, like the producer's per-file sends) must yield
     byte-identical star tables to the one-shot batch build."""
-    n = produce_jsonl(spark, f"{workdir}/landing")
+    n = produce_jsonl(spark, f"{workdir}/landing", sales_corpus.glob)
     assert n == 10000
 
     stream_star = run_stream_to_star(
@@ -38,7 +38,7 @@ def test_stream_batch_parity(spark, workdir):
         f"{workdir}/ckpt",
         max_files_per_trigger=1,
     )
-    batch_star = build_star(read_sales_csv(spark))
+    batch_star = build_star(read_sales_csv(spark, sales_corpus.glob))
 
     for name in batch_star:
         b = batch_star[name]
