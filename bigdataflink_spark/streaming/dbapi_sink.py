@@ -168,7 +168,9 @@ def upsert_star_batch_dbapi(
     """foreachBatch body: the reference's exact terminal behavior —
     upsert the six dims + fact into relational tables keyed on their
     natural keys (stream_to_star.py:287-295), but set-based: one
-    intra-batch LWW dedup, then batched seq-guarded upserts.
+    intra-batch LWW dedup, then batched seq-guarded upserts. ``batch``
+    holds cleansed rows, the same input as
+    ``pipeline.upsert_star_batch``.
 
     Table layout is ``plans/star.state_columns``: each ``dim_*`` table
     carries (natural key PRIMARY KEY, attrs…, arrival_seq);
@@ -177,16 +179,12 @@ def upsert_star_batch_dbapi(
     reference bootstraps its schema the same way: 00_ddl_dw.sql).
     """
     from bigdataflink_spark.operators.dedup import lww_dedup
-    from bigdataflink_spark.plans.star import FACT, STAR, cleanse_sales, project_star
+    from bigdataflink_spark.plans.star import FACT, STAR, project_star
 
-    cleansed = cleanse_sales(batch).cache()
-    try:
-        for name, rows in project_star(cleansed).items():
-            key = STAR[name].key
-            dbapi_upsert(
-                lww_dedup(rows, [key], "arrival_seq"), connection_factory,
-                "fact_sales_raw" if name == FACT else name, [key],
-                placeholder=placeholder, num_partitions=num_partitions,
-            )
-    finally:
-        cleansed.unpersist()
+    for name, rows in project_star(batch.localCheckpoint(eager=True)).items():
+        key = STAR[name].key
+        dbapi_upsert(
+            lww_dedup(rows, [key], "arrival_seq"), connection_factory,
+            "fact_sales_raw" if name == FACT else name, [key],
+            placeholder=placeholder, num_partitions=num_partitions,
+        )

@@ -17,6 +17,13 @@ O(dirty buckets) amplification instead:
 * clean buckets are never read, never rewritten — their files are
   bit-identical afterwards (asserted in tests via mtime).
 
+The fold's output is written straight back to the path it read, in
+the same job. That is safe because a dynamic overwrite writes under
+``.spark-staging-*`` and swaps the dirty bucket dirs in only at job
+commit, after every task has read them; a write task that fails
+aborts the job before the commit and leaves the state as it was.
+A one-bucket LWW merge is then a single task with no shuffle.
+
 :func:`merge_bucketed` owns that layout; only the fold differs per
 store (Structured Streaming's view of state as an idempotent fold of
 each batch). It serves two stores:
@@ -207,9 +214,7 @@ def merge_bucketed(
         if num_buckets > 1:
             dirty = [r[0] for r in inc.select(BUCKET_COL).distinct().collect()]
             existing = existing.filter(F.col(BUCKET_COL).isin(dirty))
-    # cut lineage to the files being overwritten (read-then-overwrite
-    # of the same path is otherwise undefined)
-    rows = fold(existing, inc).localCheckpoint(eager=True)
+    rows = fold(existing, inc)
     _write_state(rows, path)
     if meta is None:
         _publish_meta(spark, path, key, num_buckets, rows.schema)
@@ -221,18 +226,24 @@ def merge_lww_bucketed(
     path: str,
     key: str,
     seq_col: str = "arrival_seq",
-    num_buckets: int = 32,
+    num_buckets: int = 1,
 ) -> None:
     """Upsert ``incoming`` into the bucketed LWW state at ``path``
     (:func:`merge_bucketed` with an LWW fold).
 
     ``incoming`` may hold several rows per key: one LWW pass over
     existing ∪ incoming picks the same winners as deduplicating the
-    batch first.
+    batch first. ``num_buckets`` defaults to the one bucket
+    :func:`fit_state_buckets` gives a new state; a grown state needs
+    its pinned N.
     """
 
     def lww(existing: DataFrame | None, inc: DataFrame) -> DataFrame:
         merged = inc if existing is None else existing.unionByName(inc)
+        if num_buckets == 1:
+            # one bucket is at most one scan split (fit_state_buckets):
+            # one task folds it, and the window needs no Exchange
+            merged = merged.coalesce(1)
         return lww_dedup(merged, [key], seq_col)
 
     merge_bucketed(spark, incoming, path, key, num_buckets, lww)

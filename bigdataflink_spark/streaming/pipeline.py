@@ -7,6 +7,9 @@ upsert` (stream_to_star.py:315-320). The Spark-native shape:
       → cleanse projection (plans/star.cleanse_sales)
       → foreachBatch(upsert_star_batch)
 
+The cleanse projection is part of the stream's plan, built once per
+query; each trigger's batch arrives already typed.
+
 ``upsert_star_batch`` is a SET-BASED idempotent MERGE per micro-batch
 instead of 7 SQL round-trips per record:
 
@@ -25,10 +28,12 @@ all rows at once, the stream merges them into state one trigger at a
 time. The star layout lives in ``plans/star.py`` alone, so the stream
 publishes the batch star of its input prefix by construction.
 
-The seven per-table merges (6 dims + fact) of step 2 run CONCURRENTLY,
-one thread each: they touch disjoint state dirs and only read the
-cached batch, so while one merge waits on a driver round trip another
-runs tasks. foreachBatch is an ordinary batch context (Structured
+The batch is checkpointed once (one job), then the seven per-table
+merges (6 dims + fact) of step 2 run CONCURRENTLY, one thread each:
+they touch disjoint state dirs and only read the checkpointed batch,
+so while one merge waits on a driver round trip another runs tasks.
+At one bucket each merge is one single-task job, so a trigger runs
+eight jobs. foreachBatch is an ordinary batch context (Structured
 Streaming, SIGMOD 2018), and each worker inherits the trigger's local
 properties (query id, batch id, job group), so its jobs still belong
 to the trigger and stopping the query still cancels them.
@@ -144,14 +149,16 @@ def parse_sales_records(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
 def read_sales_stream(spark: SparkSession, jsonl_dir: str, max_files_per_trigger: int = 1):
     """Streaming (parsed, errors-split) sales records from a JSONL dir.
 
-    Returns (records, errors): records is the typed stream; errors
-    carries unparseable raw payloads (P10 side channel).
+    Returns (records, errors): records is the typed stream, the
+    ``cleanse_sales`` projection of the parsed messages; errors carries
+    unparseable raw payloads (P10 side channel).
     """
     raw = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .text(jsonl_dir)
     )
-    return parse_sales_records(raw)
+    records, errors = parse_sales_records(raw)
+    return cleanse_sales(records), errors
 
 
 def _state_path(state_dir: str, table: str) -> str:
@@ -159,7 +166,9 @@ def _state_path(state_dir: str, table: str) -> str:
 
 
 def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
-    """foreachBatch body: idempotent set-based MERGE of one micro-batch.
+    """foreachBatch body: idempotent set-based MERGE of one micro-batch
+    of cleansed rows (``cleanse_sales``, as ``read_sales_stream`` yields
+    them).
 
     Keeps per-key ``arrival_seq`` in the state tables so replayed or
     out-of-order batches can never regress a newer value (idempotent
@@ -173,8 +182,7 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
     from bigdataflink_spark.streaming import merge
 
     spark = batch.sparkSession
-    cleansed = cleanse_sales(batch).cache()
-    tables = project_star(cleansed)
+    tables = project_star(batch.localCheckpoint(eager=True))
 
     def merge_table(table: str) -> None:
         path = _state_path(state_dir, table)
@@ -183,20 +191,17 @@ def upsert_star_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
             num_buckets=merge.fit_state_buckets(spark, path),
         )
 
-    try:
-        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-            # wrap per worker: each call clones this thread's local
-            # properties, so no two workers share (and race on) one
-            # mutable Properties object
-            futures = [
-                pool.submit(inheritable_thread_target(spark)(merge_table), t)
-                for t in tables
-            ]
-        # leaving the pool waited for every worker
-        for f in futures:
-            f.result()
-    finally:
-        cleansed.unpersist()
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        # wrap per worker: each call clones this thread's local
+        # properties, so no two workers share (and race on) one
+        # mutable Properties object
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(merge_table), t)
+            for t in tables
+        ]
+    # leaving the pool waited for every worker
+    for f in futures:
+        f.result()
 
 
 def finalize_star(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:

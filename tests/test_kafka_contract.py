@@ -8,7 +8,8 @@ source (binary value, 1 partition, monotone offsets, like the
 reference's single-partition ``sales`` topic). The chunks stream
 through the PRODUCTION projection (``project_kafka_records``: offset →
 arrival_seq), parse (``parse_sales_records``: transport seq overrides
-payload seq), and upsert (``upsert_star_batch``), then the published
+payload seq), cleanse (``cleanse_sales``) and upsert
+(``upsert_star_batch``), then the published
 star must equal the one-shot batch star — including after a
 redelivered chunk (at-least-once replay), which the offset-ordered
 LWW must ignore.
@@ -27,7 +28,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from bigdataflink_spark.plans import build_star
+from bigdataflink_spark.plans import build_star, cleanse_sales
 from bigdataflink_spark.sources import read_sales_csv
 from bigdataflink_spark.sources.kafka import KAFKA_WIRE_SCHEMA, project_kafka_records
 from bigdataflink_spark.streaming.pipeline import (
@@ -101,7 +102,7 @@ def test_stream_via_kafka_wire_equals_batch_star(spark, workdir, wire_dir, sales
     )
     records, errors = parse_sales_records(project_kafka_records(wire_stream))
     q = (
-        records.writeStream.foreachBatch(
+        cleanse_sales(records).writeStream.foreachBatch(
             lambda b, bid: upsert_star_batch(b, bid, state_dir)
         )
         .option("checkpointLocation", f"{workdir}/ckpt")
@@ -133,7 +134,7 @@ def test_stream_via_kafka_wire_equals_batch_star(spark, workdir, wire_dir, sales
     first_chunk = sorted(glob.glob(f"{wire_dir}/part-*.parquet"))[0]
     redelivered = spark.read.schema(KAFKA_WIRE_SCHEMA).parquet(first_chunk)
     rec2, _ = parse_sales_records(project_kafka_records(redelivered))
-    upsert_star_batch(rec2, batch_id=999, state_dir=state_dir)
+    upsert_star_batch(cleanse_sales(rec2), batch_id=999, state_dir=state_dir)
 
     replayed = table_rows(finalize_star(spark, state_dir))
     for name in batch:
@@ -190,7 +191,7 @@ def test_kafkadump_python_datasource_end_to_end(spark, workdir, sales_corpus):
         )
     )
     state = f"{workdir}/dump_state"
-    upsert_star_batch(records, 0, state)
+    upsert_star_batch(cleanse_sales(records), 0, state)
     got_star = finalize_star(spark, state)
     want_star = build_star(read_sales_csv(spark, sales_corpus.glob))
     for name in want_star:
@@ -320,7 +321,7 @@ def test_full_reference_topology_stream(spark, workdir, sales_corpus):
                 "value", "CAST(arrival_seq AS LONG) AS arrival_seq"
             )
         )
-        records = records.localCheckpoint(eager=True)
+        records = cleanse_sales(records)
         upsert_star_batch(records, bid, state_dir)
         upsert_star_batch_dbapi(records, bid, fac, num_partitions=1)
 

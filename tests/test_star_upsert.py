@@ -15,7 +15,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from bigdataflink_spark.plans import build_star
+from bigdataflink_spark.plans import build_star, cleanse_sales
 from bigdataflink_spark.sources import read_sales_csv
 from bigdataflink_spark.sources.producer import produce_jsonl
 from bigdataflink_spark.streaming import merge
@@ -40,11 +40,12 @@ def corpus_glob(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def file_batches(spark, corpus_glob):
-    """One materialized batch per CSV file, in producer send order,
-    carrying the producer's global ``arrival_seq``."""
+    """One materialized batch of cleansed rows per CSV file, in
+    producer send order, carrying the producer's global
+    ``arrival_seq``."""
     raw = read_sales_csv(spark, corpus_glob)
     rank = F.shiftright("arrival_seq", 32)
-    return [raw.filter(rank == k).localCheckpoint() for k in range(N_FILES)]
+    return [cleanse_sales(raw.filter(rank == k)).localCheckpoint() for k in range(N_FILES)]
 
 
 def star_rows(star):
@@ -94,7 +95,7 @@ def test_failed_table_merge_waits_for_others_and_replays(
     finished = []
     lock = threading.Lock()
 
-    def flaky(spark_, incoming, path, key, seq_col="arrival_seq", num_buckets=32):
+    def flaky(spark_, incoming, path, key, seq_col="arrival_seq", num_buckets=1):
         if path.endswith("state_dim_store"):
             raise RuntimeError("injected merge failure")
         orig(spark_, incoming, path, key, seq_col, num_buckets)
@@ -186,7 +187,7 @@ def test_merge_workers_run_in_the_callers_job_group(
     seen = []
     lock = threading.Lock()
 
-    def recording(spark_, incoming, path, key, seq_col="arrival_seq", num_buckets=32):
+    def recording(spark_, incoming, path, key, seq_col="arrival_seq", num_buckets=1):
         with lock:
             seen.append((threading.get_ident(), sc.getLocalProperty("spark.jobGroup.id")))
         orig(spark_, incoming, path, key, seq_col, num_buckets)
@@ -207,3 +208,24 @@ def test_merge_workers_run_in_the_callers_job_group(
     grouped = set(tracker.getJobIdsForGroup(group))
     assert len(grouped) >= 7  # at least one job per table merge
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_trigger_runs_one_job_per_star_table(spark, file_batches, tmp_path):
+    """A trigger into one-bucket states runs 1 + 7 single-stage jobs:
+    one checkpoint of the batch, then one write per star table, with no
+    merge checkpoint, dirty-bucket collect or shuffle-map job. The
+    first trigger creates the states, the second merges into them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    state = str(tmp_path / "state")
+    for bid, batch in enumerate(file_batches[:2]):
+        group = f"star-upsert-jobs-{bid}"
+        sc.setJobGroup(group, "one trigger")
+        try:
+            upsert_star_batch(batch, bid, state)
+        finally:
+            clear_job_group(sc)
+        drain_status_events(sc, f"jobs-{bid}")
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 8, (bid, len(jobs))
+        assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1] * 8, bid

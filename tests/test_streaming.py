@@ -123,9 +123,9 @@ def test_error_side_channel(spark, workdir):
     )
     rq.awaitTermination()
     eq.awaitTermination()
-    recs = spark.sql("SELECT id FROM rec_t").collect()
+    recs = spark.sql("SELECT source_sale_id FROM rec_t").collect()
     errs = spark.sql("SELECT * FROM err_t").collect()
-    assert sorted(r.id for r in recs) == ["1", "7"]
+    assert sorted(r.source_sale_id for r in recs) == [1, 7]
     assert len(errs) == 1 and errs[0].status.startswith("error:")
 
 
@@ -571,6 +571,113 @@ def test_one_bucket_merge_runs_no_collect(spark, workdir, monkeypatch):
     merge_lww_bucketed(spark, incoming, path, "k", num_buckets=1)
     monkeypatch.undo()
     assert _state_rows(spark, path) == _lww_truth(spark, first + second)
+
+
+def _sql_executions(spark):
+    """Every SQL execution the session ran so far, once the listener
+    bus has caught up."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [runs.apply(i) for i in range(runs.size())]
+
+
+def test_one_bucket_merge_writes_without_exchange(spark, workdir):
+    """A one-bucket LWW merge into existing state is one SQL execution,
+    the write itself, and its executed plan has no Exchange: existing ∪
+    incoming is folded in one task, with no checkpoint before the
+    write and no shuffle-map job."""
+    from bigdataflink_spark.streaming.merge import merge_lww_bucketed
+
+    path = f"{workdir}/one_bucket_plan"
+    first = [(k, f"a{k}", k) for k in range(50)]
+    second = [(k, f"b{k}", 100 + k) for k in range(25, 75)]
+    merge_lww_bucketed(spark, spark.createDataFrame(first, _KV_SCHEMA), path, "k",
+                       num_buckets=1)
+    incoming = spark.createDataFrame(second, _KV_SCHEMA)
+    last = max(e.executionId() for e in _sql_executions(spark))
+    merge_lww_bucketed(spark, incoming, path, "k", num_buckets=1)
+    [run] = [e for e in _sql_executions(spark) if e.executionId() > last]
+    plan = run.physicalPlanDescription()
+    assert "InsertIntoHadoopFsRelationCommand" in plan
+    assert "Exchange" not in plan, plan
+    assert _state_rows(spark, path) == _lww_truth(spark, first + second)
+
+
+def test_failed_merge_write_keeps_state(spark, workdir):
+    """Merges write straight back to the state they read, with no
+    checkpoint between: a write task that raises must leave the
+    pre-merge rows, for a one-bucket LWW merge and for an SCD2 merge,
+    and the next merge must converge as if the failure never ran."""
+    from datetime import datetime, timedelta
+
+    from bigdataflink_spark.streaming.merge import merge_lww_bucketed
+    from bigdataflink_spark.streaming.scd2 import merge_scd2_batch, read_scd2_history
+
+    def raise_on_poison(v):
+        if v == "poison":
+            raise RuntimeError("poisoned row")
+        return v
+
+    poisoned = F.udf(raise_on_poison, "string")
+
+    # LWW: the poisoned row is the last of 50 rows into one task
+    path = f"{workdir}/failed_write_lww"
+    first = [(k, f"a{k}", k) for k in range(50)]
+    second = [(k, f"b{k}", 100 + k) for k in range(25, 75)]
+    merge_lww_bucketed(spark, spark.createDataFrame(first, _KV_SCHEMA), path, "k")
+    bad = spark.createDataFrame(second[:-1] + [(74, "poison", 174)], _KV_SCHEMA)
+    with pytest.raises(Exception, match="poisoned row"):
+        merge_lww_bucketed(spark, bad.withColumn("payload", poisoned("payload")), path, "k")
+    assert _state_rows(spark, path) == _lww_truth(spark, first)
+    merge_lww_bucketed(spark, spark.createDataFrame(second, _KV_SCHEMA), path, "k")
+    assert _state_rows(spark, path) == _lww_truth(spark, first + second)
+
+    # SCD2: the change log folds through the same merge core
+    obs_schema = "key long, attr string, ts timestamp, seq long"
+    t0 = datetime(2024, 1, 1)
+
+    def obs(rows):
+        return spark.createDataFrame(
+            [(k, a, t0 + timedelta(minutes=m), m) for k, a, m in rows], obs_schema
+        )
+
+    def history(p):
+        return sorted(tuple(r) for r in read_scd2_history(spark, p, "key", "attr").collect())
+
+    early = [(k, f"x{k % 3}", k) for k in range(30)]
+    later = [(k, f"y{k % 2}", 100 + k) for k in range(10, 40)]
+    path, clean = f"{workdir}/failed_write_scd2", f"{workdir}/clean_scd2"
+    for p in (path, clean):
+        merge_scd2_batch(spark, obs(early), p, "key", "attr", "ts", "seq")
+    before = history(path)
+    bad = obs(later[:-1] + [(39, "poison", 139)]).withColumn("attr", poisoned("attr"))
+    with pytest.raises(Exception, match="poisoned row"):
+        merge_scd2_batch(spark, bad, path, "key", "attr", "ts", "seq")
+    assert history(path) == before
+    for p in (path, clean):
+        assert merge_scd2_batch(spark, obs(later), p, "key", "attr", "ts", "seq") == 0
+    assert history(path) == history(clean)
+    assert len(history(path)) > len(before)
+
+
+def test_lww_merge_without_bucket_count_is_one_bucket(spark, workdir):
+    """``merge_lww_bucketed`` without ``num_buckets`` is a one-bucket
+    merge, the N a new state gets; into a grown state it fails on the
+    pinned N instead of pinning another."""
+    from bigdataflink_spark.streaming.merge import merge_lww_bucketed
+
+    rows = [(k, f"v{k}", k) for k in range(20)]
+    new = f"{workdir}/default_n_new"
+    merge_lww_bucketed(spark, spark.createDataFrame(rows, _KV_SCHEMA), new, "k")
+    assert _pinned_buckets(new) == 1
+    assert _state_rows(spark, new) == _lww_truth(spark, rows)
+
+    grown = f"{workdir}/default_n_grown"
+    merge_lww_bucketed(spark, spark.createDataFrame(rows, _KV_SCHEMA), grown, "k",
+                       num_buckets=4)
+    with pytest.raises(ValueError, match="num_buckets=4"):
+        merge_lww_bucketed(spark, spark.createDataFrame(rows, _KV_SCHEMA), grown, "k")
+    assert _pinned_buckets(grown) == 4
 
 
 def test_fit_state_buckets_small_state_is_noop(spark, workdir):

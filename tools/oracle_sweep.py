@@ -17,10 +17,11 @@ import json
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bigdataflink_spark.session import get_spark  # noqa: E402
