@@ -47,9 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -73,15 +71,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("feature", ArrayType(FloatType()), True),
-    ]
-)
-
 FRAMES_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -89,83 +78,6 @@ FRAMES_SCHEMA = StructType(
         StructField("frame_bytes", BinaryType(), True),
     ]
 )
-
-_FEATURE_DIM = 8
-
-
-def _fake_decode(payload: bytes) -> list[float]:
-    """DETERMINISTIC FAKE decode -> feature vector.
-
-    Real implementation: PIL.Image.open / torchaudio.load / ffmpeg —
-    unavailable in this container. The fake derives a stable
-    8-float vector from sha256(payload) so tests are reproducible and
-    the Arrow plumbing is exercised with realistic shapes.
-    """
-    if payload is None:
-        raise NotImplementedError("real codec required for NULL-payload recovery")
-    h = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in h[:_FEATURE_DIM]]
-
-
-def _rgb_features(payload: bytes, width: int, height: int) -> list[float]:
-    """REAL image features from a raw-RGB decode: per-channel mean and
-    standard deviation, plus luma mean/std (8 floats, 0-1 scaled)."""
-    return _decoded_features(decode_raw_rgb(payload, width, height))
-
-
-def _decoded_features(img: np.ndarray) -> list[float]:
-    """Shared REAL feature math over any decoded (h, w, 3) raster."""
-    f = img.astype(np.float64)
-    means = f.mean(axis=(0, 1)) / 255.0
-    stds = f.std(axis=(0, 1)) / 255.0
-    luma = f @ np.array([0.299, 0.587, 0.114])
-    return [
-        float(means[0]), float(means[1]), float(means[2]),
-        float(stds[0]), float(stds[1]), float(stds[2]),
-        float(luma.mean() / 255.0), float(luma.std() / 255.0),
-    ]
-
-
-def _png_features(payload: bytes) -> list[float]:
-    """REAL image features from a PNG decode (round-4 routing fix:
-    the real codec exists, so the shared feature dispatch must use
-    it, not the sha256 fake)."""
-    return _decoded_features(png_decode(payload))
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """binary payload -> fixed-dim feature vector, Arrow-batched.
-
-    Raw-RGB, PNG, and JPEG images get REAL decoded statistics
-    (shared _decoded_features math over each codec's raster);
-    everything else goes through the sha256 fake pending an external
-    codec.
-    """
-
-    def _feature(row) -> list[float] | None:
-        if row["payload"] is None:
-            return None
-        if row["modality"] == "image" and row["mime"] == RAW_RGB_IMAGE:
-            return _rgb_features(row["payload"], int(row["width"]), int(row["height"]))
-        if row["modality"] == "image" and row["mime"] == PNG_IMAGE:
-            return _png_features(row["payload"])
-        if row["modality"] == "image" and row["mime"] == JPEG_IMAGE:
-            return _decoded_features(jpeg_decode(bytes(row["payload"])))
-        return _fake_decode(row["payload"])
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": pdf["payload"].map(lambda b: len(b) if b is not None else None),
-                    "feature": pdf.apply(_feature, axis=1),
-                }
-            )
-
-    return media.mapInPandas(_batches, schema=FEATURES_SCHEMA)
-
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """video payload -> sampled frame rows (1:N fan-out).
@@ -3270,9 +3182,6 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
 # this section follows the repo's own codec pattern (q183/q184/q187).
 # ---------------------------------------------------------------------------
 
-MP4_VIDEO = "video/mp4"
-
-
 def _mp4_box(typ: bytes, payload: bytes) -> bytes:
     import struct
 
@@ -3658,18 +3567,6 @@ def _mp4_track(payload: bytes, s: int, e: int) -> dict:
     return t
 
 
-def mp4_frame_decode(payload: bytes):  # pragma: no cover - honest gate
-    """Frame decode needs a real codec (ffmpeg/PyAV), which this
-    container doesn't ship — the box walk above is the supported
-    surface. The container METADATA is differential-tested against
-    ffprobe wherever that binary exists (tests/test_native_seams.py::
-    test_ffprobe_mp4_container_differential, round 9)."""
-    raise NotImplementedError(
-        "mp4 frame decode requires ffmpeg/PyAV; mp4_scan provides the "
-        "container metadata surface"
-    )
-
-
 def mp4_build_fragmented(
     tracks: list[dict],
     samples_per_fragment: int = 8,
@@ -3874,8 +3771,6 @@ def mp4_build_fragmented(
 # (q194) pins every decoded byte against a closed-form oracle.
 # Reference parity: the reference pipeline treats media as opaque
 # payloads; this tier gives the payloads a real decodable format.
-
-GIF_IMAGE = "image/gif"
 
 # Row-interlace pass grid (GIF89a spec §20, appendix E): rows
 # (start, step) per pass — unlike PNG's Adam7 there is no column
@@ -4259,8 +4154,6 @@ def gif_decode(
 # round-trip contracts (q195).
 # ---------------------------------------------------------------------------
 
-FLAC_AUDIO = "audio/flac"
-
 _FLAC_SYNC = 0b11111111111110  # 14-bit frame sync (spec §9.1)
 
 # Fixed blocksize codes (frame header bits 4..7, spec §9.1.1).
@@ -4274,7 +4167,6 @@ _FLAC_RATE_CODE = {
     24000: 7, 32000: 8, 44100: 9, 48000: 10, 96000: 11,
 }
 _FLAC_BPS_CODE = {8: 1, 12: 2, 16: 4, 20: 5, 24: 6}
-_FLAC_RICE_ESCAPE = 0b1111  # 4-bit param escape -> raw residuals
 
 
 def _flac_crc_table(poly: int, width: int) -> list[int]:

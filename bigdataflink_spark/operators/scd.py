@@ -75,20 +75,6 @@ def scd2_history(
     )
 
 
-def scd2_lookup(history: DataFrame, key_col: str, at_us: int) -> DataFrame:
-    """Point-in-time dimension snapshot: the version of each key that
-    was valid at ``at_us`` (epoch micros). A plain range filter — with
-    the history stored partitioned/sorted by key this is a pruned
-    scan, no join."""
-    return history.filter(
-        (F.col("valid_from_us") <= F.lit(at_us))
-        & (
-            F.col("valid_to_us").isNull()
-            | (F.col("valid_to_us") > F.lit(at_us))
-        )
-    ).drop("version")
-
-
 def pit_join(
     probe: DataFrame,
     history: DataFrame,

@@ -335,28 +335,6 @@ def gopher_gate(text_col: "str | Column") -> Column:
     )
 
 
-def with_text_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """documents + per-doc feature columns (the full text pass).
-
-    Tokenizes ONCE in its own projection — the higher-order filter()
-    lambdas in the feature expressions defeat codegen subexpression
-    elimination, so an inlined tokens() would re-split the text per
-    feature (~30% slower, measured).
-    """
-    toked = docs.select("*", tokens(text_col).alias("_tk"))
-    t = F.col("_tk")
-    return toked.select(
-        "*",
-        F.size(t).alias("n_tokens"),
-        F.round(stopword_ratio(t), 6).alias("stop_ratio"),
-        F.round(type_token_ratio(t), 6).alias("ttr"),
-        F.round(quality_score(t, F.col("n_chars")), 6).alias("quality"),
-        lang_id(t).alias("pred_lang"),
-        token_count_regex(text_col).alias("regex_tokens"),
-        fingerprint(text_col).alias("fp"),
-    ).drop("_tk")
-
-
 def substring_span_stats(
     docs: DataFrame,
     id_col: str = "doc_id",

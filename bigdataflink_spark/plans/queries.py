@@ -1716,9 +1716,10 @@ def q82_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction, most-frequent-token share, duplicate bigram/trigram
     fractions — the filters that catch boilerplate and degenerate
     looped text before it poisons a training mix. All per-row JVM
-    array expressions over a ONCE-materialized token array (the same
-    codegen-CSE trap as with_text_features): zero exchanges, scales
-    embarrassingly."""
+    array expressions over a ONCE-materialized token array (the
+    higher-order lambdas defeat codegen subexpression elimination, so
+    an inlined tokens() would re-split the text per ratio): zero
+    exchanges, scales embarrassingly."""
     docs = _t(spark, sf_dir, "documents")
     toked = docs.select("doc_id", text.tokens("text").alias("_tk")).filter(
         F.size("_tk") >= 3

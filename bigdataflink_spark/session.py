@@ -8,8 +8,9 @@ Defaults are chosen for the scale target (1000-executor cluster over
 * Broadcast threshold kept at a real value so small dims
   (region/nation/supplier, and the reference's 6 star dims) broadcast
   instead of shuffling the fact side.
-* ``spark.sql.shuffle.partitions`` from env so the harness can size it
-  to the data; AQE coalesces downward so oversizing is cheap.
+* ``spark.sql.shuffle.partitions`` = the core count
+  (``SPARK_GRAFT_CPUS``); AQE coalesces downward so oversizing is
+  cheap.
 * Arrow enabled — every Pandas UDF / ``applyInPandas`` hot path in
   operators/ rides vectorized Arrow batches, never per-row pickling.
 """
@@ -20,19 +21,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_spark(app_name: str = "bigdataflink-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-ready defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -46,10 +45,7 @@ def get_spark(app_name: str = "bigdataflink-spark", master: str | None = None) -
         # star ETL's 7 table actions pay ~20% for a 32-way floor.
         # On a real cluster defaultParallelism drives splits anyway;
         # maxPartitionBytes above still caps splits of big inputs.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITIONS", "8"),
-        )
+        .config("spark.sql.files.minPartitionNum", "8")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -39,9 +39,7 @@ SALES_CSV_GLOB = "/root/reference/data/MOCK_DATA*.csv"
 _SEQ_STRIDE = 1 << 32
 
 
-def read_sales_csv(
-    spark: SparkSession, path_glob: str = SALES_CSV_GLOB, with_arrival_seq: bool = True
-) -> DataFrame:
+def read_sales_csv(spark: SparkSession, path_glob: str = SALES_CSV_GLOB) -> DataFrame:
     """All-string DataFrame of the sales CSVs + ``arrival_seq`` long.
 
     Column types are left as strings on purpose: coercion is the
@@ -60,8 +58,6 @@ def read_sales_csv(
         .option("encoding", "UTF-8")
         .csv(files)
     )
-    if not with_arrival_seq:
-        return df
 
     # input_file_name()/monotonically_increasing_id() are only valid
     # in the scan stage — materialize them as columns BEFORE the

@@ -1,27 +1,14 @@
-"""Generic batch format connectors: parquet / ORC / JSON-lines / CSV,
-read and write, plus partitioned-layout writes.
+"""Filesystem helpers shared by the state stores and sinks, all through
+the Hadoop FileSystem API so local paths, ``file:``, ``hdfs://`` and
+``s3a://`` behave alike:
 
-The reference ingests only CSV-over-Kafka (producer/csv_to_kafka.py:17-33)
-and terminates in Postgres; a Spark-native engine's equivalent surface
-is the DataSource V1/V2 format matrix. These helpers pin the
-engine-wide conventions so every entry point round-trips losslessly:
-
-* **Schema is explicit on read** for the text formats (JSON/CSV infer
-  types lossily — int-looking strings, timestamp ambiguity). Callers
-  pass the expected ``StructType`` (usually from the parquet twin);
-  ``schema=None`` falls back to inference for exploratory reads.
-* **Timestamps go through UTC** (``timestampFormat`` with explicit
-  zone on CSV/JSON) so text round-trips are wall-clock stable under
-  any session timezone.
-* **Binary and array columns** survive parquet/ORC natively; JSON
-  encodes binary as base64 (Spark's contract) and CSV refuses nested
-  types — ``csv_safe_projection`` strips them explicitly instead of
-  letting the writer throw mid-job.
-* **Partitioned writes** use ``partitionBy`` + dynamic partition
-  overwrite, the idempotent-backfill layout: re-running a slice
-  replaces only the partitions present in the batch, never truncating
-  siblings — the 100 TB equivalent of the reference's per-row upsert
-  terminal store.
+* ``hadoop_fs`` resolves a path the way ``spark.read`` does;
+* ``read_json`` / ``publish_json`` read and atomically publish the
+  small JSON records (commit logs, state metadata, checkpoints);
+* ``write_sharded`` is the range-sharded, size-capped parquet sink;
+* ``compact_dir`` rewrites a directory's small files through a staged
+  two-rename swap (``swap_in_staged``), and ``recover_compact_crash``
+  repairs every crash state of that swap.
 """
 
 from __future__ import annotations
@@ -29,13 +16,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
-
-_TEXT_OPTS = {
-    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-}
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -48,15 +28,22 @@ def hadoop_fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
-def read_json(fs, jvm, path) -> dict:
-    """Parse the small JSON record at Hadoop ``path`` (a commit or
-    metadata file)."""
+def read_json(fs, path) -> dict:
+    """Parse the JSON record at Hadoop ``path`` (a commit, metadata or
+    checkpoint file).
+
+    The bytes cross py4j in 4 KB chunks and are decoded once here: a
+    py4j reply over ~8 KB stalls ~44 ms on a TCP delayed ACK, and a
+    chunk boundary may split a multi-byte UTF-8 character, so only
+    the joined bytes are decoded."""
     stream = fs.open(path)
     try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        chunks = []
+        while chunk := stream.readNBytes(4096):
+            chunks.append(chunk)
     finally:
         stream.close()
-    return json.loads(raw)
+    return json.loads(b"".join(chunks).decode("utf-8"))
 
 
 def publish_json(fs, jvm, tmp: str, final: str, record: dict) -> bool:
@@ -76,94 +63,6 @@ def publish_json(fs, jvm, tmp: str, final: str, record: dict) -> bool:
         return True
     fs.delete(Path(tmp), False)
     return False
-
-
-def read_any(
-    spark: SparkSession,
-    path: str,
-    fmt: str,
-    schema: StructType | None = None,
-    **options: str,
-) -> DataFrame:
-    """Read ``path`` in ``fmt`` (parquet|orc|json|csv).
-
-    CSV defaults to header=true; JSON is JSON-lines. Explicit schema
-    skips the inference pass (one full extra scan on text formats —
-    never acceptable at 100 TB) and pins types.
-    """
-    reader = spark.read.format(fmt)
-    if fmt in ("json", "csv"):
-        reader = reader.options(**_TEXT_OPTS)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif fmt == "csv":
-        reader = reader.option("inferSchema", "true")
-    if options:
-        reader = reader.options(**options)
-    return reader.load(path)
-
-
-def write_any(df: DataFrame, path: str, fmt: str, mode: str = "overwrite", **options: str) -> None:
-    """Write ``df`` to ``path`` in ``fmt`` with engine conventions."""
-    writer = df.write.format(fmt).mode(mode)
-    if fmt in ("json", "csv"):
-        writer = writer.options(**_TEXT_OPTS)
-    if fmt == "csv":
-        writer = writer.option("header", "true")
-    if options:
-        writer = writer.options(**options)
-    writer.save(path)
-
-
-def csv_safe_projection(df: DataFrame) -> DataFrame:
-    """Project away columns CSV cannot carry (arrays/maps/structs),
-    keeping scalars — explicit and loggable, instead of the writer's
-    mid-job AnalysisException."""
-    keep = [
-        f.name
-        for f in df.schema.fields
-        if not isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    return df.select(*keep)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    fmt: str = "parquet",
-    dynamic: bool = True,
-) -> None:
-    """Partitioned-layout write with dynamic partition overwrite.
-
-    ``dynamic=True`` sets the writer's ``partitionOverwriteMode``
-    option for THIS write only (the session conf is never touched, so
-    concurrent writers cannot clobber each other): overwrite replaces
-    exactly the partitions present in ``df`` — the idempotent backfill
-    primitive. ``dynamic=False`` is the classic truncate-and-load.
-
-    Partition columns become directory keys (``col=value/``), so scans
-    filtered on them prune at the FILE LISTING level — zero IO for
-    excluded partitions, the cheapest predicate pushdown there is.
-    Choose low-cardinality keys (date, lang, source); a high-card key
-    explodes small files (the 100 TB killer is listing 10M dirs, not
-    reading them).
-    """
-    (
-        df.write.partitionBy(*partition_cols)
-        .format(fmt)
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
-        .save(path)
-    )
-
-
-def read_partitioned(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a partitioned layout back; partition dirs surface as
-    columns and equality filters on them prune at listing time."""
-    return spark.read.format(fmt).load(path)
 
 
 def write_sharded(
@@ -315,32 +214,3 @@ def swap_in_staged(spark: SparkSession, path: str) -> None:
         fs.rename(old, hpath)  # roll back
         raise IOError(f"could not swap the staged rewrite into {path}")
     fs.delete(old, True)
-
-
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """Raw-asset ingest via Spark's ``binaryFile`` source — the
-    multimodal on-ramp (images/audio/video land as one row per file:
-    path, modificationTime, length, content BINARY).
-
-    This is the 100 TB-sane way to get opaque media into the
-    engine: the scan is distributed, columnar-metadata-only until
-    ``content`` is actually referenced (column pruning drops the
-    bytes for pure-inventory queries), and ``pathGlobFilter`` prunes
-    at the LISTING, before any read. Pair with
-    operators/multimodal.py: ``content`` is exactly the ``data``
-    column its decode/resize/frame-sample mapInPandas stages expect.
-
-    Spark caps per-file size at ``spark.sql.sources.binaryFile
-    .maxLength`` (int max, ~2 GB) — shard bigger assets upstream.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(path)

@@ -133,14 +133,14 @@ def _log_state(spark: SparkSession, table: str) -> dict:
                     tails.append((int(name[2:-5]), st.getPath()))
             records, upto = [], -1
             if ckpt_path is not None:
-                ckpt = _read_json(fs, jvm, ckpt_path)
+                ckpt = _read_json(fs, ckpt_path)
                 records = list(ckpt["versions"])
                 upto = ckpt["upto"]
             n_tail = 0
             for version, path in sorted(tails):
                 if version <= upto:
                     continue  # superseded duplicate (see docstring)
-                records.append(_read_json(fs, jvm, path))
+                records.append(_read_json(fs, path))
                 n_tail += 1
             records.sort(key=lambda r: r["version"])
             return {
@@ -290,7 +290,7 @@ def _claim_token(spark: SparkSession, table: str, version: int) -> str | None:
     fs, _, jvm = _fs(spark, table)
     path = jvm.org.apache.hadoop.fs.Path(_claim_path(table, version))
     try:
-        return _read_json(fs, jvm, path).get("token", "")
+        return _read_json(fs, path).get("token", "")
     except Exception as exc:
         if "FileNotFoundException" in str(exc):
             return None

@@ -93,7 +93,7 @@ def _read_meta(spark: SparkSession, path: str) -> dict | None:
     mpath = jvm.org.apache.hadoop.fs.Path(path, _META_FILE)
     if not fs.exists(mpath):
         return None
-    return read_json(fs, jvm, mpath)
+    return read_json(fs, mpath)
 
 
 def _publish_meta(

@@ -119,7 +119,7 @@ def _live_state(spark: SparkSession, parts_dir: str):
             name = st.getPath().getName()
             if not (name.startswith("gen-") and name.endswith(".json")):
                 continue
-            rec = read_json(fs, jvm, st.getPath())
+            rec = read_json(fs, st.getPath())
             if rec["gen"] > gen:
                 gen, max_batch = rec["gen"], rec["superseded_max_batch"]
     gen_path = f"{parts_dir}/compacted/gen={gen}" if gen >= 0 else None
@@ -231,7 +231,7 @@ def _cleanup_superseded(spark: SparkSession, parts_dir: str) -> None:
             name = st.getPath().getName()
             if not (name.startswith("gen-") and name.endswith(".json")):
                 continue
-            rec = read_json(fs, jvm, st.getPath())
+            rec = read_json(fs, st.getPath())
             gens[rec["gen"]] = rec["superseded_max_batch"]
     if len(gens) < 2:
         return  # grace: the newest generation's inputs are kept one cycle

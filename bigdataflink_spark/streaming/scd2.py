@@ -91,15 +91,9 @@ def merge_scd2_batch(
         old_frontier = None
         if existing is not None:
             # drop-late gate vs the OBSERVED frontier (every state row of
-            # a key carries the same (_obs_us, _obs_seq)); legacy state
-            # without the columns falls back to the change-log max
-            frontier = (
-                _obs("_obs_us", "_obs_seq")
-                if "_obs_us" in existing.columns
-                else obs
-            )
+            # a key carries the same (_obs_us, _obs_seq))
             old_frontier = existing.groupBy(key_col).agg(
-                F.max(frontier).alias("_frontier")
+                F.max(_obs("_obs_us", "_obs_seq")).alias("_frontier")
             )
             existing = existing.drop("_obs_us", "_obs_seq")
             gated = inc.join(F.broadcast(old_frontier), key_col, "left")

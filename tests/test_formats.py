@@ -1,95 +1,42 @@
-"""Format-matrix round-trips: every supported batch format preserves
-the engine's tables bit-for-bit (or documents exactly what it cannot
-carry), and partitioned writes overwrite only the touched partitions."""
+"""Filesystem helpers (sources/formats.py) and the versioned snapshot
+tables built on them (sources/snapshots.py): JSON record reads, sharded
+writes, compaction and its crash recovery, commit logs."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-import pytest
+import json
 
-from bigdataflink_spark.sources.formats import (
-    csv_safe_projection,
-    read_any,
-    read_partitioned,
-    write_any,
-    write_partitioned,
-)
+import pyspark.sql.functions as F
+
 from bigdataflink_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+def test_read_json_joins_byte_chunks_before_decoding(spark, tmp_path):
+    """read_json reads a record in 4 KB byte chunks: a record over 8 KB
+    whose 4-byte characters straddle both chunk boundaries comes back
+    intact, written raw as UTF-8 and through publish_json."""
+    from bigdataflink_spark.sources.formats import hadoop_fs, publish_json, read_json
 
+    body, pos = [], len('{"s": "')
+    for boundary in (4096, 8192):
+        body += ["é" * ((boundary - 2 - pos) // 2), "x" * ((boundary - 2 - pos) % 2), "😀"]
+        pos = boundary + 2
+    record = {"s": "".join(body) + "tail é😀"}
+    raw = json.dumps(record, ensure_ascii=False).encode("utf-8")
+    assert all(raw[b] & 0xC0 == 0x80 for b in (4096, 8192))  # mid-character
 
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "json", "csv"])
-def test_roundtrip_orders(spark, tmp_path, fmt):
-    src = load_table(spark, "orders", SF)
-    path = f"{tmp_path}/orders_{fmt}"
-    write_any(src, path, fmt)
-    back = read_any(spark, path, fmt, schema=src.schema)
-    assert back.schema == src.schema
-    assert _rows(back) == _rows(src)
+    fs, _, jvm = hadoop_fs(spark, str(tmp_path))
+    Path = jvm.org.apache.hadoop.fs.Path
+    out = fs.create(Path(str(tmp_path / "raw.json")), True)
+    out.write(bytearray(raw))
+    out.close()
+    assert read_json(fs, Path(str(tmp_path / "raw.json"))) == record
 
-
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "json"])
-def test_roundtrip_embeddings_arrays(spark, tmp_path, fmt):
-    src = load_table(spark, "embeddings", SF)
-    path = f"{tmp_path}/emb_{fmt}"
-    write_any(src, path, fmt)
-    back = read_any(spark, path, fmt, schema=src.schema)
-    assert _rows(back.select("vec_id", "label")) == _rows(src.select("vec_id", "label"))
-    # array column survives with float precision intact
-    a = dict(back.select("vec_id", "embedding").collect())
-    b = dict(src.select("vec_id", "embedding").collect())
-    assert a == b
-
-
-def test_csv_safe_projection_drops_nested(spark):
-    src = load_table(spark, "embeddings", SF)
-    assert [f.name for f in csv_safe_projection(src).schema.fields] == [
-        "vec_id",
-        "label",
-    ]
-
-
-def test_partitioned_write_prunes_and_dynamic_overwrite(spark, tmp_path):
-    docs = load_table(spark, "documents", SF)
-    path = f"{tmp_path}/docs_by_lang"
-    write_partitioned(docs, path, ["lang"])
-    back = read_partitioned(spark, path)
-    assert back.count() == docs.count()
-
-    # listing-level pruning: the scan for one lang touches only its dir
-    one = back.filter(F.col("lang") == "en")
-    plan = one.queryExecution.executedPlan.toString() if hasattr(one, "queryExecution") else \
-        one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan
-
-    # dynamic overwrite: rewriting ONE lang's slice leaves others alone
-    en_count = one.count()
-    other_count = back.filter(F.col("lang") != "en").count()
-    en_doubled = docs.filter(F.col("lang") == "en").withColumn(
-        "n_chars", F.col("n_chars") + 1
-    )
-    write_partitioned(en_doubled, path, ["lang"])
-    back2 = read_partitioned(spark, path)
-    assert back2.filter(F.col("lang") == "en").count() == en_count
-    assert back2.filter(F.col("lang") != "en").count() == other_count
-    assert (
-        back2.filter((F.col("lang") == "en") & (F.col("n_chars") <= 0)).count() == 0
-    )
-
-
-def test_static_overwrite_truncates(spark, tmp_path):
-    docs = load_table(spark, "documents", SF)
-    path = f"{tmp_path}/docs_static"
-    write_partitioned(docs, path, ["lang"])
-    en_only = docs.filter(F.col("lang") == "en")
-    write_partitioned(en_only, path, ["lang"], dynamic=False)
-    back = read_partitioned(spark, path)
-    assert back.select("lang").distinct().count() == 1
+    published = str(tmp_path / "published.json")
+    assert publish_json(fs, jvm, str(tmp_path / "tmp.json"), published, record)
+    assert read_json(fs, Path(published)) == record
 
 
 def test_write_sharded_sizes_and_global_order(spark, tmp_path):
@@ -138,36 +85,6 @@ def test_compact_dir_reduces_files_and_preserves_rows(spark, tmp_path):
     assert back.agg(F.sum("o_totalprice")).collect()[0][0] == src.agg(
         F.sum("o_totalprice")
     ).collect()[0][0]
-
-
-def test_binary_dir_ingest_and_multimodal_handoff(spark, tmp_path):
-    """binaryFile source: one row per file with raw bytes; glob
-    prunes at listing; content feeds multimodal byte-stats."""
-    from bigdataflink_spark.sources.formats import read_binary_dir
-
-    assets = tmp_path / "assets" / "nested"
-    assets.mkdir(parents=True)
-    payloads = {
-        "a.img": bytes(range(16)) * 4,
-        "b.img": b"\xff\x00" * 10,
-        "skip.txt": b"not media",
-    }
-    for name, data in payloads.items():
-        (assets / name).write_bytes(data)
-
-    df = read_binary_dir(spark, str(tmp_path / "assets"), glob="*.img")
-    rows = {r["path"].split("/")[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.img", "b.img"}
-    assert rows["a.img"]["length"] == 64
-    assert bytes(rows["a.img"]["content"]) == payloads["a.img"]
-
-    # hand off to the multimodal byte-stat expressions: content is the
-    # same BINARY shape operators/multimodal.py consumes
-    stats = df.select(
-        F.length("content").alias("n_bytes"),
-        F.length(F.base64("content")).alias("n_b64"),
-    ).collect()
-    assert {s["n_bytes"] for s in stats} == {64, 20}
 
 
 def test_snapshot_time_travel_and_diff(spark, tmp_path):
@@ -538,7 +455,7 @@ def test_snapshot_log_reader_retries_vanished_record(spark, tmp_path, monkeypatc
     real_read = sn._read_json
     state = {"fired": False}
 
-    def racing_read(fs, jvm, path):
+    def racing_read(fs, path):
         # first open: a "concurrent maintainer" folds the whole tail
         # into a checkpoint (deleting the listed records), then the
         # open fails the way a vanished HDFS file does
@@ -548,7 +465,7 @@ def test_snapshot_log_reader_retries_vanished_record(spark, tmp_path, monkeypatc
             raise IOError(
                 "java.io.FileNotFoundException: " + str(path) + " (race sim)"
             )
-        return real_read(fs, jvm, path)
+        return real_read(fs, path)
 
     monkeypatch.setattr(sn, "_read_json", racing_read)
     got = [(v["version"], v["n_rows"]) for v in sn.list_versions(spark, t)]

@@ -129,30 +129,6 @@ def test_error_side_channel(spark, workdir):
     assert len(errs) == 1 and errs[0].status.startswith("error:")
 
 
-def test_streaming_dedup_within_watermark(spark, workdir):
-    """At-least-once replay (every event delivered twice) collapses to
-    exactly one row per event_id with watermark-bounded engine state."""
-    from bigdataflink_spark.streaming.dedup import streaming_dedup
-
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").limit(200)
-    ev.unionByName(ev).write.mode("overwrite").parquet(f"{workdir}/dedup_in")
-
-    stream = spark.readStream.schema(ev.schema).parquet(f"{workdir}/dedup_in")
-    deduped = streaming_dedup(stream, ["event_id"], "ts", "30 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .option("checkpointLocation", f"{workdir}/dedup_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.table("dedup_sink")
-    assert out.count() == 200
-    assert out.select("event_id").distinct().count() == 200
-
-
 def test_stream_static_enrichment_join(spark, workdir):
     """Stream-static join (SURVEY J1, streaming flavor): a streaming
     events feed enriched against a static dimension; the static side
